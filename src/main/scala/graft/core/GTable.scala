@@ -93,7 +93,8 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     // into per-column dedup branches joined on the group key shuffles the
     // same distinct-pair volume (Expand already map-side-dedups per gid)
     // but pays a SECOND corpus scan — measured 2.6 s → 6.3-11 s on
-    // q_nunique at ×50 (ndv(l_orderkey) ≈ rows/4). See OPTIMIZATION_r13.md.
+    // q_nunique at ×50 (ndv(l_orderkey) ≈ rows/4). See
+    // plans/r13/q_nunique_split_rejected.txt.
     val grouped =
       if (by.isEmpty) df.agg(a.head, a.tail: _*)
       else df.groupBy(by.map(col): _*).agg(a.head, a.tail: _*)
@@ -297,8 +298,8 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     * With `keys = Nil` the merge is RANGE-partitioned on the time value
     * (never a single global window): per-range windows run in parallel and
     * each range's leading rows are back-filled with the latest right row of
-    * preceding ranges via a driver-side prefix over one tiny row per
-    * partition.
+    * preceding ranges — a [[BlockScan]] over one row per range partition,
+    * in the plan, so the action is one query execution.
     */
   def asofJoin(right: GTable, on: String, rOn: String = "",
                keys: Seq[String] = Nil, rkeys: Seq[String] = Nil,
@@ -323,72 +324,39 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     val rType = rRenamed.select(rStruct.as("s")).schema("s").dataType
 
     val lSide = l0.select(keys.map(col) ++ Seq(col(on).as("_gq_t"),
-      lStruct.as("_gq_l"), lit(null).cast(rType).as("_gq_r"), lit(1).as("_gq_side")): _*)
+      lStruct.as("_gq_l"), lit(null).cast(rType).as("_gq_r")): _*)
     val rSide = rRenamed.select(keys.map(col) ++ Seq(col(ron).as("_gq_t"),
-      lit(null).cast(lType).as("_gq_l"), rStruct.as("_gq_r"), lit(0).as("_gq_side")): _*)
+      lit(null).cast(lType).as("_gq_l"), rStruct.as("_gq_r")): _*)
 
-    val matched =
-      if (keys.nonEmpty) {
-        val w = Window.partitionBy(keys.map(col): _*)
-          .orderBy(col("_gq_t").asc, col("_gq_side").asc, col("_gq_r").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        lSide.unionByName(rSide)
-          .withColumn("_gq_m", last(col("_gq_r"), ignoreNulls = true).over(w))
-          .filter(col("_gq_side") === 1)
-      } else {
-        // keyless case: a single partitionBy() window would serialize the
-        // whole table through one task. Instead, range-partition the union
-        // by time, run the last-right window per range partition (parallel),
-        // and fill each partition's leading unmatched rows with the latest
-        // right row of all PRECEDING partitions — a tiny per-partition
-        // aggregate prefix-combined on the driver (same block technique as
-        // GTable.cumulative / runsDistributed).
-        val spark = df.sparkSession
-        val nParts = spark.sessionState.conf.numShufflePartitions
-        val ranged = lSide.unionByName(rSide)
-          .repartitionByRange(nParts, col("_gq_t"), col("_gq_side"), col("_gq_r"))
-          .withColumn("_gq_pid", org.apache.spark.sql.functions.spark_partition_id())
-          .persist() // pin partition ids across the two jobs below
-        val wp = Window.partitionBy(col("_gq_pid"))
-          .orderBy(col("_gq_t").asc, col("_gq_side").asc, col("_gq_r").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // latest right row per partition: numPartitions rows on the driver
-        val perPid = ranged.filter(col("_gq_side") === 0)
-          .groupBy(col("_gq_pid"))
-          .agg(max_by(col("_gq_r"), struct(col("_gq_t"), col("_gq_r"))).as("_gq_last"))
-          .collect().map(r => (r.getInt(0), r.get(1))).sortBy(_._1)
-        // prefix(p) = latest right among partitions < p
-        var lastSeen: Any = null
-        val prefixPairs = (0 until nParts).map { p =>
-          val pair = (p, lastSeen)
-          perPid.find(_._1 == p).foreach(x => lastSeen = x._2)
-          pair
-        }
-        val prefixRows = prefixPairs.map { case (p, v) =>
-          org.apache.spark.sql.Row(p, v) }
-        val prefixSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("_gq_pid",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("_gq_prev", rType)))
-        val prefixDf = spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(prefixRows).asJava,
-          prefixSchema)
-        // Eagerly materialize while the cache still holds the partition ids
-        // the collected prefix was computed from: localCheckpoint truncates
-        // the lineage, so a later recompute can never resample the range
-        // partitioning into different ids. The intermediate cache is then
-        // released instead of leaking until LRU eviction (the service is
-        // long-lived).
-        val out = ranged
-          .withColumn("_gq_m0", last(col("_gq_r"), ignoreNulls = true).over(wp))
-          .join(broadcast(prefixDf), Seq("_gq_pid"))
-          .withColumn("_gq_m", coalesce(col("_gq_m0"), col("_gq_prev")))
-          .filter(col("_gq_side") === 1)
-          .drop("_gq_pid", "_gq_m0", "_gq_prev")
-          .localCheckpoint(true)
-        ranged.unpersist()
-        out
+    // a row's side is whether it carries the left struct (never null on a
+    // left row). Deriving it, not tagging it, keeps every consumer of the
+    // union on the same columns, so the keyless branch's two consumers of
+    // its range exchange prune it alike and share one exchange.
+    val isLeft = col("_gq_l").isNotNull
+    // right rows sort before left rows at equal times: r.on == l.on matches
+    val order = Seq(col("_gq_t").asc, isLeft.asc, col("_gq_r").asc)
+    def lastRight(part: Column*) = last(col("_gq_r"), ignoreNulls = true).over(
+      Window.partitionBy(part: _*).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val unioned = lSide.unionByName(rSide)
+    val withM =
+      if (keys.nonEmpty) unioned.withColumn("_gq_m", lastRight(keys.map(col): _*))
+      else {
+        // keyless: one unpartitioned window would serialize the table.
+        // Range-partition by time (the partition id becomes DATA), run the
+        // window per range, and fill each range's leading unmatched rows
+        // with a last-non-null scan of the latest right row per range.
+        val ranged = unioned
+          .repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions,
+            order: _*)
+          .withColumn("_gq_pid", spark_partition_id())
+        BlockScan.exclusive(ranged, "_gq_pid",
+            max_by(when(!isLeft, col("_gq_r")),
+              when(!isLeft, struct(col("_gq_t"), col("_gq_r")))),
+            last(_, ignoreNulls = true), "_gq_prev")
+          .withColumn("_gq_m", coalesce(lastRight(col("_gq_pid")), col("_gq_prev")))
       }
+    val matched = withM.filter(isLeft)
     val inTol = tolerance match {
       case None => col("_gq_m").isNotNull
       case Some(p) => col("_gq_m").isNotNull && p(col("_gq_t"), col("_gq_m").getField(ron))
@@ -501,22 +469,13 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
         when(col(Natural.rid) === 0, 1L)
           .otherwise(when(changes.reduce(_ || _), 1L).otherwise(0L)))
       .select(df.columns.map(col) :+ col("_gq_chg") :+ col("_gq_blk"): _*)
-    // per-block flag counts → prefix sum over the TINY totals frame (one
-    // row per blockSize rows, the same shape `cumulative` uses). Keeping
-    // the prefix inside the plan instead of a driver collect means ONE
-    // query execution instead of two — a collect is its own action, and
-    // exchange reuse never spans actions, so the old shape re-ran the
-    // whole input subtree once for the collect and again for the result
-    // (guide §2.4 / §5: the driver should do no data work).
-    val blockTotals = flagged.groupBy("_gq_blk").agg(sum("_gq_chg").as("_n"))
-    val wPrevBlk = Window.orderBy(col("_gq_blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsetsDf = blockTotals
-      .withColumn("_gq_off", coalesce(sum(col("_n")).over(wPrevBlk), lit(0L)))
-      .select("_gq_blk", "_gq_off")
+    // per-block flag counts → exclusive prefix sum, kept in the plan: a
+    // collect is its own action, and exchange reuse never spans actions,
+    // so a driver-side prefix would re-run the whole input subtree
     val wBlk = Window.partitionBy(col("_gq_blk")).orderBy(col(Natural.rid))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRun = flagged.join(broadcast(offsetsDf), Seq("_gq_blk"))
+    val withRun = BlockScan.exclusive(flagged, "_gq_blk", sum("_gq_chg"), sum,
+        "_gq_off", zero = Some(lit(0L)))
       .withColumn("_gq_run", col("_gq_off") + sum(col("_gq_chg")).over(wBlk) - 1)
     GTable(GTable.aggRuns(withRun, by, aggs, counts), denseRid = false)
   }
@@ -525,30 +484,24 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     * cumsum/cummax/cummin with empty `by`) — no single-partition window.
     *
     * Dense-rid block decomposition: per-block running aggregate (window
-    * partitioned by block — parallel) combined with the prefix-combine of
-    * all previous blocks' totals (tiny driver-side scan, broadcast back).
-    * `agg`/`combine` must form the same monoid (sum/+, max/greatest,
-    * min/least, count/+).
+    * partitioned by block — parallel) combined with the exclusive prefix of
+    * all previous blocks' totals ([[BlockScan]], in the plan). `agg` must be
+    * its own combine over block totals and `combine` the matching binary
+    * form: sum/+, max/greatest, min/least. A null on either side (no
+    * earlier block, or only nulls so far in this one) yields the other,
+    * as the running window does.
     */
   def cumulative(valueCol: Column, alias: String,
                  agg: Column => Column,
                  combine: (Column, Column) => Column,
                  blockSize: Long = 1L << 20): GTable = {
     val withBlk = df.withColumn("_gq_blk", (rid / blockSize).cast("long"))
-    // per-block totals: distributed aggregation, one row per blockSize rows
-    val totals = withBlk.groupBy("_gq_blk").agg(agg(valueCol).as("_t"))
-    // prefix(b) = combine of totals of blocks < b — the window is global but
-    // runs over the TINY totals frame (n/blockSize rows), not the data
-    val wPrev = Window.orderBy(col("_gq_blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixes = totals.withColumn("_gq_pref", agg(col("_t")).over(wPrev))
-      .select("_gq_blk", "_gq_pref")
     val wBlk = Window.partitionBy(col("_gq_blk")).orderBy(rid)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = withBlk.join(broadcast(prefixes), Seq("_gq_blk"))
-      .withColumn(alias,
-        when(col("_gq_pref").isNull, agg(valueCol).over(wBlk))
-          .otherwise(combine(col("_gq_pref"), agg(valueCol).over(wBlk))))
+    val (pref, within) = (col("_gq_pref"), col(alias))
+    val out = BlockScan.exclusive(withBlk, "_gq_blk", agg(valueCol), agg, "_gq_pref")
+      .withColumn(alias, agg(valueCol).over(wBlk))
+      .withColumn(alias, coalesce(combine(pref, within), within, pref))
       .drop("_gq_blk", "_gq_pref")
     copy(df = out)
   }
@@ -949,29 +902,20 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     * the CURRENT table, so dense-position consumers (runsDistributed, the
     * rid range-filter slice fast path) apply to filtered tables too.
     *
-    * Same block prefix-sum machinery as [[cumulative]]/[[runsDistributed]]:
-    * rows are bucketed by `oldRid / blockSize` (each bucket holds ≤ blockSize
-    * surviving rows), per-bucket survivor counts are prefix-summed by a
-    * window over the bounded totals frame (one row per bucket —
-    * rows/blockSize rows, never data) and broadcast back; the within-bucket
-    * offset is a window partitioned by bucket — every stage parallel, no
-    * global sort, no driver action (the prefix stays in the plan so a
-    * consumer pays ONE query execution, not a collect plus a recompute).
-    * Row order is unchanged: the new rid is a monotone re-numbering of the
-    * old one.
+    * Rows are bucketed by `oldRid / blockSize` (each bucket holds ≤
+    * blockSize surviving rows); the new rid is the bucket's [[BlockScan]]
+    * prefix of survivor counts plus the row's offset within its bucket —
+    * every stage parallel, no global sort, no driver action. Row order is
+    * unchanged: the new rid is a monotone re-numbering of the old one.
     */
   def densify(blockSize: Long = 1L << 20): GTable = {
     if (hasDensePositions) return this
     require(Natural.hasRowId(df),
       s"densify requires the natural row id ${Natural.rid} — load with Tables.loadOrdered")
     val withBlk = df.withColumn("_gq_blk", (rid / blockSize).cast("long"))
-    val wPrevBlk = Window.orderBy(col("_gq_blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsetsDf = withBlk.groupBy("_gq_blk").agg(GTable.cnt.as("_n"))
-      .withColumn("_gq_off", coalesce(sum(col("_n")).over(wPrevBlk), lit(0L)))
-      .select("_gq_blk", "_gq_off")
     val wBlk = Window.partitionBy(col("_gq_blk")).orderBy(col(Natural.rid))
-    val out = withBlk.join(broadcast(offsetsDf), Seq("_gq_blk"))
+    val out = BlockScan.exclusive(withBlk, "_gq_blk", GTable.cnt, sum, "_gq_off",
+        zero = Some(lit(0L)))
       .withColumn(Natural.rid,
         col("_gq_off") + row_number().over(wBlk).cast("long") - 1L)
       .drop("_gq_blk", "_gq_off")

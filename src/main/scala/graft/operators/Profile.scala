@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
+import graft.core.BlockScan
 
 /** One-pass column profiler — the data-quality census a pipeline runs
   * before (and after) every transform stage: per column, the non-null
@@ -172,8 +173,8 @@ object Profile {
     * double column per requested percentage (`p50`, `p95` for the census).
     *
     * Shape: range-repartition the histogram by value; per-partition count
-    * totals prefix-sum through a window over the bounded one-row-per-
-    * partition frame; each distinct value then knows its global rank
+    * totals prefix-sum through a [[BlockScan]] over the bounded one-row-
+    * per-partition frame; each distinct value then knows its global rank
     * interval [lo, lo+cnt), and the value covering rank floor/ceil of
     * p·(n−1) reduces out of one aggregation. Every stage is parallel —
     * nothing holds more than one partition's rows, unlike the exact
@@ -194,21 +195,12 @@ object Profile {
     // arithmetic is invariant to the range boundaries anyway
     val ranged = h.repartitionByRange(col(c).asc)
       .withColumn("_gq_pid", spark_partition_id())
-    val wPid = Window.orderBy(col("_gq_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val perPid = ranged.groupBy("_gq_pid").agg(sum(col("_gq_cnt")).as("_gq_pn"))
-    // n rides the SAME bounded frame (window over all rows) so one
-    // broadcast serves both the offsets and the total
-    val wAll = Window.orderBy(col("_gq_pid"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offs = perPid
-      .withColumn("_gq_poff", coalesce(sum(col("_gq_pn")).over(wPid), lit(0L)))
-      .withColumn("_gq_n", sum(col("_gq_pn")).over(wAll))
+    // n rides the SAME prefix frame, so one broadcast serves both the
+    // offsets and the total
     val wIn = Window.partitionBy(col("_gq_pid")).orderBy(col(c))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = ranged
-      .join(broadcast(offs.select("_gq_pid", "_gq_poff", "_gq_n")),
-        Seq("_gq_pid"))
+    val cum = BlockScan.exclusive(ranged, "_gq_pid", sum(col("_gq_cnt")), sum,
+        "_gq_poff", zero = Some(lit(0L)), grandTotal = Some("_gq_n"))
       .withColumn("_gq_lo", col("_gq_poff") +
         coalesce(sum(col("_gq_cnt")).over(wIn), lit(0L)))
     def covers(idx: Column) =

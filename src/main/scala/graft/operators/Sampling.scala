@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{GTable, Natural}
+import graft.core.{BlockScan, GTable, Natural}
 
 /** Deterministic sampling / splitting / packing for training-data pipelines.
   *
@@ -153,10 +153,10 @@ object Sampling {
     * Scale shape: no global sort and no single-partition window. The md5
     * key's first `blockChars` hex digits split the stream into 16^blockChars
     * lexicographic blocks (uniform by construction); the running total is
-    * the block-prefix decomposition of [[graft.core.GTable.cumulative]] —
-    * per-block window sums (parallel across blocks) + a window over the
-    * tiny per-block totals frame, broadcast back. One hash exchange on the
-    * block key; the filter then prunes whole blocks past the budget. */
+    * a [[graft.core.BlockScan]] — per-block window sums (parallel across
+    * blocks) + the exclusive prefix of the per-block totals, broadcast
+    * back. One hash exchange on the block key; blocks whose prefix is
+    * already past the budget are pruned before the join. */
   def takeTokenBudget(df: DataFrame, idCol: String, tokenCount: Column,
                       budget: Long, seed: String = "0",
                       blockChars: Int = 4): DataFrame = {
@@ -176,20 +176,14 @@ object Sampling {
       .withColumn("shuffle_key", shuffleKey(col(idCol), seed))
       .withColumn("_gq_tok", tok)
       .withColumn("_gq_blk", substring(col("shuffle_key"), 1, blockChars))
-    val totals = keyed.groupBy("_gq_blk").agg(sum(col("_gq_tok")).as("_t"))
-    val wPrev = Window.orderBy(col("_gq_blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixes = totals
-      .withColumn("_gq_pref", coalesce(sum(col("_t")).over(wPrev), lit(0L)))
-      // blocks whose whole prefix is already past the budget can never
-      // contribute a row — dropping them here prunes the join (and with it
-      // the data-side scan work) to the head blocks only
-      .filter(col("_gq_pref") < budget)
-      .select("_gq_blk", "_gq_pref")
     val wBlk = Window.partitionBy(col("_gq_blk"))
       .orderBy(col("shuffle_key"), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    keyed.join(broadcast(prefixes), Seq("_gq_blk"))
+    // blocks whose whole prefix is already past the budget can never
+    // contribute a row — dropping them prunes the join (and with it the
+    // data-side window work) to the head blocks only
+    BlockScan.exclusive(keyed, "_gq_blk", sum(col("_gq_tok")), sum, "_gq_pref",
+        zero = Some(lit(0L)), keep = _ < budget)
       .withColumn("tokens_before",
         col("_gq_pref") + sum(col("_gq_tok")).over(wBlk) - col("_gq_tok"))
       .filter(col("tokens_before") < budget)
@@ -201,9 +195,9 @@ object Sampling {
     * offset — bin = floor(prefix / budget), the chunk-at-offset packing used
     * by pretraining pipelines (a document straddling a bin boundary is split
     * at tokenization time; exact greedy first-fit is inherently sequential).
-    * The prefix sum uses GTable.cumulative's block technique (per-block
-    * totals + a window over the tiny totals frame) — no global
-    * single-partition window, so the pass stays parallel at any scale.
+    * The prefix sum is GTable.cumulative, a [[graft.core.BlockScan]] — no
+    * global single-partition window, so the pass stays parallel at any
+    * scale.
     * Returns one row per bin: doc count, token total, first/last id. */
   def packBins(t: GTable, idCol: String, tokenCount: Column,
                budget: Long): DataFrame = {

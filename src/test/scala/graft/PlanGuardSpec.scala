@@ -14,7 +14,7 @@ class PlanGuardSpec extends SparkSpec {
 
   // reference-form queries that are DOCUMENTED as serial (their distributed
   // twins carry the scale path and are checked against the same oracle)
-  private val documentedSerial = Set("q_runs", "q_runs_split")
+  private val documentedSerial = Set("q_runs_split")
 
   /** An unpartitioned window is tolerable only when its input was already
     * reduced below row scale: an aggregation (block totals, group counts)
@@ -133,9 +133,10 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("the guard itself catches the documented-serial window shape") {
-    // q_runs IS the serial reference form — the guard must see it, or the
-    // green assertion above proves nothing
-    val df = Queries.all.find(_.name == "q_runs").get.run(spark, sf)
+    // runsSerial IS the serial reference form — the guard must see it, or
+    // the green assertion above proves nothing
+    val events = graft.core.GTable(graft.core.Tables.loadOrdered(spark, sf, "events"))
+    val df = events.runsSerial(Seq("event_type")).result
     val caught = df.queryExecution.sparkPlan.collect {
       case w: WindowExec if w.partitionSpec.isEmpty && !reduced(w.child) => w
     }
