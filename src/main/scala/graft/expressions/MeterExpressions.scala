@@ -16,11 +16,9 @@ import org.apache.spark.util.LongAccumulator
   * is true, i.e. the row is its bucket's designated representative —
   * tallies the bucket into `bucketAcc`. Accumulator updates merge back to
   * the driver as tasks finish, so the counts are readable synchronously
-  * after any action on the plan, with NO separate metering job (the old
-  * shape ran a groupBy().collect() whose lineage re-executed the whole
-  * input subtree once more per cap — guide §5: the driver does no data
-  * work, and §2.4: no second pass for a statistic the flowing rows
-  * already witness).
+  * after any action on the plan, with NO separate metering job: the
+  * driver does no data work, and no second pass computes a statistic the
+  * flowing rows already witness.
   *
   * Semantics of the counts: per-execution-exact on success; task retries
   * or speculative duplicates can overcount (the standard accumulator

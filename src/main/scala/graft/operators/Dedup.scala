@@ -148,19 +148,20 @@ object Dedup {
     * 0` disables the cap for oracle/verification runs. */
   val DefaultMaxBucket = 1000
 
-  /** One cap activation: `buckets` hot (band, bucket) groups dropped,
-    * covering `rows` banded rows. Silent recall loss is the cap's failure
-    * mode (the ×1200 skew soak returned 0 pairs with every bucket hot) —
-    * these counts make it OBSERVABLE: queryable per-op via
-    * [[lastCapDrops]] (ops probes, SoakProbe) and per-request via
-    * [[collectCapDrops]] (GraphQL response `extensions.cap_drops`). */
+  /** One cap activation: `buckets` over-full bucket-key groups dropped,
+    * covering `rows` banded rows, as counted by the action that ran the
+    * capped plan. Silent recall loss is the cap's failure mode (the ×1200
+    * skew soak returned 0 pairs with every bucket hot) — these counts
+    * make it OBSERVABLE: queryable per-op via [[lastCapDrops]] (ops
+    * probes, SoakProbe) and per-request via [[collectCapDrops]] (GraphQL
+    * response `extensions.cap_drops`). */
   final case class CapDrop(op: String, buckets: Long, rows: Long)
 
   private val lastDropsMap =
     new scala.collection.concurrent.TrieMap[String, () => CapDrop]
   /** Most recent cap activation per operator (empty counts = cap ran and
     * dropped nothing). Counts registered by the in-plan metered caps
-    * ([[capBucketsByMetered]]) read LIVE accumulator values — final once
+    * ([[capBucketsBy]]) read LIVE accumulator values — final once
     * the consumer's action completes (call after the action, exactly like
     * the tests and the GraphQL executor's eager resolution do). */
   def lastCapDrops: Map[String, CapDrop] =
@@ -188,58 +189,15 @@ object Dedup {
     Option(capListener.get).foreach(_ += f)
   }
 
-  /** Drop bucket-key groups holding more than `maxBucket` docs.
-    * The hot-bucket list is tiny by construction (≤ rows/maxBucket keys) —
-    * it is materialized to the driver, which (a) yields the dropped
-    * bucket/row counts for free ([[CapDrop]] — round-7 verdict: log lines
-    * are not metrics), (b) lets the no-hot-buckets common case return the
-    * input UNTOUCHED (no anti-join in the plan at all), and (c) costs the
-    * same banded-stream aggregation the broadcast build ran anyway.
-    * Generic over the key columns so every banded self-join in the engine
-    * (MinHash/SimHash bands here, hyperplane buckets in
-    * [[graft.operators.Similarity.lshCosinePairs]]) shares the one cap
-    * shape. */
-  private[operators] def capBucketsBy(banded: DataFrame, keys: Seq[String],
-                                      maxBucket: Int, op: String): DataFrame =
-    if (maxBucket <= 0) banded
-    else {
-      val hot = banded.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_n"))
-        .filter(col("_n") > maxBucket)
-        .collect()
-      val dropped = CapDrop(op, hot.length, hot.map(_.getLong(keys.length)).sum)
-      recordDrop(dropped)
-      if (hot.isEmpty) banded
-      else {
-        log.info(s"$op: occupancy cap maxBucket=$maxBucket dropped " +
-          s"${dropped.buckets} buckets / ${dropped.rows} banded rows from " +
-          "candidate generation (run exact dedup first; maxBucket=0 disables)")
-        val spark = banded.sparkSession
-        val keySchema = org.apache.spark.sql.types.StructType(
-          keys.map(k => banded.schema(k)))
-        val hotDf = spark.createDataFrame(
-          java.util.Arrays.asList(hot.map(r =>
-            org.apache.spark.sql.Row.fromSeq(keys.indices.map(r.get))): _*),
-          keySchema)
-        banded.join(broadcast(hotDf), keys, "left_anti")
-      }
-    }
-
-  private def capBuckets(banded: DataFrame, maxBucket: Int,
-                         op: String): DataFrame =
-    capBucketsBy(banded, Seq("band", "bucket"), maxBucket, op)
-
-  /** In-plan occupancy cap: same survivors as [[capBucketsBy]] (rows in
-    * bucket-key groups of ≤ `maxBucket` rows) with NO separate metering
-    * action — [[capBucketsBy]]'s hot-list `collect()` re-executes the
-    * input subtree once more per cap, which for expensive inputs (the
-    * semantic path's per-row centroid fold) doubles the corpus work. The
-    * occupancy rides a count window over the bucket keys, and the
-    * window's hash exchange on those keys is the SAME exchange the
-    * downstream self-join needs, so the plan stays at one corpus shuffle.
-    * Drops are metered in-plan ([[graft.expressions.CapMeter]]
-    * accumulators, registered lazily so [[lastCapDrops]] reads final
-    * values after the consumer's action).
+  /** Occupancy cap for every banded self-join: keeps the rows of
+    * bucket-key groups holding ≤ `maxBucket` rows. The occupancy rides a
+    * count window over the bucket keys, and the window's hash exchange on
+    * those keys is the SAME exchange a shuffled self-join needs, so the
+    * cap adds no action and, at scale, no shuffle (when AQE broadcasts a
+    * small join side instead, that shuffle is the cap's cost). Drops are
+    * metered in-plan ([[graft.expressions.CapMeter]] accumulators,
+    * registered lazily so [[lastCapDrops]] reads final values after the
+    * consumer's action).
     *
     * Returns TWO copies for the self-join, each metered with its OWN
     * accumulator pair; the recorded CapDrop is the per-side MAX. Max, not
@@ -249,8 +207,11 @@ object Dedup {
     * build (the build side ALWAYS materializes first), the executed
     * side's count survives — metering one side only provably loses the
     * all-dropped case, the exact silent-recall-loss shape the meter
-    * exists for. Single-consumer callers use only `_1`. */
-  private[operators] def capBucketsByMetered(
+    * exists for. Single-consumer callers use only `_1`.
+    *
+    * A null key forms one group like any other and is capped with it; an
+    * equi-join never matches a null key, so no join result changes. */
+  private[operators] def capBucketsBy(
       banded: DataFrame, keys: Seq[String], maxBucket: Int,
       op: String): (DataFrame, DataFrame) =
     if (maxBucket <= 0) (banded, banded)
@@ -276,6 +237,8 @@ object Dedup {
         math.max(bA.value, bB.value), math.max(rA.value, rB.value)))
       (a, b)
     }
+
+  private val BandKeys = Seq("band", "bucket")
 
   /** Diagnostic: the per-(band, bucket) occupancy histogram of the MinHash
     * banding [[minhashPairs]] self-joins on — the distribution `maxBucket`
@@ -324,12 +287,12 @@ object Dedup {
       // band join and dedup on bare (band, bucket, id) rows — signatures
       // (64 longs each) are re-joined only for the surviving candidates, so
       // the wide payload never rides the candidate-generation shuffle
-      val banded = capBuckets(sig.select(col("id"),
+      val (cappedA, cappedB) = capBucketsBy(sig.select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
           xxhash64(array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ",")))))
         .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-        maxBucket, "minhashPairs")
-      val cand = banded.as("a").join(banded.as("b"),
+        BandKeys, maxBucket, "minhashPairs")
+      val cand = cappedA.as("a").join(cappedB.as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
         .select(col("a.id").as("id1"), col("b.id").as("id2"))
@@ -392,12 +355,12 @@ object Dedup {
     // and must not run three times
     val sig = md5Signatures(df, textCol, idCol, n, k).persist()
     try {
-      val banded = capBuckets(sig.select(col("id"),
+      val (cappedA, cappedB) = capBucketsBy(sig.select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
           array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ","))))
         .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-        maxBucket, "minhashPairsMd5")
-      val cand = banded.as("a").join(banded.as("b"),
+        BandKeys, maxBucket, "minhashPairsMd5")
+      val cand = cappedA.as("a").join(cappedB.as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
         .select(col("a.id").as("id1"), col("b.id").as("id2"))
@@ -442,12 +405,12 @@ object Dedup {
       .select(col("id"), packed.as("sh"))
       .persist()
     try {
-      val banded = capBuckets(fp.select(col("id"), col("sh"),
+      val (cappedA, cappedB) = capBucketsBy(fp.select(col("id"), col("sh"),
         posexplode(array((0 until 4).map(b =>
           shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
         .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-        maxBucket, "simhashPairsMd5")
-      val cand = banded.as("a").join(banded.as("b"),
+        BandKeys, maxBucket, "simhashPairsMd5")
+      val cand = cappedA.as("a").join(cappedB.as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
         .select(col("a.id").as("id1"), col("b.id").as("id2"),
@@ -494,12 +457,12 @@ object Dedup {
                    maxHamming: Int = 3,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val sig = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
-    val banded = capBuckets(sig.select(col("id"), col("sh"),
+    val (cappedA, cappedB) = capBucketsBy(sig.select(col("id"), col("sh"),
       posexplode(array((0 until 4).map(b =>
         shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-      maxBucket, "simhashPairs")
-    val cand = banded.as("a").join(banded.as("b"),
+      BandKeys, maxBucket, "simhashPairs")
+    val cand = cappedA.as("a").join(cappedB.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
@@ -896,9 +859,9 @@ object Dedup {
         else spark.read.schema(index.bandedSchema)
           .parquet(s"${index.path}/banded")
       // hot-bucket exclusion off the build-time occupancy sidecar — the
-      // histogram is a property of the index, so no per-probe groupBy over
-      // the banded stream; the hot list is tiny by construction (broadcast
-      // anti-join, same shape as capBucketsBy)
+      // histogram is a property of the index, so no per-probe count over
+      // the banded stream; the hot list is tiny by construction (≤
+      // rows/maxBucket keys), so it is collected and broadcast-anti-joined
       val cb =
         if (maxBucket <= 0) corpusBanded
         else {

@@ -1227,10 +1227,9 @@ object Similarity {
     val assigned = withAssignedCid(
       corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
       col("v"), cents, "cid")
-    // in-plan metered cap: the count window's hash exchange on cid is the
-    // self-join's exchange (one corpus shuffle, no hot-list action whose
-    // lineage re-runs the centroid fold); meter rides side "a" only
-    val (cappedA, cappedB) = Dedup.capBucketsByMetered(
+    // the cap's count window shares the self-join's hash exchange on cid
+    // (one corpus shuffle; the centroid fold runs once)
+    val (cappedA, cappedB) = Dedup.capBucketsBy(
       assigned, Seq("cid"), maxCell, "semanticPairs")
     cappedA.as("a").join(cappedB.as("b"),
         col("a.cid") === col("b.cid") && col("a.id") < col("b.id"))
@@ -1276,11 +1275,11 @@ object Similarity {
     // distinct pairs, exactly like minhashPairs re-joins signatures
     // post-dedup, so the candidate shuffle never carries the embedding
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val banded = Dedup.capBucketsBy(
+    val (cappedA, cappedB) = Dedup.capBucketsBy(
       df.select(col(idCol).as("id"),
         explode(array(buckets: _*)).as("_bucket")),
       Seq("_bucket"), maxBucket, "lshCosinePairs")
-    banded.as("a").join(banded.as("b"),
+    cappedA.as("a").join(cappedB.as("b"),
         col("a._bucket") === col("b._bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .dropDuplicates("id1", "id2")
@@ -1349,8 +1348,9 @@ object Similarity {
     * side). Candidate volume is Σ_buckets |left_b|·|right_b| ≈
     * tables·|left|·|right|/2^planes — the planes knob trades recall for
     * join fan-in exactly as in [[lshTopK]], and the right side's bucket
-    * occupancy is capped ([[Dedup.capBucketsBy]], metered as op
-    * "knnJoinLsh") so adversarial boilerplate mass cannot go quadratic.
+    * occupancy is capped in-plan ([[Dedup.capBucketsBy]], whose count
+    * window shares the bucket-join exchange; metered as op "knnJoinLsh")
+    * so adversarial boilerplate mass cannot go quadratic.
     *
     * Pairs are SCORED INSIDE the bucket-join stage (vectors + per-row
     * norms ride the bucket shuffle — (|L|+|R|)·tables vector rows,
@@ -1382,7 +1382,7 @@ object Similarity {
         right.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv")),
         "_cv", "_cn")
         .withColumn("_bucket", explode(array(cBuckets: _*))),
-      Seq("_bucket"), maxBucket, "knnJoinLsh")
+      Seq("_bucket"), maxBucket, "knnJoinLsh")._1
     val qBase = withNormCol(
       left.select(col(idCol).as("query_id"), col(vecCol).as("_qv")),
       "_qv", "_qn")

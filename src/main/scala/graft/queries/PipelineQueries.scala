@@ -572,9 +572,9 @@ object PipelineQueries {
 
   /** LSH-bucketed embedding near-dup pairs (linear bucketing, intra-bucket
     * verify): fully adjudicated — buckets, the default bucket-occupancy cap
-    * (hot-bucket exclusion, mirroring capBucketsBy), pairing and exact
-    * cosine verify all recomputed by the oracle, so the cap itself is
-    * oracle-checked at any scale. */
+    * (Dedup.capBucketsBy: drop buckets over maxBucket rows), pairing and
+    * exact cosine verify all recomputed by the oracle, so the cap itself
+    * is oracle-checked at any scale. */
   val q_dedup_cosine_lsh = Q(
     "q_dedup_cosine_lsh",
     (s, dir) => {

@@ -1,16 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.core.{GTable, Natural}
@@ -346,22 +343,8 @@ class BlockScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // ─── execution budget ───
 
-  /** SQL executions launched while `body` runs — construction included, so
-    * an eager driver collect or checkpoint at plan-build time counts. */
-  private def executions(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = n.incrementAndGet()
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.sql.graft.ListenerBus.drain(spark)
-    spark.listenerManager.register(listener)
-    try {
-      body
-      org.apache.spark.sql.graft.ListenerBus.drain(spark)
-      n.get
-    } finally spark.listenerManager.unregister(listener)
-  }
+  private def executions(body: => Unit): Int =
+    org.apache.spark.sql.graft.Executions.count(spark)(body)
 
   test("each block-scanned operator's action is exactly one SQL execution") {
     val rows = (0 until 30).map { i =>

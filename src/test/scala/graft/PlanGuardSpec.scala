@@ -88,6 +88,9 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("knnJoin plan shapes: brute broadcasts ONLY the hinted corpus; LSH/IVF joins shuffle, never broadcast a table side") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
       BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     val embs = graft.core.Tables.load(spark, sf, "embeddings")
@@ -106,9 +109,8 @@ class PlanGuardSpec extends SparkSpec {
         "brute join must broadcast the corpus side (hinted)")
       // LSH / IVF: big×big — candidate generation and vector re-joins must
       // plan as shuffle joins; any broadcast join here means a table side
-      // would ship to every executor at scale. (capBucketsBy's hot-list
-      // anti-join broadcast only appears when hot buckets exist — none on
-      // this corpus.)
+      // would ship to every executor at scale. The occupancy cap stays in
+      // the plan (a count window), so it plans no broadcast either.
       val lsh = graft.operators.Similarity.knnJoinLsh(left, embs,
         "vec_id", "embedding", 3, planes = 4, dim = 64)
         .queryExecution.sparkPlan
@@ -129,6 +131,39 @@ class PlanGuardSpec extends SparkSpec {
       assert(ivf.collect { case j: SortMergeJoinExec => j
         case j: ShuffledHashJoinExec => j }.nonEmpty,
         "IVF join lost its shuffle-join candidate generation")
+      // banded self-joins: the cap's count window partitions by the bucket
+      // keys, so it rides the ONE shuffle the self-join needs — each side
+      // reuses it, and no broadcast appears (AQE off: the reuse is decided
+      // at planning time, so executedPlan shows it)
+      val docs = graft.core.Tables.load(spark, sf, "documents")
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        Seq(
+          ("simhashPairs", Set("band", "bucket"),
+            graft.operators.Dedup.simhashPairs(docs, "text", "doc_id")),
+          ("lshCosinePairs", Set("_bucket"),
+            graft.operators.Similarity.lshCosinePairs(embs, "vec_id",
+              "embedding", 0.2, planes = 4, dim = 64))
+        ).foreach { case (op, keys, df) =>
+          val plan = df.queryExecution.executedPlan
+          val bcast = plan.collect {
+            case b: BroadcastHashJoinExec => b
+            case b: BroadcastNestedLoopJoinExec => b }
+          assert(bcast.isEmpty, s"$op plans a broadcast join: $bcast")
+          val onKeys = plan.collect {
+            case e: ShuffleExchangeExec if (e.outputPartitioning match {
+              case h: HashPartitioning =>
+                h.expressions.flatMap(_.references.map(_.name)).toSet == keys
+              case _ => false
+            }) => e }
+          assert(onKeys.size == 1,
+            s"$op must plan exactly one (reused) shuffle on $keys:\n$plan")
+          assert(plan.collect { case r: ReusedExchangeExec => r.child }
+              .contains(onKeys.head),
+            s"$op's second self-join side must reuse the bucket shuffle:\n$plan")
+        }
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
