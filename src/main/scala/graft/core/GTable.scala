@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+import graft.expressions.PartitionFunctions
 
 /** The engine's table abstraction: a thin, immutable wrapper over a lazy
   * `DataFrame` whose methods mirror the reference's `Dataset` interface
@@ -539,13 +540,13 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     *
     * Strategy: range-repartition on (keys, order) so each range holds a
     * contiguous slice of every key's sorted run; compute in-range window
-    * ranks (parallel across ranges); merge with driver-side per-(key,range)
-    * prefix stats (rows before, distinct order values before) broadcast
-    * back. Order values tied ACROSS a range boundary are detected via the
-    * carried boundary value: their rank is pulled back by the carried tie
-    * count and dense rank drops the double-counted boundary value. Equal
-    * (keys ++ order) tuples are contiguous under range partitioning, so
-    * only boundary-value ties need the adjustment.
+    * ranks (parallel across ranges); add each (key, range)'s exclusive
+    * prefix — rows and distinct order values in the key's earlier ranges —
+    * and the key's row total from one [[BlockScan]] over the ranked rows.
+    * Equal (keys ++ order) tuples land in one range, so a tie never spans
+    * a range boundary and the prefixes need no tie adjustment. The whole
+    * ranking is one lazy plan: the ranked rows and the totals read ONE
+    * (reused) range exchange, so they see the same range bounds.
     *
     * `desc(i)` flips the i-th order column. Outputs are 0-based like the
     * reference's ranking block; percentRank/ntile derive from the merged
@@ -557,118 +558,31 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
                denseRank: Option[String] = None,
                percentRank: Option[String] = None,
                ntile: Option[(Int, String)] = None): GTable = {
-    val spark = df.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val dirs = orderCols.indices.map(i => desc.lift(i).getOrElse(false))
-    val sortCols = orderCols.zip(dirs).map { case (c, d) => if (d) c.desc else c.asc }
-    val keyCols = partKeys.map(col)
-    // materialize order values as plain columns once: the equality struct
-    // and the sort keys must agree
+    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
+    // materialize order values as plain columns once: the range bounds and
+    // the in-range windows must sort on the same values
     val ordNames = orderCols.indices.map(i => s"_gq_o$i")
-    val ranged = df
-      .withColumns(ordNames.zip(orderCols).toMap)
-      .repartitionByRange(nParts,
-        (keyCols ++ ordNames.zip(dirs).map { case (n, d) =>
-          if (d) col(n).desc else col(n).asc }): _*)
-      .withColumn("_gq_pid", spark_partition_id())
-    val wp = Window.partitionBy((col("_gq_pid") +: keyCols): _*)
-      .orderBy(ordNames.zip(dirs).map { case (n, d) =>
-        if (d) col(n).desc else col(n).asc }: _*)
-    val ordCols = ordNames.map(col)
-    val ordTuple = struct(ordCols: _*)
-    // row_number is only needed when a row-numbered output was requested;
-    // rank/dense_rank ride the same in-partition sort either way
-    val needRn = rowNumber.isDefined || ntile.isDefined
-    val withRanks0 = ranged
+    val sorted = ordNames.zipWithIndex.map { case (n, i) =>
+      if (desc.lift(i).getOrElse(false)) col(n).desc else col(n).asc }
+    val keyCols = partKeys.map(col)
+    val ordered = df.withColumns(ordNames.zip(orderCols).toMap)
+    // the range id pins every column: the totals' narrow aggregation and the
+    // ranked rows then read ONE range exchange, i.e. one bounds sample
+    val ranged = ordered.repartitionByRange(nParts, (keyCols ++ sorted): _*)
+      .withColumn("_gq_pid", PartitionFunctions.pinnedPartitionId(ordered))
+    val wp = Window.partitionBy((col("_gq_pid") +: keyCols): _*).orderBy(sorted: _*)
+    // unrequested windows are pruned from the plan
+    val ranked = ranged
+      .withColumn("_gq_wrn", row_number().over(wp))
       .withColumn("_gq_wrk", org.apache.spark.sql.functions.rank().over(wp))
       .withColumn("_gq_wdr", dense_rank().over(wp))
-    // persist AFTER the in-range windows: the stats aggregation and the
-    // final merge both reuse the ranked cache instead of recomputing
-    val withRanks =
-      (if (needRn) withRanks0.withColumn("_gq_wrn", row_number().over(wp))
-       else withRanks0).persist()
-    // per-(range, key) stats in ONE aggregation pass (tiny output: ranges ×
-    // keys rows on the driver). Within a range partition the in-order window
-    // ranks make the boundary stats algebraic: distinct order values
-    // nd = max(dense_rank); rows tied on the LAST value
-    // eqLast = n − max(rank) + 1; first/last order value = arg-min/max by
-    // rank. (The earlier form paid a full per-distinct-value aggregation
-    // plus a join for eqLast — an entire extra pass over the data.)
-    val statRows = withRanks
-      .groupBy(col("_gq_pid") +: keyCols: _*)
-      .agg(
-        GTable.cnt.as("_n"),
-        max(col("_gq_wdr")).cast("long").as("_nd"),
-        min_by(ordTuple, col("_gq_wrk")).as("_firstOrd"),
-        max_by(ordTuple, col("_gq_wrk")).as("_lastOrd"),
-        (GTable.cnt - max(col("_gq_wrk")) + 1L).as("_eqLast"))
-      .collect()
-    val keyIdx = partKeys.indices
-    final case class RangeStat(pid: Int, key: Seq[Any], n: Long, nd: Long,
-                               firstOrd: Any, lastOrd: Any, eqLast: Long)
-    val sts = statRows.map { r =>
-      RangeStat(r.getAs[Int]("_gq_pid"), keyIdx.map(i => r.get(1 + i)).toSeq,
-        r.getAs[Long]("_n"), r.getAs[Long]("_nd"),
-        r.getAs[Any]("_firstOrd"), r.getAs[Any]("_lastOrd"),
-        r.getAs[Long]("_eqLast"))
-    }
-    val byKey = sts.groupBy(_.key)
-    // fold each key's ranges in order: prefix rows/distincts + carried
-    // boundary order value and its accumulated tie count
-    val merged = byKey.values.flatMap { ss =>
-      var prefixRows = 0L; var prefixDist = 0L
-      var carriedOrd: Any = null; var carriedCount = 0L
-      ss.sortBy(_.pid).map { s =>
-        val row = (s.pid, s.key, prefixRows, prefixDist, carriedOrd, carriedCount)
-        val overlap = carriedOrd != null && s.firstOrd == carriedOrd
-        prefixRows += s.n
-        prefixDist += s.nd - (if (overlap) 1L else 0L)
-        carriedCount = if (carriedOrd != null && s.lastOrd == carriedOrd)
-          carriedCount + s.eqLast else s.eqLast
-        carriedOrd = s.lastOrd
-        row
-      }
-    }.toSeq
-    val keyTotals = byKey.map { case (k, ss) =>
-      var t = 0L; var co: Any = null
-      ss.sortBy(_.pid).foreach { s =>
-        t += s.nd - (if (co != null && s.firstOrd == co) 1L else 0L)
-        co = s.lastOrd
-      }
-      (k, ss.map(_.n).sum, t)
-    }
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val ordSchema = withRanks.select(ordTuple.as("_o")).schema("_o").dataType
-    val prefixSchema = StructType(
-      Seq(StructField("_gq_pid", IntegerType, nullable = false)) ++
-      partKeys.map(k => df.schema(k)) ++ Seq(
-        StructField("_gq_pr", LongType, nullable = false),
-        StructField("_gq_pd", LongType, nullable = false),
-        StructField("_gq_co", ordSchema, nullable = true),
-        StructField("_gq_cc", LongType, nullable = false)))
-    val prefixDf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(
-        merged.map { case (pid, key, pr, pd, co, cc) =>
-          org.apache.spark.sql.Row.fromSeq(Seq(pid) ++ key ++ Seq(pr, pd, co, cc)) }).asJava,
-      prefixSchema)
-    val totalsSchema = StructType(partKeys.map(k => df.schema(k)) ++ Seq(
-      StructField("_gq_nk", LongType, nullable = false),
-      StructField("_gq_ndk", LongType, nullable = false)))
-    val totalsDf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(
-        keyTotals.map { case (k, n, nd) =>
-          org.apache.spark.sql.Row.fromSeq(k ++ Seq(n, nd)) }.toSeq).asJava,
-      totalsSchema)
-    val joined = withRanks
-      .join(broadcast(prefixDf), Seq("_gq_pid") ++ partKeys)
-      .join(broadcast(totalsDf), partKeys)
-    val tied = col("_gq_co").isNotNull && ordTuple === col("_gq_co")
+    // per (key, range): rows, and distinct order values = max(dense_rank)
+    var out = BlockScan.exclusive(ranked, "_gq_pid", GTable.cnt, sum, "_gq_pr",
+      zero = Some(lit(0L)), grandTotal = Some("_gq_nk"), by = partKeys,
+      also = Seq(max(col("_gq_wdr")) -> "_gq_pd"))
     val rn0 = col("_gq_pr") + col("_gq_wrn") - 1
-    val rk0 = col("_gq_pr") + col("_gq_wrk") -
-      when(tied, col("_gq_cc")).otherwise(lit(0L)) - 1
-    val dr0 = col("_gq_pd") + col("_gq_wdr") -
-      when(tied, lit(1L)).otherwise(lit(0L)) - 1
-    var out = joined
+    val rk0 = col("_gq_pr") + col("_gq_wrk") - 1
+    val dr0 = col("_gq_pd") + col("_gq_wdr") - 1
     rowNumber.foreach(a => out = out.withColumn(a, rn0.cast("int")))
     rank.foreach(a => out = out.withColumn(a, rk0.cast("int")))
     denseRank.foreach(a => out = out.withColumn(a, dr0.cast("int")))
@@ -684,14 +598,8 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
         when(rn0 < bigSpan, (rn0 / (q + 1)).cast("int"))
           .otherwise((r + ((rn0 - bigSpan) / greatest(q, lit(1L)))).cast("int")))
     }
-    // Eager localCheckpoint while the ranked cache still holds the partition
-    // ids the collected stats were computed from (a recompute could resample
-    // the range partitioning); then release the cache instead of leaking it.
-    val result = out.drop((Seq("_gq_pid", "_gq_wrn", "_gq_wrk", "_gq_wdr",
-      "_gq_pr", "_gq_pd", "_gq_co", "_gq_cc", "_gq_nk", "_gq_ndk") ++
-      ordNames): _*).localCheckpoint(true)
-    withRanks.unpersist()
-    GTable(result, denseRid = false)
+    GTable(out.drop((Seq("_gq_pid", "_gq_wrn", "_gq_wrk", "_gq_wdr",
+      "_gq_pr", "_gq_pd", "_gq_nk") ++ ordNames): _*), denseRid = false)
   }
 
   /** Estimated input rows from the optimized plan: CBO row count when
@@ -708,9 +616,9 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
   /** Ranking block with AUTOMATIC strategy choice. A plain
     * `PARTITION BY keys` window collapses to #distinct-keys tasks — at
     * cluster scale a 3-key ranking runs on 3 cores no matter how many
-    * executors exist — while [[rankings]] range-partitions and merges
-    * boundary stats, paying fixed cost for parallelism that only wins on
-    * big inputs. This entry point picks per-plan: [[rankings]] when the
+    * executors exist — while [[rankings]] range-partitions and adds
+    * per-range prefix totals, paying fixed cost for parallelism that only
+    * wins on big inputs. This entry point picks per-plan: [[rankings]] when the
     * estimated row count reaches the flip threshold, the plain window
     * otherwise, so callers need not know both.
     *

@@ -1679,12 +1679,13 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
     // query is identical either way.
     val rankOps = Set("rowNumber", "rank", "denseRank", "percentRank", "ntile")
     val opArgs = f.args.filter { case (k, _) => k != "over" && k != "by" }
-    // above the flip threshold rankingsAuto executes EAGERLY (stats collect
-    // + localCheckpoint at plan-construction time) — only worth it when the
-    // selection actually materializes rows. A schema/type/toSql-only
-    // selection stays on the lazy window form (same output schema), so
-    // reflection queries never trigger a full ranking job (mirrors the
-    // resolveTable persist policy's consumer test).
+    // above the flip threshold rankingsAuto may run jobs at plan-construction
+    // time (the exact row count of the ambiguous band, the counts
+    // strategy's tuple probe) — only worth it when the selection actually
+    // materializes rows. A schema/type/toSql-only selection stays on the
+    // lazy window form (same output schema), so reflection queries never
+    // trigger a ranking job (mirrors the resolveTable persist policy's
+    // consumer test).
     val materializes = f.sels.exists(s =>
       !Set("type", "schema", "toSql").contains(s.name))
     val pureRanking = materializes && over.nonEmpty && byKeys.nonEmpty &&

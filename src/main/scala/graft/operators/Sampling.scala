@@ -113,15 +113,15 @@ object Sampling {
     * Scale shape: strata are usually FEW (languages, sources), so a plain
     * `row_number over (partition by stratum)` would ship every stratum to
     * one task — this uses [[GTable.rankings]] instead (range-partitioned
-    * per-key ranks + driver prefix merge), which keeps all shuffle
-    * partitions busy regardless of stratum cardinality. */
+    * per-key ranks + a BlockScan prefix over the ranges), which keeps all
+    * shuffle partitions busy regardless of stratum cardinality. A null
+    * stratum is sampled like any other. */
   def reservoirK(t: GTable, strata: Seq[String], key: Column, k: Int,
                  seed: String = "0"): DataFrame = {
     require(k > 0, "reservoirK needs k > 0")
     // Rank a NARROW (strata, key) projection: the wide payload (document
-    // text, embeddings) must not ride the range shuffle, the ranked cache,
-    // or the checkpoint inside rankings — at corpus scale those were the
-    // dominant cost AND the run-to-run variance (wide-row cache pressure).
+    // text, embeddings) must not ride the range shuffle, which the ranked
+    // rows and the per-range totals both read.
     // The winner set is ≤ k rows per stratum — tiny by construction — so
     // the full rows are re-selected with a BROADCAST semi-join: the wide
     // data is scanned once and never shuffled at all. Rows tied on a

@@ -40,8 +40,9 @@ object WindowQueries {
               ORDER BY l_quantity DESC, l_orderkey ASC, l_linenumber ASC)
             ORDER BY l_returnflag, rn0"""))
 
-  /** Distributed rankings (range-partitioned per-key ranks + driver prefix
-    * merge — GTable.rankings): parallelism = #ranges instead of #keys. At
+  /** Distributed rankings (range-partitioned per-key ranks + a BlockScan
+    * prefix over the ranges — GTable.rankings): parallelism = #ranges
+    * instead of #keys. At
     * sf0.1 the plain 3-task window is faster (fixed costs dominate); at
     * cluster scale the window's 3-task ceiling loses. Same oracle as
     * q_window_rank. */

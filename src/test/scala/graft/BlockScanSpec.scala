@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.core.{GTable, Natural}
+import graft.functions.GWindows
 import graft.operators.{Profile, Sampling}
 
 /** Differential gate for the natural-order operators built on the
@@ -18,8 +19,10 @@ import graft.operators.{Profile, Sampling}
   * reference that stays in the code, over random tables and at block sizes
   * that put boundaries everywhere interesting — 1, 2, 3, 7, n−1, n, n+1
   * and 2^16 — with filters that empty whole blocks, nulls/NaN/−0.0 in the
-  * run keys, and empty inputs. The sf0.01 oracle cannot do this: its
-  * tables never put a block boundary anywhere adversarial.
+  * run keys, and empty inputs. The distributed rankings, whose blocks are
+  * range partitions, are checked against the plain window at 1, 2, 3 and
+  * 7 ranges. The sf0.01 oracle cannot do this: its tables never put a
+  * block boundary anywhere adversarial.
   *
   * Seeds are fixed so the suite is deterministic; a failure reports the
   * generated table. Every action is also pinned to ONE SQL execution — a
@@ -284,6 +287,104 @@ class BlockScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(ranges.size == 1 && reused.size == 1, s"range exchanges: $ranges; reused: $reused")
   }
 
+  // ─── distributed rankings ───
+
+  private val rankSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false), StructField("k", StringType),
+    StructField("o1", DoubleType), StructField("o2", IntegerType)))
+
+  /** Mostly one value (1.5), repeated far beyond a range's size, plus null,
+    * NaN, −0.0 and 0.0. */
+  private val o1Gen: Gen[java.lang.Double] = Gen.frequency(
+    12 -> Gen.const(java.lang.Double.valueOf(1.5)), 1 -> Gen.const(null),
+    1 -> Gen.oneOf(dbl(Double.NaN, -0.0, 0.0)),
+    2 -> Gen.choose(-4, 4).map(i => java.lang.Double.valueOf(i / 2.0)))
+
+  /** Partition keys with nulls, or a single key; a desc flag per order
+    * column. */
+  private val genRanked: Gen[(Seq[Row], Seq[Boolean])] = for {
+    n <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 80))
+    keyPool <- Gen.oneOf(sPool, Seq("a"))
+    ks <- Gen.listOfN(n, Gen.oneOf(keyPool))
+    o1 <- Gen.listOfN(n, o1Gen)
+    o2 <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(null: Integer),
+      4 -> Gen.choose(0, 3).map(Int.box)))
+    desc <- Gen.listOfN(3, Gen.oneOf(true, false))
+  } yield ((0 until n).map(i => Row(i.toLong, ks(i), o1(i), o2(i))), desc)
+
+  /** (partition keys, order columns): tie-heavy, multi-column, unique
+    * (the id breaks every tie), and one global partition. */
+  private val rankForms = Seq(Seq("k") -> Seq("o1"), Seq("k") -> Seq("o1", "o2"),
+    Seq("k") -> Seq("o2", "o1", "id"), Seq.empty[String] -> Seq("o1", "o2"))
+
+  private val rankCols = Seq("_tag", "id", "k", "o1", "o2", "rn", "rk", "dr", "pr", "nt")
+
+  /** rk, dr and pr by row; rn and nt as a multiset per (keys, order
+    * tuple), which ties leave free to permute among the tied rows. */
+  private def rankViews(rows: Array[Row]): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    val byRow = exact(rows.map(r => Row(r.getInt(0), r.getLong(1), r.get(6), r.get(7), r.get(8))))
+      .sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Long]))
+    val tuples = sqlEq(rows.map { r =>
+      val (keys, ord) = rankForms(r.getInt(0))
+      Row.fromSeq(r.get(0) +: (keys ++ ord).map(c => r.get(rankCols.indexOf(c))) ++:
+        Seq(r.get(5), r.get(9)))
+    }).sortBy(_.toString)
+    (byRow, tuples)
+  }
+
+  private def checkRankings(rows: Seq[Row], desc: Seq[Boolean]): Unit = {
+    val t = spark.createDataFrame(rows.asJava, rankSchema)
+    def forms(f: (Seq[String], Seq[String], Seq[Boolean]) => DataFrame) =
+      rankForms.zipWithIndex.map { case ((keys, ord), tag) =>
+        f(keys, ord, desc.take(ord.size)).withColumn("_tag", lit(tag))
+      }.reduce(_ unionByName _).select(rankCols.map(col): _*).collect()
+    val exp = rankViews(forms { (keys, ord, d) =>
+      val w = GWindows.spec(keys.map(col), ord.zip(d).map { case (o, dsc) =>
+        if (dsc) col(o).desc else col(o).asc })
+      t.select(col("*"), GWindows.rowNumber0(w).cast("int").as("rn"),
+        GWindows.rank0(w).cast("int").as("rk"),
+        GWindows.denseRank0(w).cast("int").as("dr"),
+        GWindows.percentRank(w).as("pr"), GWindows.ntile0(3, w).as("nt"))
+    })
+    for (parts <- Seq(1, 2, 3, 7)) withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+      val got = rankViews(forms { (keys, ord, d) =>
+        GTable(t).rankings(keys, ord.map(col), d, rowNumber = Some("rn"),
+          rank = Some("rk"), denseRank = Some("dr"), percentRank = Some("pr"),
+          ntile = Some((3, "nt"))).result
+      })
+      same(s"rankings by row n=${rows.size} desc=$desc parts=$parts", exp._1, got._1)
+      same(s"rankings per tuple n=${rows.size} desc=$desc parts=$parts", exp._2, got._2)
+    }
+  }
+
+  test("rankings ≡ the plain window at 1/2/3/7 ranges: ties, nulls, NaN, ±0.0, desc") {
+    checkRankings(Nil, Seq(false, false, false))
+    // one order value 200 times over two keys, one of them null
+    checkRankings((0 until 200).map(i => Row(i.toLong, if (i % 3 == 0) null else "a",
+      java.lang.Double.valueOf(1.5), Int.box(i % 2))), Seq(true, false, true))
+    holds(Prop.forAllNoShrink(genRanked) { case (rows, desc) =>
+      checkRankings(rows, desc); true
+    }, n = 6)
+  }
+
+  test("rankings: the totals and the ranked rows share ONE range exchange") {
+    // the in-range ranks and the per-range totals must describe the same
+    // row placement: the totals must read the exchange the rows read
+    val t = GTable(spark.range(60).select(col("id"), (col("id") % 3).as("k"),
+      (col("id") % 7).as("o")))
+    val r = t.rankings(Seq("k"), Seq(col("o")), rowNumber = Some("rn"),
+      rank = Some("rk")).result
+    r.collect()
+    val plan = r.queryExecution.executedPlan
+    val ranges = collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    val reused = collect(plan) {
+      case e: ReusedExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.size == 1 && reused.size == 1, s"range exchanges: $ranges; reused: $reused")
+  }
+
   // ─── token budget ───
 
   private def checkTokenBudget(rows: Seq[Row], drops: Seq[(Int, Int)]): Unit = {
@@ -367,6 +468,17 @@ class BlockScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           .select(col("id").as("xid"), (col("v") - 1).as("t")))
         l.asofJoin(r, on = "t").result.collect()
       })
+    assert(budget.forall(_._2 == 1), s"SQL executions per action: $budget")
+  }
+
+  test("rankings and reservoirK: construction plus one action is one SQL execution") {
+    val t = GTable(spark.range(60).select(col("id"),
+      when(col("id") % 4 === 0, lit(null)).otherwise(col("id") % 3).as("k")))
+    val budget = Map(
+      "rankings" -> executions(t.rankings(Seq("k"), Seq(col("id")),
+        rowNumber = Some("rn"), percentRank = Some("pr")).result.collect()),
+      "reservoirK" -> executions(
+        Sampling.reservoirK(t, Seq("k"), col("id"), 5).collect()))
     assert(budget.forall(_._2 == 1), s"SQL executions per action: $budget")
   }
 }

@@ -337,6 +337,27 @@ class GraphQLSpec extends SparkSpec {
     assert(n > 0 && n <= 150)
   }
 
+  test("window ranks over a partition column with nulls: the same rows above the flip") {
+    // every fourth event lands in the null partition; rowNumber keeps the
+    // ranking off the counts strategy, so the flip reaches GTable.rankings
+    val q =
+      """{ events { project(columns: [{alias: "grp", ifelse: [
+           {eq: [{mod: [{name: "event_id"}, {value: 4}]}, {value: 0}]},
+           {value: null}, {name: "event_type"}]}]) {
+           window(over: ["grp"], by: ["ts"], rank: "rk", rowNumber: "rn") {
+           order(by: ["event_id"]) { count
+           columns { event_id { values } grp { values } rk { values } rn { values } }
+           } } } } }"""
+    def data(r: String) = r.replaceAll(""""timing_ms":\{[^}]*\}""", "")
+    val plain = data(service.execute(q))
+    assert(""""grp":\{"values":\[[^\]]*null""".r.findFirstIn(plain).nonEmpty, plain.take(300))
+    assert(plain.contains(""""count":1000"""), plain.take(300))
+    spark.conf.set("spark.graft.rankings.flipRows", "1")
+    val flipped = try data(service.execute(q))
+      finally spark.conf.unset("spark.graft.rankings.flipRows")
+    assert(flipped == plain)
+  }
+
   test("toSql emits runnable SQL along the operator fold") {
     val r = service.execute(
       """{ lineitem { filter(l_returnflag: {eq: "A"}, l_quantity: {ge: 30}) {

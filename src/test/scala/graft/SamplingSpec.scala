@@ -148,6 +148,23 @@ class SamplingSpec extends SparkSpec {
     assert(a == b, "reservoir must not depend on partitioning")
   }
 
+  test("reservoirK keeps a null stratum: min(k, |stratum|) rows") {
+    val k = 7
+    // a null stratum smaller than k, and one larger
+    val d = docs.withColumn("lang", when(col("doc_id") % 100 === 0, lit(null))
+      .otherwise(col("lang")))
+      .withColumn("src", when(col("doc_id") % 3 === 0, lit(null)).otherwise(lit("web")))
+    for (strata <- Seq("lang", "src")) {
+      val r = Sampling.reservoirK(GTable(d), Seq(strata), col("doc_id"), k, "1")
+      def sizes(f: org.apache.spark.sql.DataFrame) = f.groupBy(strata).count().collect()
+        .map(x => Option(x.getString(0)) -> x.getLong(1)).toMap
+      val base = sizes(d)
+      assert(base.contains(None))
+      assert(sizes(r) == base.map { case (s, n) => s -> math.min(k.toLong, n) },
+        s"$strata: ${sizes(r)} from $base")
+    }
+  }
+
   test("token-budget head: coverage, cut point, and decomposition invariance") {
     val tok = size(TextAnalysis.tokens(col("text")))
     val budget = 300L
