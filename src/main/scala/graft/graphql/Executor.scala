@@ -361,8 +361,8 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
       val alias = f.outName
       val keep = if (Natural.hasRowId(t.df))
         Seq(outCol.as(alias), col(Natural.rid)) else Seq(outCol.as(alias))
-      resolveOneColumn(GTable(t.df.select(keep: _*), t.sortedBy, t.denseRid),
-        f.copy(name = alias, alias = None))
+      columnsOn(GTable(t.df.select(keep: _*), t.sortedBy, t.denseRid),
+        Seq(f.copy(name = alias, alias = None))).head
     case "row" => resolveRow(t, f, longArg(f, "index").getOrElse(0L))
     case "project" => resolveProject(t, f, sql)
     case "cast" =>
@@ -1817,21 +1817,70 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
     * per-type Column surface (reference models.py:47-255): generic values/
     * distinct/first/last/dropNull/fillNull/mode/min/max/quantile, numeric
     * sum/mean/std/var, boolean any/all, array unnest/length, struct
-    * names/types, plus type/count/countDistinct. Aggregate leaves batch
-    * into ONE df.agg pass per column (no per-leaf jobs). */
+    * names/types, plus type/count/countDistinct. */
   private def resolveColumns(t: GTable, f: GField): JsonStream = {
     val wanted = f.sels
-    val pruned = t.select(wanted.map(_.name): _*)
-    // §4 persist policy one level down: every column child's value leaf
-    // collects through its own action, so a columns{} selection with N
-    // children used to execute the parent plan N times (measured: the
-    // served 9-column profile at 9× its engine cost). >1 child → persist
-    // the shared pruned frame for the duration of the per-column
-    // collects, released before the response streams out.
-    val persisted = wanted.size > 1
-    if (persisted) pruned.df.persist()
-    try JsonStream.obj(wanted.map(cf => cf.outName -> resolveOneColumn(pruned, cf)))
-    finally if (persisted) { pruned.df.unpersist(); () }
+    val served = columnsOn(t.select(wanted.map(_.name): _*), wanted)
+    JsonStream.obj(wanted.map(_.outName).zip(served))
+  }
+
+  /** The Spark actions behind one column selection over `frame`. Leaves
+    * register here while the selection is planned, and each registration
+    * returns the slot its leaf reads after [[run]]:
+    *  - value-class leaves (values/dropNull/fillNull/length) of EVERY
+    *    column are projections of ONE select over the ordered frame,
+    *    collected once under the serve cap;
+    *  - aggregate leaves of every column are columns of ONE agg row;
+    *  - distinct and unnest run their own action each ([[extra]]).
+    * [[actions]] counts them, so the caller persists the frame only when
+    * the selection still executes it more than once. */
+  private final class ColumnActions(frame: GTable) {
+    private val valueCols, aggCols =
+      scala.collection.mutable.ArrayBuffer.empty[Column]
+    private var extras = 0
+    private var capLeaf = "" // the column the serve-cap error names
+    private var rows: Array[org.apache.spark.sql.Row] = Array.empty
+    private var aggRow: org.apache.spark.sql.Row = null
+
+    def value(c: Column, column: String): Int = {
+      if (valueCols.isEmpty) capLeaf = column
+      valueCols += c; valueCols.size - 1
+    }
+    def agg(c: Column): Int = { aggCols += c; aggCols.size - 1 }
+    def extra(): Unit = extras += 1
+    def actions: Int = Seq(valueCols, aggCols).count(_.nonEmpty) + extras
+
+    def run(): Unit = {
+      if (valueCols.nonEmpty) {
+        // rows in current order: explicit sort wins over the natural row id
+        val ordered =
+          if (frame.isSorted) frame.df
+          else if (Natural.hasRowId(frame.df)) frame.df.orderBy(col(Natural.rid))
+          else frame.df
+        rows = cappedCollect(ordered.select(valueCols.toSeq: _*), capLeaf)
+      }
+      if (aggCols.nonEmpty)
+        aggRow = frame.df.agg(aggCols.head, aggCols.tail.toSeq: _*).collect()(0)
+    }
+    /** A value slot's column in row order — a view, not a copy. */
+    def values(slot: Int): Iterable[Any] = rows.view.map(_.get(slot))
+    def aggregate(slot: Int): Any = aggRow.get(slot)
+  }
+
+  /** Serve `fields` (column selections) over `frame`: plan every leaf onto
+    * one [[ColumnActions]], persist the frame only if that takes more than
+    * one action (otherwise the parent plan would execute once per action),
+    * run, then render. The persist is released before the response streams
+    * out: value arrays are collected here and only stringified lazily. */
+  private def columnsOn(frame: GTable, fields: Seq[GField]): Seq[JsonStream] = {
+    val acts = new ColumnActions(frame)
+    val planned = fields.map(cf => planColumn(frame, cf, acts))
+    val persisted = acts.actions > 1
+    if (persisted) frame.df.persist()
+    try {
+      acts.run()
+      planned.map(render => render())
+    } finally if (persisted) { frame.df.unpersist(); () }
   }
 
   /** Driver-materialization guard for value-returning column leaves
@@ -1883,9 +1932,13 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
     }
   }
 
-  private def resolveOneColumn(pruned: GTable, cf: GField): JsonStream = {
+  /** Plan one column's leaves onto `acts`; the returned thunk renders the
+    * column object once [[ColumnActions.run]] has filled the slots (it runs
+    * the column's distinct/unnest actions itself). */
+  private def planColumn(frame: GTable, cf: GField,
+                         acts: ColumnActions): () => JsonStream = {
     val c = col(cf.name)
-    val dt = pruned.df.schema.find(_.name == cf.name).map(_.dataType)
+    val dt = frame.df.schema.find(_.name == cf.name).map(_.dataType)
     val isString = dt.contains(StringType)
     // enforce fragment type conditions where the parent type varies by
     // column: `... on FloatColumn { sum }` must not run against a string
@@ -1893,17 +1946,14 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
       case Some(d) => cf.sels.filter(_.appliesTo(columnTypeName(d)))
       case None => cf.sels
     }
-    val collectLeaves = Set("values", "distinct", "type", "dropNull",
-      "fillNull", "unnest", "length", "names", "types")
-    val aggLeafs = leafs.filterNot(l => collectLeaves.contains(l.name))
-    val hasRid = Natural.hasRowId(pruned.df)
+    val hasRid = Natural.hasRowId(frame.df)
     def qList(l: GField): Seq[Double] = l.arg("q").toSeq.flatMap {
       case GFloat(x) => Seq(x)
       case GInt(x) => Seq(x.toDouble)
       case GList(items) => items.collect { case GFloat(x) => x; case GInt(x) => x.toDouble }
       case _ => Nil
     } match { case Nil => Seq(0.5); case qs => qs }
-    val aggCols = aggLeafs.map(l => (l.name match {
+    def aggColumn(l: GField): Column = l.name match {
       case "count" => count(c)
       case "countDistinct" => countDistinct(c)
       case "nunique" =>
@@ -1932,68 +1982,72 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
       case "last" =>
         if (hasRid) max_by(c, col(Natural.rid)) else last(c)
       case other => throw new IllegalArgumentException(s"unknown column leaf '$other'")
-    }).as(l.outName))
-    val aggRow = if (aggCols.nonEmpty)
-      Some(pruned.df.agg(aggCols.head, aggCols.tail: _*).collect()(0)) else None
-    /** rows in current order: explicit sort wins over the natural row id. */
-    def orderedRows(extra: Column => Column = identity): Seq[Any] = {
-      val ordered =
-        if (pruned.isSorted) pruned.df
-        else if (hasRid) pruned.df.orderBy(col(Natural.rid))
-        else pruned.df
-      cappedCollect(ordered.select(extra(c).as("_v")), cf.name)
-        .map(_.get(0)).toSeq
     }
-    val parts = leafs.map[(String, JsonStream)] { l =>
+    val parts = leafs.map[(String, () => JsonStream)] { l =>
       l.outName -> (l.name match {
-        case "type" => Json.quote(dt.map(_.simpleString).getOrElse("unknown"))
-        // value-array leaves: rows are collected HERE (inside the request
-        // persist scope, under the serve cap) but stringified lazily —
-        // JsonStream.lazyArr renders one element per fragment pull, so a
-        // cap-admitted-but-huge column streams with O(chunk) memory
-        case "values" => JsonStream.lazyArr(orderedRows())
+        case "type" =>
+          val s = Json.quote(dt.map(_.simpleString).getOrElse("unknown"))
+          () => s
+        // value-array leaves: rows are collected by ColumnActions.run
+        // (inside the persist scope, under the serve cap) but stringified
+        // lazily — JsonStream.lazyArr renders one element per fragment
+        // pull, so a cap-admitted-but-huge column streams with O(chunk)
+        // memory
+        case "values" =>
+          val slot = acts.value(c, cf.name)
+          () => JsonStream.lazyArr(acts.values(slot))
         case "dropNull" =>
           // non-null values in order (reference models.py:122-125)
-          JsonStream.lazyArr(orderedRows().filter(_ != null))
+          val slot = acts.value(c, cf.name)
+          () => JsonStream.lazyArr(acts.values(slot).filter(_ != null))
         case "fillNull" =>
           val v = l.arg("value").map(Exprs.scalaOf)
             .getOrElse(throw new IllegalArgumentException("fillNull needs value:"))
-          JsonStream.lazyArr(orderedRows(x => coalesce(x, lit(v))))
+          val slot = acts.value(coalesce(c, lit(v)), cf.name)
+          () => JsonStream.lazyArr(acts.values(slot))
         case "length" =>
           // per-row array lengths (reference ArrayColumn.length)
-          JsonStream.lazyArr(orderedRows(x => size(x)))
+          val slot = acts.value(size(c), cf.name)
+          () => JsonStream.lazyArr(acts.values(slot))
         case "unnest" =>
           // flattened elements served as a nested column object
           // (reference ArrayColumn.unnest, models.py:227-233)
-          val exploded = GTable(Natural.strip(pruned.df)
-            .select(explode(c).as(cf.name)))
-          resolveOneColumn(exploded, cf.copy(sels = l.sels))
+          acts.extra()
+          () => columnsOn(GTable(Natural.strip(frame.df)
+            .select(explode(c).as(cf.name))), Seq(cf.copy(sels = l.sels))).head
         case "names" => dt match {
           case Some(s: org.apache.spark.sql.types.StructType) =>
-            Json.write(s.fieldNames.toSeq)
+            val out = Json.write(s.fieldNames.toSeq)
+            () => out
           case _ => throw new IllegalArgumentException(s"names: ${cf.name} is not a struct")
         }
         case "types" => dt match {
           case Some(s: org.apache.spark.sql.types.StructType) =>
-            Json.write(s.fields.map(_.dataType.simpleString).toSeq)
+            val out = Json.write(s.fields.map(_.dataType.simpleString).toSeq)
+            () => out
           case _ => throw new IllegalArgumentException(s"types: ${cf.name} is not a struct")
         }
         case "distinct" =>
           // the reference's Set: distinct values + counts pair
           // (models.py:86-98) — one value_counts aggregation
-          val vc = cappedCollect(
-            Natural.strip(pruned.df).groupBy(c).agg(count(lit(1)).as("n"))
-              .orderBy(c), s"${cf.name}.distinct")
-          JsonStream.obj(l.sels.map[(String, JsonStream)](s => s.outName -> (s.name match {
-            case "values" => JsonStream.lazyArr(vc.map(_.get(0)).toSeq)
-            case "counts" => JsonStream.lazyArr(vc.map(_.getLong(1)).toSeq)
-            case "length" => JsonStream.Frag(vc.length.toString)
-            case other => throw new IllegalArgumentException(s"unknown Set field '$other'")
-          })))
-        case _ => Json.write(aggRow.get.getAs[Any](l.outName))
+          acts.extra()
+          () => {
+            val vc = cappedCollect(
+              Natural.strip(frame.df).groupBy(c).agg(count(lit(1)).as("n"))
+                .orderBy(c), s"${cf.name}.distinct")
+            JsonStream.obj(l.sels.map[(String, JsonStream)](s => s.outName -> (s.name match {
+              case "values" => JsonStream.lazyArr(vc.view.map(_.get(0)))
+              case "counts" => JsonStream.lazyArr(vc.view.map(_.getLong(1)))
+              case "length" => JsonStream.Frag(vc.length.toString)
+              case other => throw new IllegalArgumentException(s"unknown Set field '$other'")
+            })))
+          }
+        case _ =>
+          val slot = acts.agg(aggColumn(l))
+          () => Json.write(acts.aggregate(slot))
       })
     }
-    JsonStream.obj(parts)
+    () => JsonStream.obj(parts.map { case (n, render) => n -> render() })
   }
 
   /** row(index) { fields } — selection-driven: only the requested columns

@@ -278,7 +278,7 @@ object JsonStream {
     * a time — the O(chunk) path for column `values` leaves. The input must
     * be collected data (never a lazy Spark handle): rendering happens
     * after the request's persist scope closes. */
-  def lazyArr(values: scala.collection.Seq[Any]): JsonStream =
+  def lazyArr(values: scala.collection.Iterable[Any]): JsonStream =
     Defer(() => Iterator.single("[") ++
       values.iterator.zipWithIndex.map { case (v, i) =>
         (if (i == 0) "" else ",") + Json.write(v)

@@ -51,6 +51,14 @@ object TextSearch {
   def termBucket(term: Column, buckets: Int): Column =
     pmod(xxhash64(term), lit(buckets.toLong)).cast("int")
 
+  /** Buckets of probe terms, computed on the driver: [[termBucket]] — the
+    * expression [[postings]] writes `_tb` with — folded over each term as a
+    * literal, so build and probe cannot drift and hashing ≤ |terms|
+    * strings launches no query execution. */
+  private[graft] def termBuckets(terms: Seq[String], buckets: Int): Seq[Long] =
+    terms.map(t => org.apache.spark.sql.graft.ExprBridge.fold(
+      SparkSession.active, termBucket(lit(t), buckets)).asInstanceOf[Int].toLong)
+
   /** Posting rows (id, term, _tb) — one per distinct token per document;
     * with `positions` one per token OCCURRENCE plus its 0-based `pos` in
     * the whitespace token array (absolute, so the rare filtered-out blank
@@ -370,22 +378,18 @@ object TextSearch {
   /** Doc ids matching at least `minMatch` of `terms` (`minMatch <= 0` or
     * `>= terms.size` → ALL terms, the AND search; `1` → OR). Reads ONLY the
     * bucket dirs the query terms hash to — the probe cost is ∝ terms, not
-    * corpus. Term buckets are computed through the SAME Catalyst expression
-    * as the build ([[termBucket]] over a local one-column frame — no
-    * driver-side reimplementation of xxhash64 to drift). */
+    * corpus. Term buckets come from [[termBuckets]]: the build's own
+    * Catalyst expression folded on the driver, no query execution. */
   def searchIds(index: TextIndex, terms: Seq[String],
                 minMatch: Int = 0): DataFrame = {
     val spark = SparkSession.active
-    import spark.implicits._
     // heal a torn compaction swap before the probe (every sibling probe
     // does this; a warm cache handle skips readMeta's healing path, and
     // without it a torn swap silently answers "no matches")
     IndexMaint.recoverSwap(spark, index.path)
     val norm = normTerms(terms)
     val need = if (minMatch <= 0 || minMatch > norm.size) norm.size else minMatch
-    val tbs = norm.toDF("term")
-      .select(termBucket(col("term"), index.buckets))
-      .collect().map(_.getInt(0).toLong).toSeq
+    val tbs = termBuckets(norm, index.buckets)
     val idType = index.schema("id").dataType
     // positional trees with a tf tier answer membership from the doc-level
     // rows (one per (term, doc)) instead of the occurrence rows — same
@@ -423,15 +427,12 @@ object TextSearch {
     require(index.positional,
       s"phraseIds needs an index built with positions = true (${index.path})")
     val spark = SparkSession.active
-    import spark.implicits._
     val norm = phrase.map(_.toLowerCase.trim)
     require(norm.nonEmpty && norm.forall(_.nonEmpty),
       "phraseIds: phrase terms must be non-blank")
     IndexMaint.recoverSwap(spark, index.path)
     val distinctTerms = norm.distinct
-    val tbs = distinctTerms.toDF("term")
-      .select(termBucket(col("term"), index.buckets))
-      .collect().map(_.getInt(0).toLong).toSeq
+    val tbs = termBuckets(distinctTerms, index.buckets)
     val idType = index.schema("id").dataType
     IndexMaint.readPartitions(spark, index.path, index.schema, "_tb", tbs) match {
       case None =>
@@ -480,8 +481,11 @@ object TextSearch {
     * it, ties included), the candidate top-k IS the exact top-k. When the
     * verification fails — or the query gives no useful split — the probe
     * falls back to scoring everything: pruning is a latency optimization,
-    * NEVER an answer change. Costs one bounded stats collect (≤ |terms|
-    * rows) plus, when pruning applies, a k-row candidate collect. */
+    * NEVER an answer change. When pruning cannot apply (k > 10000, or the
+    * sidecar bounds the common-term volume below `pruneMinRows`) the probe
+    * is one plan with df and idf computed inside it; otherwise it costs one
+    * bounded stats collect (≤ |terms| rows) plus, when the split is worth
+    * trying, a k-row candidate collect. */
   def rankedSearch(index: TextIndex, terms: Seq[String], k: Int,
                    k1: Double = 1.2, b: Double = 0.75,
                    pruneMinRows: Long = 500000L): DataFrame =
@@ -494,12 +498,9 @@ object TextSearch {
       s"rankedSearch needs an index built with positions = true (${index.path})")
     require(k > 0, "rankedSearch needs k > 0")
     val spark = SparkSession.active
-    import spark.implicits._
     val norm = normTerms(terms)
     IndexMaint.recoverSwap(spark, index.path)
-    val tbs = norm.toDF("term")
-      .select(termBucket(col("term"), index.buckets))
-      .collect().map(_.getInt(0).toLong).toSeq
+    val tbs = termBuckets(norm, index.buckets)
     val idType = index.schema("id").dataType
     val outSchema = StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType),
@@ -529,65 +530,100 @@ object TextSearch {
             .agg(countDistinct(col("pos")).as("_tf"),
               max(col("len")).as("_len")))
     val tfAll = tfOpt.getOrElse(return emptyOut)
+    // per-doc rows (id, _l): each document's (term, _tf, _len) entries,
+    // sorted by term — the input of the deterministic score fold below
+    val perDocAll = tfAll.groupBy("id").agg(array_sort(collect_list(
+      struct(col("term"), col("_tf"), col("_len")))).as("_l"))
     // restriction (rankedSearchWithin): scores and statistics (df, N,
     // avgdl) are per-document constants of the INDEX corpus — restricting
     // the candidate set cannot change any document's score, so the
     // restricted top-k IS the first k survivors of the unrestricted
     // ranking. Scoring therefore semi-joins the restriction in BEFORE the
-    // per-doc fold and ranks once — no geometric rank-then-verify rounds,
+    // score fold and ranks once — no geometric rank-then-verify rounds,
     // no re-probing, no checkpoint (round-12 verdict #4: the old loop
     // re-ran the whole probe + scoring per fetch round, and scoring cost
-    // never shrank with fetchK). df comes from the UNRESTRICTED rows: the
-    // per-term stats collect below runs on tfAll.
-    val tf = within match {
+    // never shrank with fetchK). df always comes from the UNRESTRICTED
+    // rows, whichever path computes it below.
+    val perDoc = within match {
       case Some(ids) =>
-        tfAll.join(ids, col("id") === col("_gq_wid"), "left_semi")
-      case None => tfAll
+        perDocAll.join(ids, col("id") === col("_gq_wid"), "left_semi")
+      case None => perDocAll
     }
 
-    val nDocs = index.docs.toDouble
     val avgdl = index.totalLen.toDouble / index.docs.toDouble
-    def idfOf(dfV: Long): Double =
-      math.log(1.0 + (nDocs - dfV + 0.5) / (dfV + 0.5))
+    // the ONE idf formula, evaluated by Spark on both paths below, so the
+    // in-plan and the collected statistics agree to the bit
+    def idf(dfV: Column): Column =
+      log(lit(1.0) + (lit(index.docs.toDouble) - dfV + lit(0.5)) / (dfV + lit(0.5)))
     def satUb(maxtf: Double, minlen: Double): Double =
       maxtf * (k1 + 1.0) / (maxtf + k1 * (1.0 - b + b * minlen / avgdl))
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // one bounded pass: exact per-term df + the bound ingredients
-    // (≤ |terms| rows — the knnJoinAuto "pay one bounded job" precedent).
-    // ALWAYS over the unrestricted rows: df/ub are index-corpus statistics.
-    final case class TermStat(term: String, df: Long, ub: Double)
-    val stats = tfAll.groupBy("term")
-      .agg(count(lit(1)).as("_df"), max(col("_tf")).as("_maxtf"),
-        min(col("_len")).as("_minlen"))
-      .collect()
-      .map(r => TermStat(r.getString(0), r.getLong(1),
-        idfOf(r.getLong(1)) *
-          satUb(r.getLong(2).toDouble, r.getInt(3).toDouble)))
-    if (stats.isEmpty) return emptyOut
-    // idf is a per-term constant now that df is known — embed it as a
-    // literal map (no df re-aggregation or broadcast join at score time)
-    val idfMap = map(stats.flatMap(s =>
-      Seq(lit(s.term), lit(idfOf(s.df)))): _*)
-    val contrib = element_at(idfMap, col("term")) *
-      (col("_tf") * lit(k1 + 1.0)) /
-      (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_len") / avgdl))
     // deterministic reduction (round-10 ADVICE): a plain sum(contrib)'s
     // FP association order varies with partitioning, and a sum within
     // ~1 ulp of a 0.5e-6 rounding boundary could flip its rounded value
     // between retries, perturbing the tie-break and the top-k cut. Each
-    // doc holds ≤ |query terms| rows, so collecting them and folding in
-    // sorted term order is O(terms) per doc — bit-stable across retries,
-    // repartitioning and topologies.
-    def scored(rows: DataFrame): DataFrame = rows
-      .groupBy("id").agg(round(aggregate(
-        array_sort(collect_list(struct(col("term"), contrib.as("c")))),
-        lit(0.0), (acc, x) => acc + x.getField("c")), 6).as("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("id").asc)).cast("long"))
+    // doc holds ≤ |query terms| entries, so folding them in sorted term
+    // order is O(terms) per doc — bit-stable across retries,
+    // repartitioning and topologies. `idfOf` maps a term to its idf.
+    def scored(docs: DataFrame, idfOf: Column => Column): DataFrame = {
+      def contrib(x: Column): Column = idfOf(x.getField("term")) *
+        (x.getField("_tf") * lit(k1 + 1.0)) / (x.getField("_tf") +
+          lit(k1) * (lit(1.0 - b) + lit(b) * x.getField("_len") / avgdl))
+      docs.select(col("id"),
+          round(aggregate(col("_l"), lit(0.0), (acc, x) => acc + contrib(x)), 6)
+            .as("score"))
+        .orderBy(col("score").desc, col("id").asc)
+        .limit(k)
+        .withColumn("rank", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy(col("score").desc, col("id").asc)).cast("long"))
+    }
+
+    // Max-score pruning needs the non-essential df sum to reach
+    // pruneMinRows, and that sum is at most min(docs·|terms|, totalLen)
+    // (a term's df ≤ docs; each (term, doc) pair is ≥ 1 token). Below that
+    // bound — or past the k-row driver-collect limit — pruning cannot
+    // apply, so nothing is collected: df comes from a per-term count over
+    // the per-doc rows, and its idf map is broadcast back into the same
+    // plan. The count reads the per-doc shuffle the scoring side reads (a
+    // reused exchange); counting over tfAll instead would not be reused,
+    // because column pruning strips its unused tf/len aggregates and so
+    // makes it a different plan. The bound only picks a path: both paths
+    // return the same exact answer. The bar is an explicit parameter
+    // (specs/probes lower it), NOT session conf — the round-10
+    // slice-densify rule: a shared-session knob mutated for one query is
+    // observed by every concurrent query.
+    val pruneCannotApply = k > 10000 ||
+      math.min(index.docs.toDouble * norm.size, index.totalLen.toDouble) <
+        pruneMinRows
+    if (pruneCannotApply) {
+      val idfMap = perDocAll
+        .select(explode(col("_l").getField("term")).as("term"))
+        .groupBy("term").agg(count(lit(1)).as("_df"))
+        .agg(map_from_entries(collect_list(struct(col("term"),
+          idf(col("_df"))))).as("_gq_idf"))
+      return scored(perDoc.crossJoin(broadcast(idfMap)),
+        t => element_at(col("_gq_idf"), t))
+    }
+
+    // pruning path: one bounded pass for exact per-term df, idf and the
+    // bound ingredients (≤ |terms| rows — the knnJoinAuto "pay one bounded
+    // job" precedent), over the unrestricted rows
+    final case class TermStat(term: String, df: Long, idf: Double, ub: Double)
+    val stats = tfAll.groupBy("term")
+      .agg(count(lit(1)).as("_df"), max(col("_tf")).as("_maxtf"),
+        min(col("_len")).as("_minlen"))
+      .select(col("term"), col("_df"), idf(col("_df")), col("_maxtf"),
+        col("_minlen"))
+      .collect()
+      .map(r => TermStat(r.getString(0), r.getLong(1), r.getDouble(2),
+        r.getDouble(2) * satUb(r.getLong(3).toDouble, r.getInt(4).toDouble)))
+    if (stats.isEmpty) return emptyOut
+    // idf is a per-term constant now that df is known — embed it as a
+    // literal map (no df re-aggregation or broadcast join at score time)
+    val idfLit = map(stats.flatMap(s => Seq(lit(s.term), lit(s.idf))).toIndexedSeq: _*)
+    val idfOf = (t: Column) => element_at(idfLit, t)
 
     // max-score split: essential terms = the rarest prefix (df ascending)
     // that can yield ≥ k candidates with margin; only worth trying when
@@ -600,25 +636,21 @@ object TextSearch {
     }
     val nonEssential = byDf.drop(essential.length)
     val ubNonEssential = round6(nonEssential.map(_.ub).sum)
-    // pruning pays two extra scheduling rounds (stats collect + candidate
-    // top-k); only worth it when the skipped volume is real — the common
-    // side must carry most of the rows AND enough of them that the saved
-    // aggregation beats the fixed job cost. The bar is an explicit
-    // parameter (specs/probes lower it), NOT session conf — the round-10
-    // slice-densify rule: a shared-session knob mutated for one query is
-    // observed by every concurrent query.
-    // k ≤ 10000: the pruned return collects the k candidate rows to the
-    // driver — interactive top-k only, never a bulk ranking fetch (the
-    // rankedSearchWithin verify loop grows k geometrically)
-    val pruneWorthIt = k <= 10000 && nonEssential.nonEmpty &&
+    // pruning pays a k-row candidate collect on top of the stats collect;
+    // only worth it when the skipped volume is real — the common side must
+    // carry most of the rows AND enough of them that the saved aggregation
+    // beats the fixed job cost. (k ≤ 10000, checked above: the pruned
+    // return collects the k candidate rows to the driver — interactive
+    // top-k only, never a bulk ranking fetch.)
+    val pruneWorthIt = nonEssential.nonEmpty &&
       essential.map(_.df).sum * 4 <= totalDf &&
       nonEssential.map(_.df).sum >= pruneMinRows
     if (pruneWorthIt) {
       val eTerms = essential.map(_.term).toSeq
-      val cand = tf.filter(col("term").isin(eTerms: _*))
-        .select("id").distinct()
-      // exact full scores (ALL query terms) for candidate docs only
-      val topC = scored(tf.join(cand, Seq("id"), "left_semi")).collect()
+      // exact full scores (ALL query terms) for candidate docs only: the
+      // docs holding an essential term
+      val topC = scored(perDoc.filter(exists(col("_l"),
+        x => x.getField("term").isin(eTerms: _*))), idfOf).collect()
       // valid iff we filled k slots AND no pruned doc can round up to the
       // k-th score: a doc without essential terms scores ≤ ub(non-essential),
       // and rounding is monotone, so strict < on rounded values is safe
@@ -631,7 +663,7 @@ object TextSearch {
       }
     }
     // fallback: score every doc containing any query term (always exact)
-    scored(tf)
+    scored(perDoc, idfOf)
   }
 
   /** BM25 top-k RESTRICTED to the ids present in `within` — the

@@ -131,15 +131,109 @@ class GraphQLSpec extends SparkSpec {
         "{ lineitem { slice(offset: 0, limit: 5) { columns { l_orderkey { values } } } } }")
       assert(""""values":\[(-?\d+,){4}-?\d+\]""".r.findFirstIn(ok).nonEmpty,
         s"sliced values must serve under the cap: $ok")
+      // a multi-column selection collects its value leaves in ONE action:
+      // the cap guards that action and names its first value column
+      val two = intercept[IllegalArgumentException](service.execute(
+        "{ lineitem { columns { l_quantity { sum } l_orderkey { values } l_partkey { values } } } }"))
+      assert(two.getMessage.contains("'l_orderkey'") && two.getMessage.contains("10") &&
+        two.getMessage.contains("slice"), s"two-column cap error: ${two.getMessage}")
+      val twoOk = service.execute("""{ lineitem { slice(offset: 0, limit: 5) {
+        columns { l_orderkey { values } l_partkey { values } } } } }""")
+      assert(""""l_partkey":\{"values":\[(-?\d+,){4}-?\d+\]""".r.findFirstIn(twoOk).nonEmpty,
+        s"sliced two-column values must serve under the cap: $twoOk")
       // under-cap answers are byte-identical to the uncapped ones
       spark.conf.set("spark.graft.serve.maxValues", "1000")
       def noTiming(s: String) = s.replaceAll(""""timing_ms":\{[^}]*\}""", "")
-      val capped = service.execute("{ nation { columns { n_nationkey { values } } } }")
+      val q1 = "{ nation { columns { n_nationkey { values } } } }"
+      val q2 = "{ nation { columns { n_nationkey { values } n_name { values } } } }"
+      val capped = Seq(q1, q2).map(service.execute)
       spark.conf.unset("spark.graft.serve.maxValues")
-      val uncapped = service.execute("{ nation { columns { n_nationkey { values } } } }")
-      assert(noTiming(capped) == noTiming(uncapped),
+      val uncapped = Seq(q1, q2).map(service.execute)
+      assert(capped.map(noTiming) == uncapped.map(noTiming),
         "a cap above the row count must change nothing")
     } finally spark.conf.unset("spark.graft.serve.maxValues")
+  }
+
+  /** The `"columns":{...}` object of a response, byte for byte. */
+  private def columnsJson(resp: String): String = {
+    val start = resp.indexOf("\"columns\":") + "\"columns\":".length
+    require(start >= "\"columns\":".length, s"no columns object in $resp")
+    var depth = 0; var i = start; var inStr = false
+    do {
+      resp(i) match {
+        case '\\' if inStr => i += 1
+        case '"' => inStr = !inStr
+        case '{' if !inStr => depth += 1
+        case '}' if !inStr => depth -= 1
+        case _ =>
+      }
+      i += 1
+    } while (depth > 0)
+    resp.substring(start, i)
+  }
+
+  test("columns{}: one mixed selection equals one request per column, byte for byte") {
+    // (table path, one column selection per entry): each shape is served
+    // once as ONE columns{} and once as one request per column
+    val shapes = Seq(
+      """lineitem { s: slice(offset: 3, limit: 40) {""" -> Seq(
+        """l_quantity { v: values dropNull sum quantile(q: [0.25, 0.5]) first last type }""",
+        """l_returnflag { values fillNull(value: "X") distinct { values counts length }
+           first last type ... on FloatColumn { sum } }""",
+        """q: l_quantity { ... on FloatColumn { s: sum max } ... on StringColumn { min } }""",
+        """l_shipdate { values first }"""),
+      """embeddings { s: slice(offset: 2, limit: 3) {""" -> Seq(
+        """embedding { length unnest { values sum count } type }""",
+        """vec_id { values first last mean }""",
+        """label { dropNull fillNull(value: 0) sum }"""),
+      """orders { o: order(by: ["-o_totalprice", "o_orderkey"], limit: 30) {""" -> Seq(
+        """o_totalprice { values first last sum quantile(q: 0.5) }""",
+        """o_orderstatus { values distinct { values counts } type }""",
+        """k: o_orderkey { values dropNull fillNull(value: 0) min max }"""),
+      """orders { g: group(by: ["o_orderstatus"], counts: "n",
+           aggregate: {sum: [{name: "o_totalprice", alias: "total"}]}) {""" -> Seq(
+        """o_orderstatus { values first last type }""",
+        """n { values sum quantile(q: [0.5]) }""",
+        """total { values dropNull fillNull(value: 0.0) mean }"""))
+    for ((path, cols) <- shapes) {
+      def query(sel: Seq[String]) = s"{ $path columns { ${sel.mkString(" ")} } } } }"
+      val mixed = columnsJson(service.execute(query(cols)))
+      val perColumn = cols.map(c => columnsJson(service.execute(query(Seq(c)))))
+      assert(mixed == perColumn.map(_.drop(1).dropRight(1)).mkString("{", ",", "}"),
+        s"$path: mixed selection diverged\n mixed: $mixed\n  per column: $perColumn")
+    }
+  }
+
+  test("served execution budget: the serve_mixed request shapes on a warm index") {
+    // one Spark execution per served leaf selection; ann_ivf's second is
+    // ivfProbe's collect of the probed centroid ids
+    val shapes = Seq(
+      ("agg", 1, """{ lineitem { group(by: ["l_returnflag"], counts: "n",
+        aggregate: {sum: [{name: "l_quantity", alias: "qty"}]}) {
+        o: order(by: ["l_returnflag"]) { columns { l_returnflag { values } n { values } qty { values } } } } } }"""),
+      ("filter", 1, """{ orders { filter(o_totalprice: {ge: 100000.0}) { count } } }"""),
+      ("search", 1, """{ documents { s: search(terms: ["join", "filter"], on: "text",
+        id: "doc_id") { count } } }"""),
+      ("bm25", 1, """{ documents { s: search(terms: ["join", "filter"], on: "text",
+        id: "doc_id", k: 20) { o: order(by: ["rank"]) { columns { doc_id { values } rank { values } } } } } }"""),
+      ("bm25filt", 1, """{ documents { f: filter(lang: {eq: "en"}) { s: search(terms: ["hash", "table"],
+        on: "text", id: "doc_id", k: 20, corpus: "documents") { o: order(by: ["rank"]) {
+        columns { doc_id { values } rank { values } } } } } } }"""),
+      ("ann_ivf", 2, """{ embeddings { nearest(on: "embedding", id: "vec_id", ids: [0, 1, 2], k: 5,
+        method: "IVF", nlist: 16, nprobe: 6) { o: order(by: ["query_id", "rank"]) {
+        columns { query_id { values } neighbor_id { values } rank { values } } } } } }"""),
+      ("leaf", 1, """{ lineitem { s: slice(offset: 0, limit: 20000) { columns {
+        l_orderkey { values } l_extendedprice { values } l_shipdate { values } } } } }"""),
+      ("cold", 1, """{ documents { m: project(columns: [{alias: "m", mod: [{name: "doc_id"}, {value: 1}]}]) {
+        f: filter(m: {eq: 0}) { s: search(terms: ["join", "filter"], on: "text",
+        id: "doc_id", k: 10) { o: order(by: ["rank"]) {
+        columns { doc_id { values } rank { values } } } } } } } }"""))
+    // warm: index builds and root row ids are paid once, not per request
+    shapes.foreach { case (_, _, q) => service.execute(q) }
+    val got = shapes.map { case (kind, _, q) =>
+      kind -> org.apache.spark.sql.graft.Executions.count(spark) { service.execute(q); () } }
+    assert(got == shapes.map { case (kind, n, _) => kind -> n },
+      s"SQL executions per request: $got")
   }
 
   test("cap drops surface in response extensions; clean requests omit them") {

@@ -28,6 +28,29 @@ class TextSearchSpec extends SparkSpec {
   private def probedIds(df: DataFrame): Set[Long] =
     df.collect().map(_.getLong(0)).toSet
 
+  /** Full-scan Okapi recompute (the spec's independent BM25 reference). */
+  private def bruteTopK(corpus: DataFrame, terms: Seq[String],
+                        k: Int): Seq[(Long, Double)] = {
+    val toks = corpus.select(col("doc_id"),
+      TextAnalysis.tokens(col("text")).as("a"))
+    val st = toks.filter(col("a").isNotNull &&
+        size(filter(col("a"), t => length(t) > 0)) > 0)
+      .agg(count(lit(1)), sum(size(col("a")).cast("long"))).head()
+    val (n, avgdl) = (st.getLong(0), st.getLong(1).toDouble / st.getLong(0))
+    val tf = toks.select(col("doc_id"), size(col("a")).as("dl"),
+        explode(col("a")).as("term"))
+      .filter(col("term").isin(terms: _*))
+      .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("tf"))
+    val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val contrib = log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) /
+        (col("df") + 0.5)) * (col("tf") * lit(2.2)) /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl))
+    tf.join(broadcast(dfs), Seq("term"))
+      .groupBy("doc_id").agg(round(sum(contrib), 6).as("score"))
+      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
   test("AND / OR / at-least-m probes equal the full-scan answers") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_spec").toString
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
@@ -60,10 +83,11 @@ class TextSearchSpec extends SparkSpec {
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
       buckets = 64)
     val terms = Seq("join", "filter")
-    import spark.implicits._
-    val expected = terms.toDF("term")
-      .select(TextSearch.termBucket(col("term"), 64))
-      .collect().map(r => s"_tb=${r.getInt(0)}").toSet
+    val expected = TextSearch.termBuckets(terms, 64).map(b => s"_tb=$b").toSet
+    // the bucket dirs the build wrote these terms' postings into
+    val written = spark.read.parquet(idx.path).filter(col("term").isin(terms: _*))
+      .select("_tb").distinct().collect().map(r => s"_tb=${r.getInt(0)}").toSet
+    assert(written == expected, s"build wrote $written, probe hashes to $expected")
     val files = TextSearch.searchIds(idx, terms).inputFiles
     assert(files.nonEmpty)
     val touched = files.map { f =>
@@ -352,27 +376,6 @@ class TextSearchSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_prune").toString
 
-    /** Full-scan Okapi recompute (the spec's independent reference). */
-    def bruteTopK(corpus: DataFrame, terms: Seq[String], k: Int): Seq[(Long, Double)] = {
-      val toks = corpus.select(col("doc_id"),
-        TextAnalysis.tokens(col("text")).as("a"))
-      val st = toks.filter(col("a").isNotNull &&
-          size(filter(col("a"), t => length(t) > 0)) > 0)
-        .agg(count(lit(1)), sum(size(col("a")).cast("long"))).head()
-      val (n, avgdl) = (st.getLong(0), st.getLong(1).toDouble / st.getLong(0))
-      val tf = toks.select(col("doc_id"), size(col("a")).as("dl"),
-          explode(col("a")).as("term"))
-        .filter(col("term").isin(terms: _*))
-        .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("tf"))
-      val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val contrib = log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) /
-          (col("df") + 0.5)) * (col("tf") * lit(2.2)) /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl))
-      tf.join(broadcast(dfs), Seq("term"))
-        .groupBy("doc_id").agg(round(sum(contrib), 6).as("score"))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
     // tiny corpora: pruneMinRows = 1 drops the volume bar so the pruning
     // path is exercised (explicit parameter, not session conf — no
     // concurrent query can observe it)
@@ -713,5 +716,160 @@ class TextSearchSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       TextSearch.rankedSearch(fresh, Seq("join", "filter"), 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+  }
+
+  // ─── one Spark execution per probe ───
+
+  test("driver-side term buckets equal the _tb the build writes") {
+    import spark.implicits._
+    // 200 seeded terms: ASCII, non-ASCII, 1-char and 1 KB long; every
+    // character is its own lowercase, so tokenization keeps each term whole
+    val rnd = new scala.util.Random(20261018L)
+    val ascii = "abcdefghijklmnopqrstuvwxyz0123456789"
+    val wide = "éüßøçñяжщαβγ日本語中文한국"
+    def word(alphabet: String, n: Int): String =
+      Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    val terms = scala.collection.mutable.LinkedHashSet.empty[String]
+    terms ++= (ascii + wide).take(30).map(_.toString)
+    while (terms.size < 40) terms += word(ascii + wide, 1024)
+    while (terms.size < 100) terms += word(wide, 1 + rnd.nextInt(6)) + word(ascii, 1)
+    while (terms.size < 200) terms += word(ascii, 2 + rnd.nextInt(12))
+    val all = terms.toSeq
+    assert(all.size == 200)
+    val corpus = all.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    for (buckets <- Seq(1, 7, 64, 256)) {
+      val written = TextSearch.postings(corpus, "text", "doc_id", buckets)
+        .select("term", "_tb").collect()
+        .map(r => r.getString(0) -> r.getInt(1).toLong).toMap
+      assert(written.keySet == all.toSet, "tokenization must keep every term whole")
+      var driver: Seq[Long] = Nil
+      val execs = org.apache.spark.sql.graft.Executions.count(spark) {
+        driver = TextSearch.termBuckets(all, buckets)
+      }
+      assert(execs == 0, s"driver-side buckets ran $execs SQL executions")
+      val diverged = all.zip(driver).filter { case (t, b) => written(t) != b }
+      assert(diverged.isEmpty,
+        s"buckets=$buckets: driver != build for ${diverged.take(3)}")
+      assert(driver.forall(b => b >= 0 && b < buckets))
+    }
+  }
+
+  test("each probe is one Spark execution when pruning cannot apply") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_budget").toString
+    val plain = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/plain",
+      buckets = 16)
+    val pos = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/pos",
+      buckets = 16, positions = true)
+    val terms = Seq("join", "filter", "hash")
+    def execs(df: => DataFrame): Int =
+      org.apache.spark.sql.graft.Executions.count(spark) { df.collect(); () }
+    // the sf0.001 corpus bounds the common-term volume far below the
+    // default pruneMinRows, so rankedSearch takes the in-plan statistics
+    assert(pos.docs * terms.size < 500000L)
+    val budget = Seq(
+      "searchIds" -> execs(TextSearch.searchIds(plain, terms)),
+      "searchIds (tf tier)" -> execs(TextSearch.searchIds(pos, terms, minMatch = 1)),
+      "phraseIds" -> execs(TextSearch.phraseIds(pos, Seq("hash", "table"))),
+      "rankedSearch" -> execs(TextSearch.rankedSearch(pos, terms, 10)),
+      "rankedSearchWithin" -> execs(TextSearch.rankedSearchWithin(pos, terms,
+        10, docs.filter(col("doc_id") % 3 === 0), "doc_id")))
+    assert(budget.forall(_._2 == 1), s"SQL executions per probe: $budget")
+  }
+
+  test("BM25 in-plan statistics equal the stats collect and the full scan, bit for bit") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_inplan").toString
+    type Ranked = Seq[(Long, Long, Long)] // (id, score bits, rank)
+    def ranked(df: DataFrame): Ranked = df.orderBy("rank").collect()
+      .map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1)),
+        r.getLong(2))).toSeq
+    def reranked(s: Seq[(Long, Double)]): Ranked = s.zipWithIndex.map {
+      case ((id, sc), i) => (id, java.lang.Double.doubleToLongBits(sc), i + 1L) }
+    // pruneMinRows = Long.MaxValue: the sidecar bound always rules pruning
+    // out (in-plan df/idf); pruneMinRows = 1: it never does (stats collect,
+    // plus the pruned split whenever it verifies)
+    def paths(idx: TextSearch.TextIndex, terms: Seq[String], k: Int,
+              within: Option[DataFrame]): (Ranked, Ranked) = {
+      def run(minRows: Long): Ranked = ranked(within match {
+        case None => TextSearch.rankedSearch(idx, terms, k, pruneMinRows = minRows)
+        case Some(w) => TextSearch.rankedSearchWithin(idx, terms, k, w, "doc_id",
+          pruneMinRows = minRows)
+      })
+      (run(Long.MaxValue), run(1L))
+    }
+    def check(label: String, idx: TextSearch.TextIndex, corpus: Option[DataFrame],
+              terms: Seq[String], k: Int, within: Option[DataFrame] = None): Ranked = {
+      val (inPlan, collected) = paths(idx, terms, k, within)
+      assert(inPlan == collected,
+        s"$label: in-plan != stats collect\n $inPlan\n $collected")
+      corpus.foreach { c =>
+        val all = bruteTopK(c, terms, Int.MaxValue)
+        val keep = within.map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
+        val expected = reranked(all.filter(x => keep.forall(_(x._1))).take(k))
+        assert(inPlan == expected, s"$label: != full scan\n $inPlan\n $expected")
+      }
+      inPlan
+    }
+    val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
+      buckets = 16, positions = true)
+    val within = docs.filter(col("doc_id") % 3 === 0)
+    for (terms <- Seq(Seq("join", "filter", "hash"), Seq("table", "scan"),
+        Seq("join", "zzzznope"))) {
+      assert(check(s"rankedSearch $terms", idx, Some(docs), terms, 10).nonEmpty)
+      check(s"rankedSearchWithin $terms", idx, Some(docs), terms, 7, Some(within))
+    }
+    // only absent terms: both paths rank nothing
+    assert(check("absent", idx, Some(docs), Seq("zzzznope"), 5).isEmpty)
+    // replayed appends: duplicate tf/posting rows collapse the same way on
+    // both paths, and both read the same (double-counted) sidecar N/avgdl
+    val seg = Seq((100000L, "join filter hash join"), (100001L, "hash table"))
+      .toDF("doc_id", "text")
+    val replay = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/replay",
+      buckets = 16, positions = true)
+    TextSearch.textIndexAppend(replay, seg, "text")
+    val replayed = TextSearch.textIndexAppend(replay, seg, "text")
+    check("replayed", replayed, None, Seq("join", "filter", "hash"), 10)
+    check("replayed within", replayed, None, Seq("join", "hash"), 5, Some(within))
+    val healed = TextSearch.textIndexCompact(replayed)
+    check("compacted", healed, Some(docs.select("doc_id", "text").unionByName(seg)),
+      Seq("join", "filter", "hash"), 10)
+    // a tree without the tf tier answers from the positional rows
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/ix/_tf"), true))
+    check("no _tf", idx, Some(docs), Seq("join", "filter", "hash"), 10)
+    check("no _tf within", idx, Some(docs), Seq("join", "filter"), 10, Some(within))
+    // docs == 0: an empty corpus ranks nothing on either path
+    val empty = TextSearch.textIndexBuild(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", "doc_id",
+      s"$dir/empty", buckets = 4, positions = true)
+    assert(empty.docs == 0L)
+    assert(check("docs == 0", empty, None, Seq("join"), 5).isEmpty)
+  }
+
+  test("in-plan BM25 statistics read the scoring side's shuffles") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeExec}
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_reuse").toString
+    val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
+      buckets = 16, positions = true)
+    val r = TextSearch.rankedSearch(idx, Seq("join", "filter", "hash"), 10)
+    r.collect()
+    val plan = r.queryExecution.executedPlan
+    def hashOn(e: ShuffleExchangeExec): Set[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
+      case _ => Set.empty
+    }
+    // one (id, term) exchange: the per-term df count reads the scoring
+    // side's per-doc shuffle (and everything below it) through a reuse,
+    // rather than scanning and shuffling the probed buckets a second time
+    val idTerm = Plans.collect(plan) {
+      case e: ShuffleExchangeExec if hashOn(e) == Set("id", "term") => e }
+    val reused = Plans.collect(plan) { case e: ReusedExchangeExec => e.child }
+      .collect { case e: ShuffleExchangeExec => hashOn(e) }
+    assert(idTerm.size == 1, s"(id, term) exchanges: ${idTerm.size}\n$plan")
+    assert(reused == Seq(Set("id")), s"reused exchanges: $reused\n$plan")
   }
 }
