@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.queries.Queries
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs the headline query set on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -54,43 +53,65 @@ object Bench {
     Set("q_knn_join_auto", "q_dedup_semantic", "q_snapshot_diff",
       "q_profile", "q_text_phrase", "q_gql_bm25_filtered")
 
+  /** Runs `df` into the noop sink. */
+  def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** One query's best-of-N reading: `runs` in seconds; `failed` when a run
+    * threw. */
+  final case class Timing(name: String, runs: Seq[Double], failed: Boolean) {
+    def best: Double = runs.min
+  }
+
+  /** The best-of-N noop-sink timer behind Bench and QBench: each query
+    * is rebuilt and run `reps` times. A failing run is reported on stderr
+    * and still timed, so one broken query never takes the line down.
+    *
+    * Best-of-N protocol (round-6): single runs wobble ±2-3 s on a busy
+    * box, which made round-over-round deltas unreadable (VERDICT r5 §perf).
+    * The min over in-process repetitions estimates the noise floor; raw
+    * runs are kept so the distribution stays auditable. */
+  def bestOf(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int,
+             qmap: Map[String, (SparkSession, String) => DataFrame] =
+               SparkEntry.queries): Seq[Timing] =
+    names.map { name =>
+      var failed = false
+      val runs = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        try noop(qmap(name)(spark, sfDir))
+        catch { case e: Throwable =>
+          failed = true
+          System.err.println(s"[bench] $name: ${e.getMessage}")
+        }
+        (System.nanoTime() - t0) / 1e9
+      }
+      Timing(name, runs, failed)
+    }
+
+  private def bestJson(ts: Seq[Timing]): String =
+    ts.map(t => "\"" + t.name + f"\":${t.best}%.3f").mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     // GRAFT_MASTER=local-cluster[N,c,m] → real executor JVMs (graft.Master)
-    val spark = Master.configure(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Master.session(cpus, confs = Seq(
+      "spark.sql.shuffle.partitions" -> shuffle,
+      "spark.sql.adaptive.enabled" -> aqe))
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
 
     val qmap = SparkEntry.queries
     val names = headline.filter(qmap.contains)
     // JVM/codegen warmup on the smallest scale of the first query
-    qmap(names.head)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    noop(qmap(names.head)(spark, sfDir))
 
-    // Best-of-N protocol (round-6): single runs wobble ±2-3 s on a busy
-    // box, which made round-over-round deltas unreadable (VERDICT r5 §perf).
-    // The min over in-process repetitions estimates the noise floor; raw
-    // runs are kept in the JSON so the distribution stays auditable.
-    val results = names.map { name =>
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try qmap(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      (name, runs.min, runs)
-    }
-    val qs = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val raw = results.map { case (k, _, rs) =>
-      "\"" + k + "\":" + rs.map(r => f"$r%.3f").mkString("[", ",", "]")
+    val results = bestOf(spark, sfDir, names, reps)
+    val qs = bestJson(results)
+    val raw = results.map { t =>
+      "\"" + t.name + "\":" + t.runs.map(r => f"$r%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // Optional scaling reading (opt-in): when SPARK_GRAFT_BENCH_SCALE_DIR
     // names a larger dataset, time the slowest entries there and emit a
@@ -102,30 +123,19 @@ object Bench {
       val subset = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE_QUERIES",
         "q_runs_filtered,q_dedup_semantic,q_dedup_minhash,q_tfidf_topk,q_profile,q_dedup_substr")
         .split(",").toSeq.filter(qmap.contains)
-      val sres = subset.map { name =>
-        val runs = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          try qmap(name)(spark, scaleDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-          (System.nanoTime() - t0) / 1e9
-        }
-        (name, runs.min, runs)
-      }
-      val sqs = sres.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-      val stotal = sres.map(_._2).sum
-      println(f"""{"metric":"scale_subset","value":$stotal%.3f,"unit":"sec","reps":$reps,"queries":$sqs,"sf":"$scaleDir"}""")
+      val sres = bestOf(spark, scaleDir, subset, reps)
+      val stotal = sres.map(_.best).sum
+      println(f"""{"metric":"scale_subset","value":$stotal%.3f,"unit":"sec","reps":$reps,"queries":${bestJson(sres)},"sf":"$scaleDir"}""")
     }
-    val total = results.map(_._2).sum
+    val total = results.map(_.best).sum
     // continuity subtotals: core18 = the pre-round-5 set; core22 = the
     // pre-round-11 set; core27 = the pre-round-12 set — cross-round totals
     // compare like-for-like as the headline grows
-    val core18 = results.filterNot { case (k, _, _) =>
-      llmSet.contains(k) || r11Set.contains(k) || r12Set.contains(k) }
-      .map(_._2).sum
-    val core22 = results.filterNot { case (k, _, _) =>
-      r11Set.contains(k) || r12Set.contains(k) }.map(_._2).sum
-    val core27 = results.filterNot { case (k, _, _) => r12Set.contains(k) }
-      .map(_._2).sum
+    def subtotal(excluded: Set[String]): Double =
+      results.filterNot(t => excluded.contains(t.name)).map(_.best).sum
+    val core18 = subtotal(llmSet ++ r11Set ++ r12Set)
+    val core22 = subtotal(r11Set ++ r12Set)
+    val core27 = subtotal(r12Set)
     // Measurement-contract fix (round 13, VERDICT r12 item 2): the raw
     // best-of-N triples pushed the contract line past the driver's 2000-char
     // tail, truncating it mid-line; they now go to stderr (still auditable in

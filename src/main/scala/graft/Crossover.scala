@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixed-vs-marginal-cost measurement: runs the same four query shapes on
@@ -18,14 +18,8 @@ object Crossover {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1,4,8")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Master.session(cpus,
+      confs = Seq("spark.sql.adaptive.enabled" -> "true"))
 
     val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -56,13 +50,13 @@ object Crossover {
           rank = Some("rk")).df))
 
     // warm the JVM/codegen once at the smallest size
-    queries(li0).foreach(_._2().write.format("noop").mode("overwrite").save())
+    queries(li0).foreach(q => Bench.noop(q._2()))
 
     val out = reps.map { n =>
       val li = Seq.fill(n)(li0).reduce(_ unionByName _)
       val times = queries(li).map { case (name, mk) =>
         val t0 = System.nanoTime()
-        mk().write.format("noop").mode("overwrite").save()
+        Bench.noop(mk())
         name -> (System.nanoTime() - t0) / 1e9
       }
       s""""x$n":{${times.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString(",")}}"""

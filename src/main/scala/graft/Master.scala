@@ -47,6 +47,22 @@ object Master {
       .filter(_.nonEmpty).map(_.mkString(","))
   }
 
+  /** The one session of graft's mains (ServiceMain keeps its deployment
+    * builder): the resolved master over `cores` local cores, shuffle
+    * partitions = cores, UTC, UI off and the given log level. `confs` are
+    * applied last, so a main can override any of these. */
+  def session(cores: String, logLevel: String = "WARN",
+              confs: Seq[(String, String)] = Nil): SparkSession = {
+    val base = configure(SparkSession.builder(), s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = confs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Apply the resolved master plus, for local-cluster, the executor-JVM
     * plumbing (app jars, module opens, executor memory from the master
     * string's per-worker MB). */

@@ -1,8 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import graft.queries.Queries
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-audit main: dumps the formatted physical plan of every headline
   * query and greps it for scale-health markers — parquet filter pushdown,
@@ -10,17 +10,22 @@ import graft.queries.Queries
   * coverage. Output: PLANS.md at the repo root.
   */
 object Plans {
+  /** Runs THIS queryExecution and returns its formatted final plan. AQE
+    * only materializes the final plan (with codegen stage annotations)
+    * after an action, and a write would spawn its own separate execution.
+    * Foreaching the executed RDD finalizes the adaptive plan without
+    * collecting the result set to the driver, which at a big SF would OOM
+    * the driver for what is only a plan dump. */
+  def executedPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.foreach(_ => ())
+    df.queryExecution.explainString(FormattedMode)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Master.session("8", logLevel = "ERROR")
 
-    val qmap = Queries.all.map(q => q.name -> q.run).toMap
+    val qmap = SparkEntry.queries
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of headline queries\n\n")
     sb.append(s"Generated by `graft.Plans` on `$sfDir`. Markers: pushed parquet\n")
@@ -59,13 +64,7 @@ object Plans {
       // ones the service executes.)
       "q_media_imagemeta").filter(qmap.contains)
     audited.foreach { name =>
-      val df = qmap(name)(spark, sfDir)
-      // execute THIS queryExecution first: AQE only materializes the final
-      // plan (with codegen stage annotations) after an action, and a write
-      // would spawn its own separate execution
-      df.collect()
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = executedPlan(qmap(name)(spark, sfDir))
       // formatted mode prints each operator in the tree AND a numbered
       // detail block — count only the numbered details
       val pushed = plan.linesIterator.count(l =>

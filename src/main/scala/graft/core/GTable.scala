@@ -626,8 +626,9 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     * verdict): with per-core rate c, K window tasks and P total cores, the
     * window runs in rows/(c·K), the distributed plan in rows/(c·P) plus a
     * fixed stats/merge overhead F — so the crossover is
-    * `rows* = F·c / (1/K − 1/P)`. RankFlipProbe measured rows* ≈ 7.2M at
-    * P = 32 on the ×12 corpus's 3-key ranking, giving F·c ≈ 2.2M per-core
+    * `rows* = F·c / (1/K − 1/P)`. rows* measured ≈ 7.2M at P = 32 on the
+    * ×12 corpus's 3-key ranking (BASELINE.md, "Rankings-strategy
+    * crossover at ×12"), giving F·c ≈ 2.2M per-core
     * row-equivalents (`spark.graft.rankings.perCoreRows`); K is unknown
     * pre-execution, so a conservative `spark.graft.rankings.assumedKeys`
     * (default 4 — at P = 32 the formula then lands on the measured ~10M)

@@ -153,7 +153,8 @@ object Dedup {
     * capped plan. Silent recall loss is the cap's failure mode (the ×1200
     * skew soak returned 0 pairs with every bucket hot) — these counts
     * make it OBSERVABLE: queryable per-op via [[lastCapDrops]] (ops
-    * probes, SoakProbe) and per-request via [[collectCapDrops]] (GraphQL
+    * probes; the soak readings are in BASELINE.md, "Band-bucket occupancy
+    * caps under soak") and per-request via [[collectCapDrops]] (GraphQL
     * response `extensions.cap_drops`). */
   final case class CapDrop(op: String, buckets: Long, rows: Long)
 
@@ -244,7 +245,8 @@ object Dedup {
     * banding [[minhashPairs]] self-joins on — the distribution `maxBucket`
     * acts on. One row per non-empty bucket with its `count`; same fused
     * signature pass + banding as the production path, so a soak/ops probe
-    * (graft.tools.SoakProbe) measures exactly what the cap would see. */
+    * measures exactly what the cap would see (BASELINE.md, "Band-bucket
+    * occupancy caps under soak"). */
   def minhashBandOccupancy(df: DataFrame, textCol: String, idCol: String,
                            n: Int = 3, k: Int = 64,
                            bands: Int = 16): DataFrame = {

@@ -49,12 +49,7 @@ object MultiWriterProbe {
     val cmd = args(0)
     val work = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Master.session(cpus)
     cmd match {
       case "setup"       => setup(spark, work, args(2))
       case "append"      => append(spark, work, args(2), args(3))

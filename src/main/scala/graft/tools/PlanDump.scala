@@ -1,8 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import graft.queries.Queries
 
 /** Dumps the executed `.explain("formatted")` plan of each named headline
   * query to plans/<round>/<query>_<tag>.txt — the optimization round's
@@ -19,29 +17,15 @@ object PlanDump {
     require(args.nonEmpty, "usage: PlanDump <tag> [sfDir] [query ...]")
     val tag = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val qmap = Queries.all.map(q => q.name -> q.run).toMap
+    val qmap = graft.SparkEntry.queries
     val names =
       (if (args.length > 2) args.drop(2).toSeq else graft.Bench.headline)
         .filter(qmap.contains)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Master.session("8", logLevel = "ERROR")
     val outDir = Paths.get(sys.env.getOrElse("GRAFT_PLAN_DIR", "plans/r13"))
     Files.createDirectories(outDir)
     names.foreach { name =>
-      val df = qmap(name)(spark, sfDir)
-      // run THIS queryExecution so AQE materializes the final plan with
-      // codegen ids before explaining it — WITHOUT collecting the result
-      // set to the driver (a headline query at a big SF would OOM the
-      // driver for what is only a plan dump); foreaching the executed RDD
-      // finalizes the adaptive plan all the same
-      df.queryExecution.toRdd.foreach(_ => ())
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = graft.Plans.executedPlan(qmap(name)(spark, sfDir))
       Files.writeString(outDir.resolve(s"${name}_$tag.txt"),
         s"// $name @ $sfDir (executed final plan, AQE on)\n" + plan)
       println(s"wrote $outDir/${name}_$tag.txt")

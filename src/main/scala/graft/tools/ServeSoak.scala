@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.SparkSession
 import graft.graphql.{GraphQLHttpServer, GraphQLService}
 
 /** Concurrent-serving soak (round-8): N parallel GraphQL clients firing a
@@ -31,12 +30,7 @@ object ServeSoak {
     val clients = if (args.length > 1) args(1).toInt else 8
     val rounds = if (args.length > 2) args(2).toInt else 4
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Master.session(cpus)
     // the quality-classifier model root, mounted like a deployment would
     import org.apache.spark.sql.functions.{col, lit}
     // pid-keyed path: a concurrently running gate topology writing the same

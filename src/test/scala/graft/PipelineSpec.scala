@@ -1649,7 +1649,8 @@ class PipelineSpec extends SparkSpec {
   test("randomProject preserves CLUSTERED neighborhoods (64 -> 32)") {
     // the fixture embeddings are near-orthogonal noise (neighbor ranks
     // there are not JL-stable by construction); real corpora have cluster
-    // structure — synthesize the HighDimProbe shape: 100 clusters, noise
+    // structure — synthesize the clustered shape of BASELINE.md's
+    // "Realistic-dimension ANN" reading: 100 clusters, noise
     // around each seed, so true neighbors are same-cluster and well
     // separated from the rest
     def comp(fam: String, a: org.apache.spark.sql.Column,

@@ -12,17 +12,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // GRAFT_MASTER=local-cluster[N,c,m] runs the specs against real
-    // separate executor JVMs (needs `sbt package Test/packageBin` first —
-    // graft.Master ships both jars via spark.jars)
-    val s = Master.configure(SparkSession.builder(), "local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // GRAFT_MASTER=local-cluster[N,c,m] runs the specs against real
+  // separate executor JVMs (needs `sbt package Test/packageBin` first —
+  // graft.Master ships both jars via spark.jars)
+  lazy val session: SparkSession =
+    Master.session("4", confs = Seq("spark.app.name" -> "graft-test"))
 }

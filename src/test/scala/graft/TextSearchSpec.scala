@@ -562,6 +562,38 @@ class TextSearchSpec extends SparkSpec {
     }
   }
 
+  test("evicted and swept served search plans replay their first answers bit for bit") {
+    // more distinct filtered search(k:) plans (one logical index each) than
+    // the cache holds; the GC then sweeps every evicted tree, so a replay
+    // re-opens or rebuilds — and must answer exactly as the first pass
+    TextSearch.invalidateAllTextIndexes()
+    val prev = sys.props.put("graft.index.cache.max", "2")
+    try {
+      val service = new graft.graphql.GraphQLService(spark, sf)
+      def answer(i: Int): String = service.execute(
+        s"""{ documents { f: filter(where: {eq: [{mod: [{name: "doc_id"}, {value: 4}]}, {value: $i}]}) {
+          s: search(terms: ["join", "filter"], on: "text", id: "doc_id", k: 5) {
+          o: order(by: ["rank"]) { columns { doc_id { values } rank { values } } } } } } }""")
+        .replaceAll(""""timing_ms":\{[^}]*\}""", "")
+      val first = (0 until 4).map(answer)
+      assert(first.forall(r => !r.contains("\"errors\"") && r.contains("\"doc_id\"")),
+        first.head)
+      assert(first.distinct.size == 4, "each residue class has its own answer")
+      assert(TextSearch.textCacheSize <= 2)
+      val swept = service.indexGc(graceMs = 0L)
+      assert(swept.exists(_.contains("tx_")), s"the sweep took no evicted tree: $swept")
+      val trees = new java.io.File(service.indexDir).list().count(_.startsWith("tx_"))
+      assert(trees <= 2, s"$trees text trees survive the sweep at cap 2")
+      assert((0 until 4).map(answer) == first)
+    } finally {
+      prev match {
+        case Some(v) => sys.props.put("graft.index.cache.max", v)
+        case None => sys.props.remove("graft.index.cache.max")
+      }
+      TextSearch.invalidateAllTextIndexes()
+    }
+  }
+
   test("append lineage survives a restart: a fresh JVM delta-appends, not rebuilds") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_durl").toString
     val corpusDir = s"$dir/corpus"
