@@ -1,5 +1,9 @@
 package graft.expressions
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
@@ -23,20 +27,51 @@ import org.apache.spark.unsafe.types.UTF8String
   * 1000-executor map stage wants (reference minhash: coady/graphique has no
   * sketch tier; SURVEY §2.11 custom-expression tier).
   *
-  * Hash family: base = xxhash64(shingle bytes, seed 42) — identical to
-  * Spark's `xxhash64(col)`; component i = XXH64.hashLong(base, i).
-  * Deterministic; docs with fewer than `n` tokens yield null (no shingles,
-  * consistent with the relational form dropping them).
+  * Hash families (deterministic; a doc with no shingles yields null):
+  *  - xxhash64 (default): base = xxhash64(shingle bytes, seed 42) —
+  *    identical to Spark's `xxhash64(col)`; component i =
+  *    XXH64.hashLong(base, i). Tokens skip empty strings.
+  *  - md5 (`md5 = true`, the cross-engine reproducible family): component
+  *    i = min over [[WordShingles]]' distinct shingles (empty tokens kept)
+  *    of `conv(substring(md5("i:" ‖ shingle), 1, 15), 16, 10)` — the
+  *    digest's first 8 bytes big-endian, shifted right by 4. Any engine
+  *    with md5 recomputes it relationally (the DuckDB oracles do).
   */
-case class MinHashSignature(child: Expression, n: Int, k: Int)
+case class MinHashSignature(child: Expression, n: Int, k: Int,
+                            md5: Boolean = false)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
+  override def prettyName: String = if (md5) "minhash_sig_md5" else "minhash_sig"
   override def nullable: Boolean = true
 
-  /** Null when the doc has fewer than n tokens (no shingles). */
-  def compute(u: UTF8String): GenericArrayData = {
+  @transient private lazy val seedPrefixes =
+    Array.tabulate(k)(c => s"$c:".getBytes(StandardCharsets.UTF_8))
+
+  /** Null when the doc has no shingles. */
+  def compute(u: UTF8String): GenericArrayData =
+    if (md5) computeMd5(u) else computeXx(u)
+
+  private def computeMd5(u: UTF8String): GenericArrayData = {
+    val shingles = WordShingles.distinct(u.toString, n)
+    if (shingles.isEmpty) return null
+    val mins = Array.fill(k)(Long.MaxValue)
+    val digest = MessageDigest.getInstance("MD5")
+    val it = shingles.iterator()
+    while (it.hasNext) {
+      val bytes = it.next().getBytes(StandardCharsets.UTF_8)
+      var c = 0
+      while (c < k) {
+        digest.update(seedPrefixes(c))
+        val h = ByteBuffer.wrap(digest.digest(bytes)).getLong >>> 4
+        if (h < mins(c)) mins(c) = h
+        c += 1
+      }
+    }
+    new GenericArrayData(mins)
+  }
+
+  private def computeXx(u: UTF8String): GenericArrayData = {
     val text = u.toString.toLowerCase
     // whitespace tokenization, empty tokens skipped (matches split(lower, \s+))
     val toks = text.split("\\s+").filter(_.nonEmpty)
@@ -96,16 +131,18 @@ case class MinHashSignature(child: Expression, n: Int, k: Int)
 
 object MinHashFunctions {
   /** Idempotent session registration; usable via Column API ([[signature]])
-    * and SQL (`minhash_sig(text, n, k)`). */
+    * and SQL (`minhash_sig(text, n, k)`, `minhash_sig_md5(text, n, k)`). */
   def register(spark: SparkSession): Unit =
-    Registration.ensure(spark, "minhash_sig")(
-      exprs => MinHashSignature(exprs(0),
-        Registration.intArg(exprs(1), "minhash_sig", "n"),
-        Registration.intArg(exprs(2), "minhash_sig", "k")))
+    for ((name, md5) <- Seq("minhash_sig" -> false, "minhash_sig_md5" -> true))
+      Registration.ensure(spark, name)(
+        exprs => MinHashSignature(exprs(0),
+          Registration.intArg(exprs(1), name, "n"),
+          Registration.intArg(exprs(2), name, "k"), md5))
 
-  def signature(spark: SparkSession, text: Column, n: Int, k: Int): Column = {
+  def signature(spark: SparkSession, text: Column, n: Int, k: Int,
+                md5: Boolean = false): Column = {
     register(spark)
-    call_function("minhash_sig", text,
+    call_function(if (md5) "minhash_sig_md5" else "minhash_sig", text,
       org.apache.spark.sql.functions.lit(n), org.apache.spark.sql.functions.lit(k))
   }
 }

@@ -76,34 +76,52 @@ case class RollingFingerprint(child: Expression)
     copy(child = newChild)
 }
 
-/** Fused 64-bit SimHash over whitespace tokens — bit-identical to the
-  * composable form in [[graft.operators.Dedup.simhashComposable]]: bit b of
-  * the fingerprint is set iff Σ_tokens sign(xxhash64(token, b)) ≥ 0, where
-  * xxhash64(token, b) replicates Spark's two-child fold
-  * (hashUnsafeBytes(token, 42) then hashInt(b, ·)); bits packed b=0 first
-  * via shiftleft|or. The composable form walks a 64-wide zip_with lambda
-  * per token (interpreted); this is one compiled pass with a 64-int
-  * counter array. */
-case class SimHash64(child: Expression)
+/** Fused 64-bit SimHash over whitespace tokens (split(lower(text), \s+)
+  * with limit=-1): bit b of the fingerprint is set iff Σ_tokens ±1 ≥ 0, the
+  * sign taken from the token's per-bit hash; bits packed b=0 first via
+  * shiftleft|or. Hash families:
+  *  - xxhash64 (default) — bit-identical to the composable form in
+  *    [[graft.operators.Dedup.simhashComposable]]: +1 iff xxhash64(token,
+  *    b) ≥ 0, replicating Spark's two-child fold (hashUnsafeBytes(token,
+  *    42) then hashInt(b, ·));
+  *  - md5 (`md5 = true`, cross-engine reproducible): +1 iff bit b of
+  *    `conv(substring(md5(token), 1, 15), 16, 10)` is set for b < 60, and
+  *    bit b − 60 of `conv(substring(md5(token), 16, 15), 16, 10)` for
+  *    b ≥ 60.
+  * The composable form walks a 64-wide zip_with lambda per token
+  * (interpreted); this is one compiled pass with a 64-int counter array. */
+case class SimHash64(child: Expression, md5: Boolean = false)
     extends UnaryExpression {
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
+  override def prettyName: String = if (md5) "simhash64_md5" else "simhash64"
 
   def compute(u: UTF8String): Long = {
     val text = u.toString.toLowerCase
     val toks = text.split("\\s+", -1)
     val counters = new Array[Int](64)
+    val digest = if (md5) java.security.MessageDigest.getInstance("MD5") else null
     var t = 0
     while (t < toks.length) {
       val tok = UTF8String.fromString(toks(t))
-      val base = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        tok.getBaseObject, tok.getBaseOffset, tok.numBytes(), 42L)
-      var b = 0
-      while (b < 64) {
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, base)
-        if (h >= 0) counters(b) += 1 else counters(b) -= 1
-        b += 1
+      if (md5) {
+        val d = java.nio.ByteBuffer.wrap(digest.digest(tok.getBytes))
+        // bits 0-59: hex digits 1-15; bits 60-63: the low nibble of 16-30
+        val bits = (d.getLong(0) >>> 4) | (((d.getLong(8) >>> 8) & 0xFL) << 60)
+        var b = 0
+        while (b < 64) {
+          if (((bits >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
+          b += 1
+        }
+      } else {
+        val base = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          tok.getBaseObject, tok.getBaseOffset, tok.numBytes(), 42L)
+        var b = 0
+        while (b < 64) {
+          val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, base)
+          if (h >= 0) counters(b) += 1 else counters(b) -= 1
+          b += 1
+        }
       }
       t += 1
     }
@@ -154,17 +172,8 @@ case class WordShingles(child: Expression, n: Int)
   def emptyArray: ArrayData = WordShingles.Empty
 
   def compute(u: UTF8String): ArrayData = {
-    val toks = u.toString.toLowerCase.split("\\s+", -1)
-    if (toks.length < n) return WordShingles.Empty
-    val seen = new java.util.LinkedHashSet[String]
-    var i = 0
-    while (i <= toks.length - n) {
-      val sb = new java.lang.StringBuilder(toks(i))
-      var j = 1
-      while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-      seen.add(sb.toString)
-      i += 1
-    }
+    val seen = WordShingles.distinct(u.toString, n)
+    if (seen.isEmpty) return WordShingles.Empty
     val out = new Array[Any](seen.size)
     val it = seen.iterator()
     var k = 0
@@ -196,6 +205,22 @@ case class WordShingles(child: Expression, n: Int)
 
 object WordShingles {
   private val Empty = new GenericArrayData(Array.empty[Any])
+
+  /** The distinct shingles of `text`, first-occurrence order; empty when
+    * it has fewer than n tokens. Shared with the md5 [[MinHashSignature]]. */
+  def distinct(text: String, n: Int): java.util.LinkedHashSet[String] = {
+    val toks = text.toLowerCase.split("\\s+", -1)
+    val seen = new java.util.LinkedHashSet[String]
+    var i = 0
+    while (i <= toks.length - n) {
+      val sb = new java.lang.StringBuilder(toks(i))
+      var j = 1
+      while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
+      seen.add(sb.toString)
+      i += 1
+    }
+    seen
+  }
 }
 
 /** Fused non-overlapping token spans — bit-identical to the composable form
@@ -525,6 +550,8 @@ object TextFunctions {
     Registration.ensure(spark, "rolling_fingerprint")(
       exprs => RollingFingerprint(exprs(0)))
     Registration.ensure(spark, "simhash64")(exprs => SimHash64(exprs(0)))
+    Registration.ensure(spark, "simhash64_md5")(
+      exprs => SimHash64(exprs(0), md5 = true))
     Registration.ensure(spark, "word_shingles")(exprs => WordShingles(exprs(0),
       Registration.intArg(exprs(1), "word_shingles", "n")))
     Registration.ensure(spark, "word_spans")(exprs => WordSpans(exprs(0),
@@ -542,9 +569,9 @@ object TextFunctions {
     call_function("rolling_fingerprint", text)
   }
 
-  def simhash(spark: SparkSession, text: Column): Column = {
+  def simhash(spark: SparkSession, text: Column, md5: Boolean = false): Column = {
     register(spark)
-    call_function("simhash64", text)
+    call_function(if (md5) "simhash64_md5" else "simhash64", text)
   }
 
   def wordShingles(spark: SparkSession, text: Column, n: Int): Column = {

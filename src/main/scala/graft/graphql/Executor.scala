@@ -769,14 +769,14 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
       }.getOrElse(0.5)
       val maxBucket = intArg(f, "maxBucket")
         .getOrElse(graft.operators.Dedup.DefaultMaxBucket)
-      val pairs = strArg(f, "hash").getOrElse("xx") match {
-        case "md5" => graft.operators.Dedup.minhashPairsMd5(
-          t.result, on, id, n, k, bands, threshold, maxBucket)
-        case "xx" => graft.operators.Dedup.minhashPairs(
-          t.result, on, id, n, k, bands, threshold, maxBucket)
+      val md5 = strArg(f, "hash").getOrElse("xx") match {
+        case "md5" => true
+        case "xx" => false
         case other => throw new IllegalArgumentException(
           s"nearDedup hash: must be \"xx\" or \"md5\", got \"$other\"")
       }
+      val pairs = graft.operators.Dedup.minhashPairs(
+        t.result, on, id, n, k, bands, threshold, maxBucket, md5)
       resolveTable(GTable(graft.operators.Dedup.keepRepresentatives(
         t.df, pairs, id), denseRid = false), f, None)
     case "semanticDedup" =>

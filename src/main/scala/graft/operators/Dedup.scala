@@ -5,17 +5,22 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication suite for large-scale training-data pipelines.
   *
-  * Everything is pure Column expressions + relational ops — codegen'd,
-  * shuffle-minimal, no UDFs:
+  * Relational ops over Column expressions — the per-document sketches are
+  * fused native expressions (`graft.expressions`), everything is
+  * codegen'd and shuffle-minimal, no UDFs:
   *
   *  - exact: hash-groupBy, one shuffle on the 64-bit text hash
   *  - n-gram Jaccard: shingle-explode + self-join on shingle + count — the
   *    exact pairwise similarity (quadratic only within shared shingles)
-  *  - MinHash+LSH: k seeded permutation hashes over shingles → signatures →
-  *    b bands → bucket join. Candidate generation is linear in input size;
-  *    only same-bucket pairs are verified. The 100 TB path.
-  *  - SimHash: 64-bit weighted-bit fingerprint; banded into 16-bit chunks
-  *    for Hamming-neighbor candidate generation.
+  *  - MinHash+LSH: one fused k-hash signature per doc → b bands → capped
+  *    bucket self-join ([[bandedPairs]]). Candidate generation is linear in
+  *    input size; only same-bucket pairs are verified. The 100 TB path.
+  *  - SimHash: one fused 64-bit weighted-bit fingerprint per doc; banded
+  *    into 16-bit chunks for Hamming-neighbor candidates, same self-join.
+  *
+  * Both sketches come in two hash families: xxhash64 (the throughput
+  * path) and md5 (`md5 = true`, reproducible in any engine with md5, so
+  * the DuckDB oracle adjudicates the whole pipeline hash-exactly).
   */
 object Dedup {
 
@@ -106,29 +111,37 @@ object Dedup {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** MinHash signature as a single expression: k seeded hash mins over the
-    * shingle set. CAUTION: only for one-off column use — inside a k-wide
-    * consumer the shingle subexpression gets re-evaluated per hash (no CSE
-    * across lambdas); minhashPairs uses the relational form instead. */
-  def minhashSignature(text: Column, n: Int, k: Int): Column = {
-    val sh = shinglesComposable(text, n)
-    transform(sequence(lit(0), lit(k - 1)), i =>
-      array_min(transform(sh, s => xxhash64(s, i))))
-  }
-
-  /** MinHash signatures via the fused native expression
+  /** MinHash signatures (id, sig) via the fused native expression
     * ([[graft.expressions.MinHashSignature]]): one compiled pass per doc —
-    * no shingle explode, no shuffle, no wide min-aggregate. The earlier
-    * relational form (explode → k seeded hashes → 64 min accumulators) was
-    * correct but spent its time in interpreted higher-order lambdas and a
-    * 64-wide hash aggregate (~7 s of the 8.6 s sf0.1 bench); the fused
-    * sketch is a plain map stage — the shape a 1000-executor scan wants. */
-  private def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                                n: Int, k: Int): DataFrame =
+    * no shingle explode, no shuffle, no wide min-aggregate (the relational
+    * explode → k seeded hashes → min-aggregate form spent ~7 s of the
+    * 8.6 s sf0.1 bench in interpreted lambdas and a 64-wide aggregate).
+    * `md5` selects the cross-engine reproducible hash family, which the
+    * DuckDB oracles recompute. A doc without shingles gets a null sig,
+    * which bands to no rows. Not filtered here: the optimizer would push
+    * `sig IS NOT NULL` below the projection and sign every doc twice. */
+  private def signaturesFor(df: DataFrame, textCol: String, idCol: String,
+                            n: Int, k: Int, md5: Boolean): DataFrame =
     df.select(col(idCol).as("id"),
-        graft.expressions.MinHashFunctions
-          .signature(df.sparkSession, col(textCol), n, k).as("sig"))
-      .filter(col("sig").isNotNull)
+      graft.expressions.MinHashFunctions
+        .signature(df.sparkSession, col(textCol), n, k, md5).as("sig"))
+
+  /** Banded (band, bucket, id) rows of a signature frame; a null sig
+    * bands to no rows. Bucket is the band slice's join key in its natural
+    * form: the joined string for the md5 family (oracle-recomputable), its
+    * xxhash64 for the fused family (narrower shuffle key). */
+  private def bandedFor(sig: DataFrame, bands: Int, r: Int,
+                        md5: Boolean): DataFrame = {
+    // without the guard a null sig would band as `bands` null slices, and
+    // xxhash64(null) is its seed: every sig-less doc in one bucket
+    val slices = when(col("sig").isNotNull,
+      transform(sequence(lit(0), lit(bands - 1)), b =>
+        array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ",")))
+    val exploded = sig.select(col("id"), posexplode(slices))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
+    if (md5) exploded
+    else exploded.withColumn("bucket", xxhash64(col("bucket")))
+  }
 
   /** Per-(band, bucket) occupancy cap for the banded candidate joins.
     *
@@ -239,6 +252,24 @@ object Dedup {
       (a, b)
     }
 
+  /** The one banded self-join behind the LSH pairs operators: caps
+    * `banded` rows (id, keys…, carry…) per key group ([[capBucketsBy]],
+    * drops recorded under `op`), joins each group with itself on the keys
+    * and `a.id < b.id`, and keeps one row per (id1, id2). A carried column
+    * c comes back as c1 (id1's value) and c2 (id2's). */
+  private[operators] def bandedPairs(banded: DataFrame, keys: Seq[String],
+                                     maxBucket: Int, op: String,
+                                     carry: Seq[String] = Nil): DataFrame = {
+    val (cappedA, cappedB) = capBucketsBy(banded, keys, maxBucket, op)
+    cappedA.as("a").join(cappedB.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col("a.id") < col("b.id"))
+      .select(Seq(col("a.id").as("id1"), col("b.id").as("id2")) ++
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}1"),
+          col(s"b.$c").as(s"${c}2"))): _*)
+      .dropDuplicates("id1", "id2")
+  }
+
   private val BandKeys = Seq("band", "bucket")
 
   /** Diagnostic: the per-(band, bucket) occupancy histogram of the MinHash
@@ -251,11 +282,8 @@ object Dedup {
                            n: Int = 3, k: Int = 64,
                            bands: Int = 16): DataFrame = {
     require(bands > 0 && k % bands == 0, s"k ($k) must be a multiple of bands ($bands)")
-    val r = k / bands
-    minhashSignatures(df, textCol, idCol, n, k)
-      .select(posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-        xxhash64(array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ",")))))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
+    bandedFor(signaturesFor(df, textCol, idCol, n, k, md5 = false),
+        bands, k / bands, md5 = false)
       .groupBy("band", "bucket").count()
   }
 
@@ -264,165 +292,43 @@ object Dedup {
     * candidates are then verified with the exact signature similarity
     * (fraction of equal signature components ≥ threshold).
     *
-    * Scale shape: explode to (band, bucketHash) — b rows per doc — then a
+    * Scale shape: explode to (band, bucket) — b rows per doc — then a
     * shuffle on the bucket key. No quadratic stage outside buckets, and
     * bucket occupancy itself is bounded by `maxBucket` (see
     * [[DefaultMaxBucket]] for the boilerplate-skew rationale).
     *
-    * The result is materialized eagerly (narrow (id1, id2, est_jaccard)
-    * rows, volume bounded by the banded candidate count) so the signature
-    * cache is scoped to this call — a long-lived serving process must not
-    * accumulate pinned frames across requests. */
+    * The result is lazy: the signatures are read through ONE exchange on
+    * id that the band explode and both verification joins share (a reused
+    * exchange), so the signature pass runs once with no cache to scope.
+    * `md5` selects the cross-engine reproducible family: md5 signature
+    * components and string band buckets, every value recomputable by the
+    * DuckDB oracle (q_dedup_minhash_md5); the cap drops record under
+    * `minhashPairsMd5`. */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 3, k: Int = 64, bands: Int = 16,
                    threshold: Double = 0.7,
-                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
+                   maxBucket: Int = DefaultMaxBucket,
+                   md5: Boolean = false): DataFrame = {
     require(bands > 0 && k % bands == 0,
       s"k ($k) must be a positive multiple of bands ($bands): a remainder " +
         "would silently exclude trailing signature components from banding")
-    val r = k / bands
-    // consumed 3x (banding + two verification joins): persist the narrow
-    // signature frame — the local analog of materializing a signature table,
-    // which is how a 100 TB pipeline would amortize it across runs
-    val sig = minhashSignatures(df, textCol, idCol, n, k).persist()
-    try {
-      // band join and dedup on bare (band, bucket, id) rows — signatures
-      // (64 longs each) are re-joined only for the surviving candidates, so
-      // the wide payload never rides the candidate-generation shuffle
-      val (cappedA, cappedB) = capBucketsBy(sig.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          xxhash64(array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ",")))))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-        BandKeys, maxBucket, "minhashPairs")
-      val cand = cappedA.as("a").join(cappedB.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .dropDuplicates("id1", "id2")
-      val withSigs = cand
-        .join(sig.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
-        .join(sig.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
-      withSigs.withColumn("est_jaccard",
-          size(filter(zip_with(col("sig1"), col("sig2"), (x, y) => x === y),
-            b => b)) / lit(k.toDouble))
-        .filter(col("est_jaccard") >= threshold)
-        .select("id1", "id2", "est_jaccard")
-        .localCheckpoint(eager = true)
-    } finally sig.unpersist(blocking = false)
-  }
-
-  /** md5-derived 60-bit hash of a seeded string — reproducible in ANY
-    * engine with md5, unlike the xxhash64 family, so correctness oracles
-    * can recompute it relationally. The xxhash64 variants stay the
-    * throughput path. */
-  def md5Hash60(c: Column, seed: Column): Column =
-    Hashing.md5Long(concat(seed.cast("string"), lit(":"), c))
-
-  /** md5-permutation MinHash signatures (id, sig): the oracle-reproducible
-    * twin of [[minhashSignatures]] — k seeded md5 mins over the shingle
-    * set, sorted by seed. Shared by [[minhashPairsMd5]] and the md5 mode
-    * of [[minhashIndexBuild]]. */
-  private def md5Signatures(df: DataFrame, textCol: String, idCol: String,
-                            n: Int, k: Int): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-      explode(shingles(df.sparkSession, col(textCol), n)).as("sh"))
-    sh.select(col("id"),
-        explode(sequence(lit(0), lit(k - 1))).as("seed"), col("sh"))
-      .select(col("id"), col("seed"), md5Hash60(col("sh"), col("seed")).as("h"))
-      .groupBy("id", "seed").agg(min(col("h")).as("m"))
-      .groupBy("id")
-      .agg(transform(array_sort(collect_list(struct(col("seed"), col("m")))),
-        x => x.getField("m")).as("sig"))
-  }
-
-  /** MinHash+LSH pairs with md5-derived permutation hashes: identical
-    * algorithm to [[minhashPairs]] (k per-shingle hash mins → signature →
-    * b bands → bucket join → equal-component verification), but every value
-    * is cross-engine reproducible, so the full pipeline is adjudicated by
-    * the DuckDB oracle rather than rows-only. Band buckets join on the
-    * slice's joined string (no second-level hash) for the same reason.
-    * Slower than the fused sketch (k md5 calls per shingle) — verification
-    * tier, not the 100 TB path; the relational shape (narrow shuffles,
-    * banded candidates, no all-pairs stage) is the same. */
-  def minhashPairsMd5(df: DataFrame, textCol: String, idCol: String,
-                      n: Int = 3, k: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.5,
-                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(bands > 0 && k % bands == 0,
-      s"k ($k) must be a positive multiple of bands ($bands): a remainder " +
-        "would silently exclude trailing signature components from banding")
-    val r = k / bands
-    // consumed 3x (banding + two verification joins): persist, as
-    // minhashPairs does — the k-seeded md5 aggregation is the dominant cost
-    // and must not run three times
-    val sig = md5Signatures(df, textCol, idCol, n, k).persist()
-    try {
-      val (cappedA, cappedB) = capBucketsBy(sig.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ","))))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-        BandKeys, maxBucket, "minhashPairsMd5")
-      val cand = cappedA.as("a").join(cappedB.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .dropDuplicates("id1", "id2")
-      cand
-        .join(sig.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
-        .join(sig.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
-        .withColumn("est_jaccard",
-          size(filter(zip_with(col("sig1"), col("sig2"), (x, y) => x === y),
-            b => b)) / lit(k.toDouble))
-        .filter(col("est_jaccard") >= threshold)
-        .select("id1", "id2", "est_jaccard")
-        .localCheckpoint(eager = true)
-    } finally sig.unpersist(blocking = false)
-  }
-
-  /** SimHash pairs with md5-derived per-token bits: token bit b comes from
-    * two 60-bit md5 folds (bits 0-59 from hex digits 1-15, 60-63 from
-    * digits 16-30), bit-counters aggregate map-side (64 sums), and the
-    * banding/Hamming stage matches [[simhashPairs]]. Cross-engine
-    * reproducible end to end — the oracle keeps the bits as a list and
-    * compares slices, which is equality-equivalent to the packed-long
-    * banding here. */
-  def simhashPairsMd5(df: DataFrame, textCol: String, idCol: String,
-                      maxHamming: Int = 3,
-                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val tok = df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("t"))
-    val hv = tok.select(col("id"),
-      conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("v1"),
-      conv(substring(md5(col("t")), 16, 15), 16, 10).cast("long").as("v2"))
-    val sums = (0 until 64).map { b =>
-      val (src, sh) = if (b < 60) (col("v1"), b) else (col("v2"), b - 60)
-      val bit = shiftrightunsigned(src, sh).bitwiseAND(lit(1L))
-      sum(when(bit === 1, 1).otherwise(-1)).as(s"_c$b")
-    }
-    val packed = (0 until 64).foldLeft(lit(0L))((acc, b) =>
-      shiftleft(acc, 1).bitwiseOR(
-        when(col(s"_c$b") >= 0, lit(1L)).otherwise(lit(0L))))
-    // the fingerprint frame feeds both sides of the self-join — persist so
-    // the md5-fold + 64-counter aggregation runs once
-    val fp = hv.groupBy("id").agg(sums.head, sums.tail: _*)
-      .select(col("id"), packed.as("sh"))
-      .persist()
-    try {
-      val (cappedA, cappedB) = capBucketsBy(fp.select(col("id"), col("sh"),
-        posexplode(array((0 until 4).map(b =>
-          shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-        BandKeys, maxBucket, "simhashPairsMd5")
-      val cand = cappedA.as("a").join(cappedB.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"),
-          col("a.sh").as("sh1"), col("b.sh").as("sh2"))
-        .dropDuplicates("id1", "id2")
-      cand.withColumn("hamming", bit_count(col("sh1").bitwiseXOR(col("sh2"))))
-        .filter(col("hamming") <= maxHamming)
-        .select("id1", "id2", "hamming")
-        .localCheckpoint(eager = true)
-    } finally fp.unpersist(blocking = false)
+    // a null id never pairs (a.id < b.id); filtering it up front also keeps
+    // the verification joins' inferred null filters off the exchange input,
+    // which the three readers must share verbatim to reuse it
+    val sig = signaturesFor(df, textCol, idCol, n, k, md5)
+      .filter(col("id").isNotNull).repartition(col("id"))
+    // band join and dedup on bare (band, bucket, id) rows — signatures are
+    // re-joined only for the surviving candidates, so the wide payload
+    // never rides the candidate-generation shuffle
+    bandedPairs(bandedFor(sig, bands, k / bands, md5), BandKeys, maxBucket,
+        if (md5) "minhashPairsMd5" else "minhashPairs")
+      .join(sig.select(col("id").as("id1"), col("sig").as("sig1")), Seq("id1"))
+      .join(sig.select(col("id").as("id2"), col("sig").as("sig2")), Seq("id2"))
+      .withColumn("est_jaccard",
+        size(filter(zip_with(col("sig1"), col("sig2"), (x, y) => x === y),
+          b => b)) / lit(k.toDouble))
+      .filter(col("est_jaccard") >= threshold)
+      .select("id1", "id2", "est_jaccard")
   }
 
   /** 64-bit SimHash over tokens: bit b is set iff the sum over tokens of
@@ -453,24 +359,28 @@ object Dedup {
     * candidate; verified by Hamming distance ≤ maxHamming. Bucket occupancy
     * bounded by `maxBucket` ([[DefaultMaxBucket]] — 16-bit SimHash bands are
     * especially collision-prone on boilerplate corpora). The fingerprint
-    * frame is a single fused-expression scan (cheap to recompute), so no
-    * persist is needed here. */
+    * is a single fused-expression scan ([[graft.expressions.SimHash64]])
+    * that rides the candidate rows, so nothing is cached or re-joined.
+    * `md5` selects the cross-engine reproducible per-token bits (the oracle
+    * keeps them as a list and compares slices, equality-equivalent to the
+    * packed-long banding); its cap drops record under `simhashPairsMd5`.
+    * A doc with a null text has no fingerprint and bands to no rows. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3,
-                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val sig = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
-    val (cappedA, cappedB) = capBucketsBy(sig.select(col("id"), col("sh"),
-      posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket")),
-      BandKeys, maxBucket, "simhashPairs")
-    val cand = cappedA.as("a").join(cappedB.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        col("a.sh").as("sh1"), col("b.sh").as("sh2"))
-      .dropDuplicates("id1", "id2")
-    cand.withColumn("hamming", bit_count(col("sh1").bitwiseXOR(col("sh2"))))
+                   maxBucket: Int = DefaultMaxBucket,
+                   md5: Boolean = false): DataFrame = {
+    // guarded, not filtered: a pushed-down `sh IS NOT NULL` would compute
+    // every fingerprint twice (see signaturesFor)
+    val banded = df.select(col(idCol).as("id"),
+        graft.expressions.TextFunctions.simhash(df.sparkSession,
+          col(textCol), md5).as("sh"))
+      .select(col("id"), col("sh"),
+        posexplode(when(col("sh").isNotNull, array((0 until 4).map(b =>
+          shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
+    bandedPairs(banded, BandKeys, maxBucket,
+        if (md5) "simhashPairsMd5" else "simhashPairs", carry = Seq("sh"))
+      .withColumn("hamming", bit_count(col("sh1").bitwiseXOR(col("sh2"))))
       .filter(col("hamming") <= maxHamming)
       .select("id1", "id2", "hamming")
   }
@@ -733,25 +643,6 @@ object Dedup {
       .groupBy("band", "bucket").agg(sum("count").cast("long").as("count"))
   }
 
-  private def signaturesFor(df: DataFrame, textCol: String, idCol: String,
-                            n: Int, k: Int, md5: Boolean): DataFrame =
-    if (md5) md5Signatures(df, textCol, idCol, n, k)
-    else minhashSignatures(df, textCol, idCol, n, k)
-
-  /** Banded (band, bucket, id) rows of a signature frame. Bucket is the
-    * band slice's join key in its natural form: the joined string for the
-    * md5 family (oracle-recomputable), its xxhash64 for the fused family
-    * (narrower shuffle key, matches [[minhashPairs]]). */
-  private def bandedFor(sig: DataFrame, bands: Int, r: Int,
-                        md5: Boolean): DataFrame = {
-    val slices = transform(sequence(lit(0), lit(bands - 1)), b =>
-      array_join(slice(col("sig"), b * lit(r) + 1, lit(r)), ","))
-    val exploded = sig.select(col("id"), posexplode(slices))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
-    if (md5) exploded
-    else exploded.withColumn("bucket", xxhash64(col("bucket")))
-  }
-
   /** Build-once/probe-many near-dup index: the corpus's MinHash
     * signatures and banded rows written ONCE, so incremental ingestion
     * never re-reads corpus text or re-runs its signature pass (the
@@ -796,7 +687,7 @@ object Dedup {
         val occ = banded.groupBy("band", "bucket").count()
           .withColumn("_seg", lit(BaseSeg))
         occ.write.mode("overwrite").parquet(s"$path/occ")
-        val sigs = sig.withColumn("_sp",
+        val sigs = sig.filter(col("sig").isNotNull).withColumn("_sp",
           pmod(xxhash64(col("id").cast("string")), lit(slots)))
         sigs.repartition(col("_sp"))
           .write.mode("overwrite").partitionBy("_sp").parquet(s"$path/sigs")
@@ -964,7 +855,7 @@ object Dedup {
       val sig = signaturesFor(segment, index.textCol, index.idCol,
         index.n, index.k, index.md5).persist()
       try {
-        sig.withColumn("_sp",
+        sig.filter(col("sig").isNotNull).withColumn("_sp",
             pmod(xxhash64(col("id").cast("string")), lit(index.slots)))
           .write.mode("append").partitionBy("_sp")
           .parquet(s"${index.path}/sigs")

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** The ONE cross-engine hash primitive: a slice of md5 hex digits folded to
   * a long. Every probabilistic operator that needs oracle adjudication
-  * (sampling buckets, MinHash/SimHash twins, LSH planes, multimodal
-  * headers) derives from this, and every DuckDB oracle mirrors the same
-  * fold with list_reduce over strpos('0123456789abcdef', …).
+  * (sampling buckets, LSH planes, multimodal headers) derives from this,
+  * the md5 families of the fused MinHash/SimHash sketches compute the same
+  * fold over the raw digest, and every DuckDB oracle mirrors it with
+  * list_reduce over strpos('0123456789abcdef', …).
   *
   * INVARIANT: `len` ≤ 15 hex digits (60 bits) so the value fits a signed
   * long exactly in BOTH engines — widening a slice past 15 digits silently

@@ -1275,14 +1275,9 @@ object Similarity {
     // distinct pairs, exactly like minhashPairs re-joins signatures
     // post-dedup, so the candidate shuffle never carries the embedding
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val (cappedA, cappedB) = Dedup.capBucketsBy(
-      df.select(col(idCol).as("id"),
-        explode(array(buckets: _*)).as("_bucket")),
-      Seq("_bucket"), maxBucket, "lshCosinePairs")
-    cappedA.as("a").join(cappedB.as("b"),
-        col("a._bucket") === col("b._bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .dropDuplicates("id1", "id2")
+    Dedup.bandedPairs(
+        df.select(col(idCol).as("id"), explode(array(buckets: _*)).as("_bucket")),
+        Seq("_bucket"), maxBucket, "lshCosinePairs")
       .join(v.select(col("id").as("id1"), col("v").as("v1")), Seq("id1"))
       .join(v.select(col("id").as("id2"), col("v").as("v2")), Seq("id2"))
       .select(col("id1"), col("id2"),

@@ -113,8 +113,8 @@ object PipelineQueries {
     "q_dedup_minhash_md5",
     (s, dir) => {
       val d = Tables.load(s, dir, "documents")
-      GTable(Dedup.minhashPairsMd5(d, "text", "doc_id", n = 3, k = 32,
-          bands = 8, threshold = 0.5))
+      GTable(Dedup.minhashPairs(d, "text", "doc_id", n = 3, k = 32,
+          bands = 8, threshold = 0.5, md5 = true))
         .order(GTable.orderKeys(Seq("id1", "id2")))
         .result
     },
@@ -180,10 +180,6 @@ object PipelineQueries {
   private def mhIdxDir(dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_mh_idx/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
 
-  /** Shared oracle CTE block: the md5-permutation MinHash+LSH pipeline
-    * (mirror of Dedup.minhashPairsMd5 — seeded shingle hash mins →
-    * signature → banding → bucket join → equal-component verification),
-    * ending in `pairs(id1, id2, est_jaccard)`. */
   /** Shared oracle CTE prefix: md5-permutation signatures + banding for
     * every document, ending in `sig(id, sg)` and `banded(id, band,
     * bucket)`. Used by the self-join ([[minhashMd5PairsSql]]) and the
@@ -218,6 +214,10 @@ object PipelineQueries {
        |  FROM sig, (SELECT unnest(range(0, $bands)) AS band) bands)""".stripMargin
   }
 
+  /** Self-join tail of the md5 MinHash oracle: the relational mirror of
+    * Dedup.minhashPairs(md5 = true) — banding → capped bucket join →
+    * equal-component verification, ending in `pairs(id1, id2,
+    * est_jaccard)`. */
   private def minhashMd5PairsSql(k: Int, bands: Int, threshold: Double): String = {
     s"""${minhashMd5BandedSql(k, bands)},
        |hotb AS (SELECT band, bucket FROM banded GROUP BY band, bucket
@@ -373,7 +373,8 @@ object PipelineQueries {
     "q_dedup_simhash_md5",
     (s, dir) => {
       val d = Tables.load(s, dir, "documents")
-      GTable(Dedup.simhashPairsMd5(d, "text", "doc_id", maxHamming = 3))
+      GTable(Dedup.simhashPairs(d, "text", "doc_id", maxHamming = 3,
+          md5 = true))
         .project("hamming" -> col("hamming").cast("int"))
         .order(GTable.orderKeys(Seq("id1", "id2")))
         .result

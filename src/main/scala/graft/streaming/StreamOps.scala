@@ -461,13 +461,9 @@ object StreamOps {
         if (idx == null) batch
         else Dedup.minhashDedupFilter(idx, batch, threshold, maxBucket)
       // within-batch near-dedup: keep each cluster's smallest id
-      val pairs =
-        if (md5) Dedup.minhashPairsMd5(afterCorpus, textCol, idCol,
-          n = n, k = k, bands = bands, threshold = threshold,
-          maxBucket = maxBucket)
-        else Dedup.minhashPairs(afterCorpus, textCol, idCol,
-          n = n, k = k, bands = bands, threshold = threshold,
-          maxBucket = maxBucket)
+      val pairs = Dedup.minhashPairs(afterCorpus, textCol, idCol,
+        n = n, k = k, bands = bands, threshold = threshold,
+        maxBucket = maxBucket, md5 = md5)
       val nonReps = Dedup.clusters(pairs)
         .filter(col("cl") =!= col("id")).select(col("id").as(idCol))
       val survivors = afterCorpus.join(nonReps, Seq(idCol), "left_anti")

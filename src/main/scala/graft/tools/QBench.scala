@@ -32,8 +32,9 @@ object QBench {
       Seq("q_window_rank", "q_window_rank_dist", "q_window_rank_counts"), "sf0.1"),
     // serial vs distributed runs, and filter → densify → distributed runs
     Scenario("runs", Seq("q_runs", "q_runs_dist", "q_runs_filtered"), "sf0.1"),
-    Scenario("dedup_md5",
-      Seq("q_dedup_minhash", "q_dedup_minhash_md5", "q_dedup_simhash_md5"), "sf0.1"),
+    // each md5 near-dup query next to its xxhash64 twin
+    Scenario("dedup_md5", Seq("q_dedup_minhash", "q_dedup_minhash_md5",
+      "q_dedup_simhash", "q_dedup_simhash_md5"), "sf0.1"),
     // the exact profile with the distributed order-statistic selection
     // forced (below its default 256 MB input bar the single-map
     // percentile runs); compare with `QBench 3 q_profile`

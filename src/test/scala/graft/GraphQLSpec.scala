@@ -249,6 +249,12 @@ class GraphQLSpec extends SparkSpec {
     // sides are metered and the executor collects the request's drops
     assert(r.contains(""""buckets":16""") && r.contains(""""rows":640"""),
       s"expected 16 dropped buckets / 640 rows: $r")
+    // the md5 family caps the same buckets and records under its own op
+    val m = service.execute(
+      """{ s: sql(query: "SELECT o_orderkey AS doc_id, 'boilerplate cookie banner text accept terms' AS text FROM orders LIMIT 40") {
+           d: nearDedup(on: "text", id: "doc_id", maxBucket: 10, hash: "md5") { count } } }""")
+    assert(m.contains(""""cap_drops":{"minhashPairsMd5":{"buckets":16,"rows":640}}"""),
+      s"expected minhashPairsMd5 drops of 16 buckets / 640 rows: $m")
     // a request whose caps drop nothing serves NO cap_drops key
     val clean = service.execute("{ nation { count } }")
     assert(!clean.contains("cap_drops"))

@@ -45,8 +45,11 @@ class PipelineSpec extends SparkSpec {
     val nearB = "the quick brown fox jumps over the lazy dog again and again tomorrow"
     val filler = (1L to 10L).map(i =>
       (1000L + i, s"unique filler document number $i with totally distinct words ${i * 7} ${i * 13} ${i * 29}"))
+    // 20 docs under n = 3 tokens have no shingles, so no signature: they
+    // must not band (into one shared bucket, say) or count toward the cap
+    val short = (1L to 20L).map(i => (2000L + i, s"short $i"))
     val df = ((1L to 40L).map(i => (i, boiler)) ++
-      Seq((100L, nearA), (101L, nearB)) ++ filler).toDF("doc_id", "text")
+      Seq((100L, nearA), (101L, nearB)) ++ filler ++ short).toDF("doc_id", "text")
     val (capped, drops) = Dedup.collectCapDrops {
       Dedup.minhashPairs(df, "text", "doc_id", threshold = 0.5,
         maxBucket = 10)
@@ -84,13 +87,15 @@ class PipelineSpec extends SparkSpec {
       maxBucket = 0)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(withCap == noCap)
-    // the signature persist is scoped to the call: nothing left pinned in
-    // the cache manager after repeated pairs calls (serving hygiene)
+    // nothing left pinned in the cache manager after repeated pairs calls
+    // of either hash family (serving hygiene)
     Dedup.simhashPairs(df, "text", "doc_id", maxBucket = 10).collect()
-    Dedup.minhashPairsMd5(df, "text", "doc_id", maxBucket = 10).collect()
-    Dedup.simhashPairsMd5(df, "text", "doc_id", maxBucket = 10).collect()
+    Dedup.minhashPairs(df, "text", "doc_id", k = 32, bands = 8,
+      threshold = 0.5, maxBucket = 10, md5 = true).collect()
+    Dedup.simhashPairs(df, "text", "doc_id", maxBucket = 10, md5 = true)
+      .collect()
     assert(spark.sharedState.cacheManager.isEmpty,
-      "pairs operators must unpersist their signature caches")
+      "pairs operators must not leave cached frames behind")
   }
 
   test("lshCosinePairs bucket cap bounds dense embedding clusters; inactive on normal data") {
@@ -143,15 +148,17 @@ class PipelineSpec extends SparkSpec {
     def executions(body: => Unit): Int =
       org.apache.spark.sql.graft.Executions.count(spark)(body)
     val left = embs.filter(col("vec_id") % 10 === 3)
-    // the pairs operators that checkpoint eagerly run their action at call
-    // time; the lazy ones run on the consumer's collect. A driver-side cap
-    // (a hot-list collect before the self-join) would add one execution.
+    // every pairs operator is lazy and runs on the consumer's collect. A
+    // driver-side cap (a hot-list collect before the self-join) or an eager
+    // signature checkpoint would add one execution.
     val budget = Map(
-      "minhashPairs" -> executions(Dedup.minhashPairs(docs, "text", "doc_id")),
+      "minhashPairs" -> executions(
+        Dedup.minhashPairs(docs, "text", "doc_id").collect()),
       "minhashPairsMd5" -> executions(
-        Dedup.minhashPairsMd5(docs, "text", "doc_id")),
+        Dedup.minhashPairs(docs, "text", "doc_id", k = 32, bands = 8,
+          threshold = 0.5, md5 = true).collect()),
       "simhashPairsMd5" -> executions(
-        Dedup.simhashPairsMd5(docs, "text", "doc_id")),
+        Dedup.simhashPairs(docs, "text", "doc_id", md5 = true).collect()),
       "simhashPairs" -> executions(
         Dedup.simhashPairs(docs, "text", "doc_id").collect()),
       "lshCosinePairs" -> executions(
@@ -357,7 +364,8 @@ class PipelineSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Dedup.minhashPairs(docs, "text", "doc_id", k = 30, bands = 8))
     intercept[IllegalArgumentException](
-      Dedup.minhashPairsMd5(docs, "text", "doc_id", k = 30, bands = 8))
+      Dedup.minhashPairs(docs, "text", "doc_id", k = 30, bands = 8,
+        md5 = true))
   }
 
   test("clusters: hash-min label propagation finds connected components") {

@@ -135,33 +135,69 @@ class PlanGuardSpec extends SparkSpec {
       // keys, so it rides the ONE shuffle the self-join needs — each side
       // reuses it, and no broadcast appears (AQE off: the reuse is decided
       // at planning time, so executedPlan shows it)
+      import graft.operators.Dedup
       val docs = graft.core.Tables.load(spark, sf, "documents")
       val aqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
+      def hashOn(e: ShuffleExchangeExec, keys: Set[String]) =
+        e.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.flatMap(_.references.map(_.name)).toSet == keys
+          case _ => false
+        }
+      // plan nodes that evaluate a fused sketch: exactly one per pairs plan
+      // (a null filter pushed below the sketch's projection makes it two,
+      // and every document is signed twice)
+      def sketches(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+        case n if n.expressions.exists(_.exists {
+          case _: graft.expressions.MinHashSignature => true
+          case _: graft.expressions.SimHash64 => true
+          case _ => false
+        }) => n }
       try {
-        Seq(
+        val banded = Seq(
+          ("minhashPairs", Set("band", "bucket"),
+            Dedup.minhashPairs(docs, "text", "doc_id")),
+          ("minhashPairs md5", Set("band", "bucket"),
+            Dedup.minhashPairs(docs, "text", "doc_id", k = 32, bands = 8,
+              md5 = true)),
           ("simhashPairs", Set("band", "bucket"),
-            graft.operators.Dedup.simhashPairs(docs, "text", "doc_id")),
+            Dedup.simhashPairs(docs, "text", "doc_id")),
+          ("simhashPairs md5", Set("band", "bucket"),
+            Dedup.simhashPairs(docs, "text", "doc_id", md5 = true)),
           ("lshCosinePairs", Set("_bucket"),
             graft.operators.Similarity.lshCosinePairs(embs, "vec_id",
-              "embedding", 0.2, planes = 4, dim = 64))
-        ).foreach { case (op, keys, df) =>
+              "embedding", 0.2, planes = 4, dim = 64)))
+        banded.foreach { case (op, keys, df) =>
           val plan = df.queryExecution.executedPlan
           val bcast = plan.collect {
             case b: BroadcastHashJoinExec => b
             case b: BroadcastNestedLoopJoinExec => b }
           assert(bcast.isEmpty, s"$op plans a broadcast join: $bcast")
           val onKeys = plan.collect {
-            case e: ShuffleExchangeExec if (e.outputPartitioning match {
-              case h: HashPartitioning =>
-                h.expressions.flatMap(_.references.map(_.name)).toSet == keys
-              case _ => false
-            }) => e }
+            case e: ShuffleExchangeExec if hashOn(e, keys) => e }
           assert(onKeys.size == 1,
             s"$op must plan exactly one (reused) shuffle on $keys:\n$plan")
           assert(plan.collect { case r: ReusedExchangeExec => r.child }
               .contains(onKeys.head),
             s"$op's second self-join side must reuse the bucket shuffle:\n$plan")
+          assert(sketches(plan).size == (if (op == "lshCosinePairs") 0 else 1),
+            s"$op must evaluate its sketch in one plan node:\n$plan")
+        }
+        // minhash: the signature pass runs once, under ONE exchange on id
+        // that the band explode and both verification joins read (the
+        // other two readers reuse it; ReusedExchangeExec is a leaf, so
+        // collect never descends into a reused copy)
+        banded.filter(_._1.startsWith("minhash")).foreach { case (op, _, df) =>
+          val plan = df.queryExecution.executedPlan
+          val onId = plan.collect {
+            case e: ShuffleExchangeExec if hashOn(e, Set("id")) => e }
+          assert(onId.size == 1, s"$op must plan one shuffle on id:\n$plan")
+          assert(sketches(onId.head) == sketches(plan),
+            s"$op must evaluate minhash_sig only under the id shuffle:\n$plan")
+          assert(plan.collect { case r: ReusedExchangeExec => r.child }
+              .count(_ == onId.head) == 2,
+            s"$op's verification joins must reuse the id shuffle:\n$plan")
         }
       } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -22,6 +22,13 @@ class QBenchSpec extends SparkSpec {
       assert(r.parity.forall(_.ok), r.parity)
     }
 
+  test("the forked test JVM's default charset is UTF-8") {
+    // under a POSIX locale JDK 17 defaults to US-ASCII, and every forked
+    // main then prints non-ASCII stdout as '?'
+    assert(java.nio.charset.Charset.defaultCharset ==
+      java.nio.charset.StandardCharsets.UTF_8)
+  }
+
   test("two same-oracle arms that disagree fail the parity check") {
     val oracle = Some("SELECT id FROM t")
     val registry = Seq(

@@ -17,6 +17,86 @@ class VectorExprSpec extends SparkSpec {
     assert(both.filter(!(col("fused") <=> col("composed"))).count() == 0)
   }
 
+  test("md5 MinHash and SimHash arms are bit-identical to the relational md5 formulas") {
+    import graft.operators.Dedup
+    import graft.expressions.{MinHashFunctions, TextFunctions}
+    import org.apache.spark.sql.DataFrame
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    def md5Long(c: org.apache.spark.sql.Column, from: Int) =
+      conv(substring(md5(c), from, 15), 16, 10).cast("long")
+    // references: the relational md5 pipelines over (id, text) — explode,
+    // hash, aggregate; a doc without shingles/tokens has no row
+    def minhashRef(df: DataFrame, n: Int, k: Int): DataFrame =
+      df.select(col("id"), explode(Dedup.shingles(spark, col("text"), n)).as("sh"))
+        .select(col("id"), explode(sequence(lit(0), lit(k - 1))).as("seed"),
+          col("sh"))
+        .select(col("id"), col("seed"),
+          md5Long(concat(col("seed").cast("string"), lit(":"), col("sh")), 1)
+            .as("h"))
+        .groupBy("id", "seed").agg(min(col("h")).as("m"))
+        .groupBy("id")
+        .agg(transform(array_sort(collect_list(struct(col("seed"), col("m")))),
+          x => x.getField("m")).as("ref"))
+    def simhashRef(df: DataFrame): DataFrame = {
+      val hv = df.select(col("id"), explode(split(lower(col("text")), "\\s+")).as("t"))
+        .select(col("id"), md5Long(col("t"), 1).as("v1"), md5Long(col("t"), 16).as("v2"))
+      val sums = (0 until 64).map { b =>
+        val (src, sh) = if (b < 60) (col("v1"), b) else (col("v2"), b - 60)
+        sum(when(shiftrightunsigned(src, sh).bitwiseAND(lit(1L)) === 1, 1)
+          .otherwise(-1)).as(s"_c$b")
+      }
+      val packed = (0 until 64).foldLeft(lit(0L))((acc, b) =>
+        shiftleft(acc, 1).bitwiseOR(
+          when(col(s"_c$b") >= 0, lit(1L)).otherwise(lit(0L))))
+      hv.groupBy("id").agg(sums.head, sums.tail: _*)
+        .select(col("id"), packed.as("ref"))
+    }
+    // fused null ⇔ no reference row; otherwise the values must be equal
+    def mismatches(fused: DataFrame, ref: DataFrame): Long =
+      fused.join(ref, Seq("id"), "full_outer")
+        .filter(!(col("fused") <=> col("ref"))).count()
+
+    val edge = Seq(null, "", " ", "\t", " \n  ", "a", "a b", " a b c",
+      "a b c ", "a  b   c  d", "  lead and trail  ", "one two three",
+      "a b a b a b a b", "x y z x y z x y z", "Hello WORLD hello world HELLO",
+      "naïve café déjà vu", "東京 タワー 日本語 の テキスト", "emoji 😀 text 😀 here",
+      "Straße STRASSE straße", "ǅemal ÅNGSTRÖM", "a\u00a0b c")
+    val token = Gen.oneOf("the", "a", "Of", "near", "dup", "x", "X", "naïve",
+      "café", "東京", "😀", "ÅNG", "straße", "ǅ", "a\u00a0b", "")
+    val sep = Gen.oneOf(" ", "  ", "\t", "\n", " \t ")
+    val text = for {
+      len <- Gen.choose(0, 12)
+      toks <- Gen.listOfN(len, token)
+      seps <- Gen.listOfN(len + 1, sep)
+      lead <- Gen.oneOf("", " ", "\t")
+      trail <- Gen.oneOf("", " ", "\n")
+    } yield lead + toks.zip(seps).map { case (t, s) => t + s }.mkString.trim + trail
+    val sampled = Gen.listOfN(300, text)
+      .pureApply(Gen.Parameters.default, Seed(20261019L))
+    // the sf0.01 corpus next to the suite's sf0.001 one
+    val docs = Tables.load(spark, new java.io.File(sf).getParent + "/sf0.01",
+        "documents")
+      .select(col("doc_id").as("id"), col("text"))
+    val all = docs.union((edge ++ sampled).zipWithIndex
+      .map { case (t, i) => (-1L - i, t) }.toDF("id", "text"))
+    for ((n, k) <- Seq((3, 32), (1, 8), (5, 16))) {
+      val fused = all.select(col("id"),
+        MinHashFunctions.signature(spark, col("text"), n, k, md5 = true).as("fused"))
+      assert(fused.filter(col("fused").isNotNull).count() > docs.count() / 2,
+        s"n=$n: the md5 MinHash arm must sign most documents")
+      assert(mismatches(fused, minhashRef(all, n, k)) == 0,
+        s"md5 MinHash mismatch at n=$n, k=$k")
+    }
+    val fused = all.select(col("id"),
+      TextFunctions.simhash(spark, col("text"), md5 = true).as("fused"))
+    assert(mismatches(fused, simhashRef(all)) == 0, "md5 SimHash mismatch")
+    // the families differ: md5 = true is not a silent alias of xxhash
+    assert(all.filter(TextFunctions.simhash(spark, col("text"), md5 = true) =!=
+      TextFunctions.simhash(spark, col("text"))).count() > 0)
+  }
+
   test("RollingFingerprint is bit-identical to the composable fold") {
     import graft.core.Tables
     import graft.operators.TextAnalysis
