@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Inverted posting-list index over whitespace tokens — the keyword-search
   * counterpart of the MinHash/ANN prebuilt-index tier. A "find every
@@ -19,27 +19,32 @@ import org.apache.spark.sql.types.StructType
   * Tokenization is the engine's standard whitespace form
   * ([[TextAnalysis.tokens]]: split(lower(text), "\\s+")), so the DuckDB
   * oracle recomputes membership exactly and results compose with the
-  * vocab/tf-idf/dedup tiers. Postings store one row per DISTINCT term per
-  * document — multiplicity lives in the tf-idf tier, not here.
+  * vocab/tf-idf/dedup tiers. Both layouts store ONE row per (term, doc):
+  * plain `(id, term, _tb)`, positional `(id, term, tf, len, pos, _tb)`
+  * with the term's sorted 0-based positions inline (`tf = size(pos)`) and
+  * the doc's token length. Membership probes read `(id, term)` of either
+  * layout, BM25 reads `(id, term, tf, len)` with `pos` pruned, and phrase
+  * probes read the position arrays.
   *
   * Maintenance follows the family protocol: [[textIndexAppend]] writes new
-  * segments into the same bucket partitions (at-least-once tolerant — the
-  * posting set is idempotent under replay because probes aggregate by
-  * distinct doc), [[textIndexCompact]] rewrites one-file-per-bucket via the
-  * IndexMaint swap, and [[textIndexFor]] is the fingerprint-keyed
-  * build-once/probe-many cache the serving layer uses.
+  * segments into the same bucket partitions (at-least-once tolerant — a
+  * replayed segment repeats its (term, doc) rows, and probes collapse them:
+  * distinct terms, max tf, unioned positions), [[textIndexCompact]] rewrites
+  * one-file-per-bucket via the IndexMaint swap with the repeats merged,
+  * and [[textIndexFor]] is the fingerprint-keyed build-once/probe-many
+  * cache the serving layer uses.
   */
 object TextSearch {
 
   /** Re-openable index handle; persisted as the `_graft_index_meta.bin`
-    * sidecar inside the tree (Similarity.writeMeta). `positional` indexes
-    * store one posting per token OCCURRENCE with its 0-based position and
-    * the doc's token length (enabling [[phraseIds]] and [[rankedSearch]]);
-    * plain indexes store one per DISTINCT term per doc (smaller;
-    * membership searches only). `docs`/`totalLen` are the corpus stats a
-    * BM25 probe needs (document count and summed token length over docs
-    * with text), maintained by build/append/merge and recomputed exactly
-    * from the tree at compaction. */
+    * sidecar inside the tree (Similarity.writeMeta). `schema` is the row
+    * schema of the tree: plain rows `(id, term, _tb)` serve membership
+    * searches only; `positional` rows add the doc's token length and the
+    * term's positions (enabling [[phraseIds]] and [[rankedSearch]]).
+    * `docs`/`totalLen` are the corpus stats a BM25 probe needs (document
+    * count and summed token length over docs with a non-blank token),
+    * measured by the pass that writes a build or an append, summed by
+    * merge and recounted from the tree at compaction. */
   @SerialVersionUID(1L)
   final case class TextIndex(path: String, idCol: String, buckets: Int,
                              schema: StructType, positional: Boolean = false,
@@ -59,130 +64,133 @@ object TextSearch {
     terms.map(t => org.apache.spark.sql.graft.ExprBridge.fold(
       SparkSession.active, termBucket(lit(t), buckets)).asInstanceOf[Int].toLong)
 
-  /** Posting rows (id, term, _tb) — one per distinct token per document;
-    * with `positions` one per token OCCURRENCE plus its 0-based `pos` in
-    * the whitespace token array (absolute, so the rare filtered-out blank
-    * token never shifts its neighbours — the oracle numbers the same
-    * array). Null texts yield no postings (an unindexed doc, matching the
-    * oracle's unnest-of-null); empty tokens (split of a blank string) are
-    * dropped, they can never match a real search term. */
+  /** Plain posting rows `(id, term, _tb)` of `corpus`, one per (term,
+    * doc); [[positionalRows]] is the positional form. Null texts yield no
+    * postings (an unindexed doc, matching the oracle's unnest-of-null);
+    * empty tokens (split of a blank string) are dropped, they can never
+    * match a real search term. */
   def postings(corpus: DataFrame, textCol: String, idCol: String,
-               buckets: Int, positions: Boolean = false): DataFrame = {
-    val base =
-      if (positions) {
-        // `len` (the doc's whitespace token count, blank tokens included —
-        // the oracle-visible array length) rides every posting row: BM25
-        // probes then learn each candidate's length from the probed
-        // buckets alone, with no second tree; parquet RLE makes the
-        // repetition ~free. The token array is materialized in its OWN
-        // projection before the generator consumes it — the chunked-
-        // operator rule: a single-select form re-tokenizes per emitted
-        // row (measured 277 s vs 14 s for the 27M-posting ×100 build)
-        corpus.select(col(idCol).as("id"),
-            TextAnalysis.tokens(col(textCol)).as("_gq_toks"))
-          .select(col("id"), size(col("_gq_toks")).cast("int").as("len"),
-            posexplode(col("_gq_toks")).as(Seq("pos", "term")))
-      } else
-        corpus.select(col(idCol).as("id"),
-          explode(array_distinct(TextAnalysis.tokens(col(textCol)))).as("term"))
-    base.filter(length(col("term")) > 0)
+               buckets: Int): DataFrame =
+    corpus.select(col(idCol).as("id"),
+        explode(array_distinct(TextAnalysis.tokens(col(textCol)))).as("term"))
+      .filter(length(col("term")) > 0)
       .withColumn("_tb", termBucket(col("term"), buckets))
+
+  /** Positional rows `(id, term, tf, len, pos, _tb)` of `corpus`, plus the
+    * Observation that measures its corpus stats in the same pass: `docs`,
+    * the rows with a non-blank token, and `totalLen`, their summed token
+    * count. `pos` is absolute in the whitespace token array and `len` is
+    * that array's length, blank tokens included (the oracle numbers and
+    * measures the same array). The token array is materialized in its OWN
+    * projection before the generator consumes it — the chunked-operator
+    * rule: a single-select form re-tokenizes per emitted row (measured
+    * 277 s vs 14 s for the 27M-posting ×100 build). */
+  private def positionalRows(corpus: DataFrame, textCol: String, idCol: String,
+                             buckets: Int): (DataFrame, Observation) = {
+    val toks = col("_gq_toks")
+    val counted = toks.isNotNull && exists(toks, t => length(t) > 0)
+    val stats = Observation()
+    val occurrences = corpus
+      .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("_gq_toks"))
+      .observe(stats, count(when(counted, lit(1))).as("docs"),
+        coalesce(sum(when(counted, size(toks).cast("long"))), lit(0L)).as("totalLen"))
+      .select(col("id"), size(toks).cast("int").as("len"),
+        posexplode(toks).as(Seq("pos", "term")))
+      .filter(length(col("term")) > 0)
+      .withColumn("_tb", termBucket(col("term"), buckets))
+    (perTermDoc(occurrences), stats)
   }
 
-  /** Corpus stats for BM25: (docs with ≥1 NON-BLANK token, summed token
-    * length over those docs). Blank-token-only docs carry no postings, so
-    * the compaction recount (distinct (id, len) from the tree) could never
-    * see them — build/append skip them too, so all three stat sources
-    * agree on one definition (round-10 ADVICE). `len` stays the full
-    * oracle-visible token-array length. */
-  private def corpusStats(corpus: DataFrame, textCol: String): (Long, Long) = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    val r = corpus
-      .select(size(toks).cast("long").as("_l"),
-        size(filter(toks, t => length(t) > 0)).as("_nz"))
-      .filter(col("_l").isNotNull && col("_nz") > 0)
-      .agg(count(lit(1)), coalesce(sum(col("_l")), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  // ─── doc-level tf tier (BM25 fast path) ───
-
-  /** Subdir of the per-(term, doc) tf tier inside a positional index tree.
-    * The `_` prefix keeps it invisible to whole-tree reads of the posting
-    * files (Spark skips `_`/`.` paths when listing), same as the meta
-    * sidecar. */
-  private def tfDir(path: String): String = s"$path/_tf"
-
-  private def tfSchema(index: TextIndex): StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", index.schema("id").dataType),
-    org.apache.spark.sql.types.StructField("term",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("tf",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("len",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("_tb",
-      org.apache.spark.sql.types.IntegerType)))
-
-  /** Collapse positional posting rows to one row per (term, doc): tf =
-    * distinct positions (replay-duplicate safe at compaction), len carried.
-    * This is THE expensive step of a BM25 probe when done at query time —
-    * a common term's posting list is one row per OCCURRENCE — so positional
-    * indexes persist it at build/append/compact/merge and rankedSearch
-    * reads doc-level rows instead. */
-  private def tfFromPostings(posts: DataFrame): DataFrame =
-    posts.groupBy("_tb", "term", "id")
-      .agg(countDistinct(col("pos")).cast("int").as("tf"),
+  /** One row per (term, id) of positional rows whose `pos` is a position
+    * or an array of them: positions unioned, sorted and distinct (so a doc
+    * id indexed twice, a replayed segment or two merged shards collapse
+    * here), `tf` their count, `len` the largest. The aggregate reads the
+    * `_tb` exchange itself — `(_tb, term, id)` clusters on `_tb` — so the
+    * clustered write of its output is ONE shuffle. */
+  private def perTermDoc(rows: DataFrame): DataFrame = {
+    val positions = rows.schema("pos").dataType match {
+      case _: ArrayType => flatten(collect_list(col("pos")))
+      case _ => collect_list(col("pos"))
+    }
+    rows.repartition(col("_tb")).groupBy("_tb", "term", "id")
+      .agg(array_sort(array_distinct(positions)).as("pos"),
         max(col("len")).as("len"))
-      .select("id", "term", "tf", "len", "_tb")
-
-  private def writeTfTier(posts: DataFrame, dir: String, mode: String): Unit =
-    tfFromPostings(posts).repartition(col("_tb"))
-      .sortWithinPartitions("term", "id")
-      .write.mode(mode).partitionBy("_tb").parquet(dir)
-
-  private def tfTierExists(spark: SparkSession, index: TextIndex): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(tfDir(index.path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+      .select(col("id"), col("term"), size(col("pos")).as("tf"), col("len"),
+        col("pos"), col("_tb"))
   }
 
-  /** Build the index at `path`: one corpus pass, postings clustered on the
-    * bucket key before the partitioned write so each bucket dir is written
-    * by ONE task (the LSH-build lesson: unclustered partitioned writes cost
-    * ~#tasks files per dir and probes pay the census as a listing tax). */
+  /** Clustered write: each bucket dir is written by ONE task (the
+    * LSH-build lesson: unclustered partitioned writes cost ~#tasks files
+    * per dir and probes pay the census as a listing tax), rows in (term,
+    * id) order. */
+  private def writeRows(rows: DataFrame, path: String, mode: String): Unit =
+    rows.repartition(col("_tb")).sortWithinPartitions("_tb", "term", "id")
+      .write.mode(mode).partitionBy("_tb").parquet(path)
+
+  /** Write `corpus`'s postings into `path` in one pass; returns their row
+    * schema and the corpus stats the pass measured ((0, 0) for the plain
+    * layout, which keeps none). */
+  private def writePostings(corpus: DataFrame, textCol: String, idCol: String,
+                            buckets: Int, positions: Boolean, path: String,
+                            mode: String): (StructType, Long, Long) =
+    if (!positions) {
+      val rows = postings(corpus, textCol, idCol, buckets)
+      writeRows(rows, path, mode)
+      (rows.schema, 0L, 0L)
+    } else {
+      val (rows, stats) = positionalRows(corpus, textCol, idCol, buckets)
+      writeRows(rows, path, mode)
+      // the Observation completes from the listener bus once the write's
+      // execution ends (the bound only turns a lost event into an error),
+      // with an empty row when the optimizer proved the corpus empty and
+      // dropped the observed node
+      val r = scala.concurrent.Await.result(stats.future,
+        scala.concurrent.duration.Duration(5, "min"))
+      if (r.length == 0) (rows.schema, 0L, 0L)
+      else (rows.schema, r.getLong(0), r.getLong(1))
+    }
+
+  /** Build the index at `path`: one corpus pass writes the postings, and
+    * a positional build takes its corpus stats from that same pass. */
   def textIndexBuild(corpus: DataFrame, textCol: String, idCol: String,
                      path: String, buckets: Int = 256,
                      positions: Boolean = false): TextIndex = {
     require(buckets > 0, s"textIndexBuild: buckets must be positive, got $buckets")
-    val rows = postings(corpus, textCol, idCol, buckets, positions)
-    rows.repartition(col("_tb"))
-      .sortWithinPartitions("term", "id")
-      .write.mode("overwrite").partitionBy("_tb").parquet(path)
-    val idx = TextIndex(path, idCol, buckets, rows.schema, positions,
-      0L, 0L)
-    val (n, tl) =
-      if (positions) {
-        // tf tier from the just-written tree (no corpus re-tokenize)
-        writeTfTier(corpus.sparkSession.read.schema(rows.schema).parquet(path),
-          tfDir(path), "overwrite")
-        corpusStats(corpus, textCol)
-      } else (0L, 0L)
-    val done = idx.copy(docs = n, totalLen = tl)
-    Similarity.writeMeta(corpus.sparkSession, path, done)
-    done
+    val (schema, n, tl) = writePostings(corpus, textCol, idCol, buckets,
+      positions, path, "overwrite")
+    val idx = TextIndex(path, idCol, buckets, schema, positions, n, tl)
+    Similarity.writeMeta(corpus.sparkSession, path, idx)
+    idx
   }
 
+  /** Re-open the index whose sidecar is in `path`, refusing a tree in the
+    * retired two-tier layout (one posting row per token occurrence with a
+    * scalar `pos`, plus a doc-level `_tf` tier), which no probe reads. */
+  private[graft] def openIndex(spark: SparkSession, path: String): Option[TextIndex] =
+    Similarity.readMeta[TextIndex](spark, path).map { idx =>
+      val root = new org.apache.hadoop.fs.Path(path)
+      val scalarPos = idx.schema.exists(f =>
+        f.name == "pos" && !f.dataType.isInstanceOf[ArrayType])
+      if (scalarPos || root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(new org.apache.hadoop.fs.Path(root, "_tf")))
+        throw new IllegalStateException(s"text index at $path has the retired " +
+          "two-tier layout (occurrence rows plus a _tf tier); rebuild it: " +
+          "delete the tree and build it again")
+      idx
+    }
+
   /** Append a segment's postings into the existing bucket partitions.
-    * Replay-tolerant: duplicate postings change no membership/phrase
-    * answer (probes count DISTINCT terms/positions per doc); compaction
-    * drops them. Positional indexes also fold the segment's corpus stats
-    * into the sidecar (postings-then-stats order: a crash between the two
-    * leaves avgdl slightly stale).
+    * Replay-tolerant: a replayed segment's rows change no membership,
+    * phrase or BM25 answer (probes count DISTINCT terms, union positions
+    * and take max tf per (term, doc)); compaction merges them. Positional
+    * indexes also fold the segment's corpus stats, measured by the same
+    * pass, into the sidecar (postings-then-stats order: a crash between
+    * the two leaves avgdl slightly stale).
     *
     * `segmentId`, when given, must be DETERMINISTIC per logical segment
     * (mirroring [[Dedup.minhashIndexAppend]]'s replay guard — round-12
     * ADVICE): a `_gq_seg_<id>` done-marker lands in the tree root AFTER the
-    * postings/tf/stats, and an append whose marker already exists is a
+    * postings/stats, and an append whose marker already exists is a
     * replay and skipped wholesale — a retried delta append can no longer
     * double-count the sidecar docs/totalLen and skew BM25 N/avgdl until a
     * compaction recount. CONCURRENT appenders of the same segment (a second
@@ -194,9 +202,9 @@ object TextSearch {
     * above the worst-case append latency for multi-writer deployments, the
     * residual race being two appenders of a segment that takes longer than
     * the bound. A crash inside the append (done-marker not yet written)
-    * re-runs it whole after the staleness wait: duplicate postings/tf rows
-    * are probe-safe (DISTINCT/max collapse), stats double-count remains the
-    * documented bounded drift for exactly the writeMeta-to-marker window.
+    * re-runs it whole after the staleness wait: duplicate posting rows
+    * are probe-safe, stats double-count remains the documented bounded
+    * drift for exactly the writeMeta-to-marker window.
     * Without a `segmentId` (ad-hoc use) appending the same frame twice
     * really does index it twice. Returns the updated handle. */
   def textIndexAppend(index: TextIndex, segment: DataFrame,
@@ -228,21 +236,11 @@ object TextSearch {
       // torn-swap healing under the WRITE lock: outside it, a live
       // compactor's in-progress swap is indistinguishable from a crash
       IndexMaint.recoverSwap(spark, index.path)
-      postings(segment, textCol, index.idCol, index.buckets, index.positional)
-        .repartition(col("_tb"))
-        .write.mode("append").partitionBy("_tb").parquet(index.path)
+      val (_, n, tl) = writePostings(segment, textCol, index.idCol,
+        index.buckets, index.positional, index.path, "append")
       val out =
         if (!index.positional) index
         else {
-          // tf tier rows for the segment (postings-then-tf order: a crash
-          // between the two is healed by the family's at-least-once replay,
-          // same as the postings-then-stats window below; a replayed append
-          // appends identical tf rows, which probes collapse by max)
-          writeTfTier(
-            postings(segment, textCol, index.idCol, index.buckets,
-              positions = true),
-            tfDir(index.path), "append")
-          val (n, tl) = corpusStats(segment, textCol)
           // fold into the LATEST PERSISTED stats under a meta lock, not
           // into the caller's handle: appenders of DIFFERENT segments hold
           // different claims (and a caller can legitimately pass a stale
@@ -250,7 +248,7 @@ object TextSearch {
           // update — the second writer would overwrite the first's fold
           // and skew BM25 N/avgdl until a compaction recount. The lock
           // only spans the sub-second sidecar read+write, never the
-          // segment-sized jobs above.
+          // segment-sized job above.
           val staleMs = sys.props.get("graft.index.append.claim.stale.ms")
             .flatMap(_.toLongOption).getOrElse(120000L)
           IndexMaint.withFileLock(fs,
@@ -280,15 +278,16 @@ object TextSearch {
     }
   }
 
-  /** Rewrite one-file-per-bucket with replay duplicates dropped; swap
+  /** Rewrite one-file-per-bucket with replay duplicates merged; swap
     * protocol + sidecar re-write as in the LSH/IVF family. Positional
-    * compaction also RECOMPUTES the sidecar corpus stats exactly from the
-    * deduplicated tree (distinct (id, len)) — healing any replay
-    * double-count a crashed append left behind, the same discipline as the
-    * minhash occ recount. (Docs whose text tokenizes to only blank tokens
-    * carry no postings and so drop out of the recount — they contribute no
-    * terms, so their absence from avgdl is the better estimate anyway.)
-    * Returns the possibly-updated handle. */
+    * compaction unions each (term, id)'s positions and RECOMPUTES the
+    * sidecar corpus stats from the tree, one document per id at its
+    * longest length — healing any replay double-count a crashed append
+    * left behind, the same discipline as the minhash occ recount. (Docs
+    * whose text tokenizes to only blank tokens carry no postings and so
+    * drop out of the recount — they contribute no terms, so their absence
+    * from avgdl is the better estimate anyway.) Returns the possibly-
+    * updated handle. */
   def textIndexCompact(index: TextIndex): TextIndex = {
     val spark = SparkSession.active
     // same tree WRITE lock as appends: a compaction swapping the tree out
@@ -299,22 +298,16 @@ object TextSearch {
         .getFileSystem(spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(index.path)) {
     IndexMaint.recoverSwap(spark, index.path)
-    val deduped = spark.read.schema(index.schema).parquet(index.path)
-      .dropDuplicates()
-    val updated =
-      if (!index.positional) index
+    val tree = spark.read.schema(index.schema).parquet(index.path)
+    val (rows, updated) =
+      if (!index.positional) (tree.dropDuplicates(), index)
       else {
-        val r = deduped.select(col("id"), col("len")).distinct()
-          .agg(count(lit(1)), coalesce(sum(col("len").cast("long")), lit(0L)))
-          .head()
-        index.copy(docs = r.getLong(0), totalLen = r.getLong(1))
+        val r = tree.groupBy("id").agg(max(col("len")).cast("long").as("_len"))
+          .agg(count(lit(1)), coalesce(sum(col("_len")), lit(0L))).head()
+        (perTermDoc(tree), index.copy(docs = r.getLong(0), totalLen = r.getLong(1)))
       }
-    IndexMaint.swapRewrite(spark, index.path, deduped,
+    IndexMaint.swapRewrite(spark, index.path, rows,
       Seq("_tb"), tmp => {
-        // the tf tier is recomputed exactly from the deduplicated postings
-        // (replay double-counts healed, same as the stats recount) and
-        // rides the swap inside the tmp tree
-        if (index.positional) writeTfTier(deduped, tfDir(tmp), "overwrite")
         Similarity.writeMeta(spark, tmp, updated)
         // carry the segment done-markers across the rewrite: the appended
         // segments' rows are still IN the compacted tree, so a replayed
@@ -337,13 +330,13 @@ object TextSearch {
     * per-shard indexing shape at corpus scale (each shard indexes its
     * slice; merges produce the serving tree without re-reading either
     * corpus). The term→bucket map is deterministic in `buckets` alone, so
-    * matching geometries make the merge a pure posting union; output is
-    * clustered one-file-per-bucket (merge doubles as compaction) and
-    * re-openable via the standard sidecar. A doc indexed in BOTH shards
-    * dedups its posting rows but counts twice in the summed corpus stats
-    * (N/avgdl skew for BM25; tf/df stay exact) — dedup shard ownership
-    * upstream, as with the minhash merge, or run [[textIndexCompact]] on
-    * the merged tree to recount stats exactly. */
+    * matching geometries make the merge a pure posting union (positions
+    * unioned per (term, id)); output is clustered one-file-per-bucket
+    * (merge doubles as compaction) and re-openable via the standard
+    * sidecar. A doc indexed in BOTH shards merges its rows but counts
+    * twice in the summed corpus stats (N/avgdl skew for BM25; tf/df stay
+    * exact) — dedup shard ownership upstream, as with the minhash merge,
+    * or run [[textIndexCompact]] on the merged tree to recount stats. */
   def textIndexMerge(a: TextIndex, b: TextIndex, destPath: String): TextIndex = {
     require(a.buckets == b.buckets,
       s"textIndexMerge: bucket geometry differs (${a.buckets} vs ${b.buckets})")
@@ -354,12 +347,10 @@ object TextSearch {
     val spark = SparkSession.active
     IndexMaint.recoverSwap(spark, a.path)
     IndexMaint.recoverSwap(spark, b.path)
-    val rows = spark.read.schema(a.schema).parquet(a.path)
+    val both = spark.read.schema(a.schema).parquet(a.path)
       .unionByName(spark.read.schema(b.schema).parquet(b.path))
-      .dropDuplicates()
-    rows.repartition(col("_tb")).sortWithinPartitions("term", "id")
-      .write.mode("overwrite").partitionBy("_tb").parquet(destPath)
-    if (a.positional) writeTfTier(rows, tfDir(destPath), "overwrite")
+    writeRows(if (a.positional) perTermDoc(both) else both.dropDuplicates(),
+      destPath, "overwrite")
     val merged = TextIndex(destPath, a.idCol, a.buckets, a.schema, a.positional,
       a.docs + b.docs, a.totalLen + b.totalLen)
     Similarity.writeMeta(spark, destPath, merged)
@@ -391,21 +382,13 @@ object TextSearch {
     val need = if (minMatch <= 0 || minMatch > norm.size) norm.size else minMatch
     val tbs = termBuckets(norm, index.buckets)
     val idType = index.schema("id").dataType
-    // positional trees with a tf tier answer membership from the doc-level
-    // rows (one per (term, doc)) instead of the occurrence rows — same
-    // DISTINCT-term count, far fewer input rows for common terms
-    val rowsOpt =
-      if (index.positional && tfTierExists(spark, index))
-        IndexMaint.readPartitions(spark, tfDir(index.path), tfSchema(index),
-          "_tb", tbs)
-      else
-        IndexMaint.readPartitions(spark, index.path, index.schema, "_tb", tbs)
-    rowsOpt match {
+    // both layouts hold one row per (term, doc): membership reads (id, term)
+    IndexMaint.readPartitions(spark, index.path, index.schema, "_tb", tbs) match {
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(org.apache.spark.sql.types.StructField("id", idType))))
-      case Some(posts) =>
-        posts.filter(col("term").isin(norm: _*))
+      case Some(rows) =>
+        rows.select("id", "term").filter(col("term").isin(norm: _*))
           // rows may hold replay duplicates between compactions: count
           // DISTINCT terms, never rows
           .groupBy("id").agg(countDistinct(col("term")).as("_gq_nt"))
@@ -415,14 +398,14 @@ object TextSearch {
   }
 
   /** Doc ids containing the exact consecutive token sequence `phrase` —
-    * candidate docs from the same term-bucket-pruned AND probe, adjacency
-    * then verified on the stored positions WITHOUT touching the corpus:
-    * per (id, term) the position set rides up as an array, and a phrase
-    * match is a start position p of the first term with p+i in the i-th
-    * term's set for every i (one codegen'd `exists` over the pivoted map —
-    * no k-way self-join of the posting stream). Needs a positional index.
+    * candidates from the same term-bucket-pruned probe, adjacency then
+    * verified on the stored position arrays WITHOUT touching the corpus:
+    * each doc's (term, pos) rows for the phrase terms gather into one list,
+    * and a phrase match is a start position p of the first term with p+i
+    * in the i-th term's positions for every i (one `exists` per doc — no
+    * k-way self-join of the posting stream). Needs a positional index.
     * Repeated terms in the phrase ("the the") are handled naturally: the
-    * same position array is consulted at both offsets. */
+    * same positions are consulted at both offsets. */
   def phraseIds(index: TextIndex, phrase: Seq[String]): DataFrame = {
     require(index.positional,
       s"phraseIds needs an index built with positions = true (${index.path})")
@@ -438,33 +421,27 @@ object TextSearch {
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(org.apache.spark.sql.types.StructField("id", idType))))
-      case Some(posts) =>
-        // pivot the phrase terms' positions into one map per doc
-        // (collect_set: replay-duplicated postings collapse)
-        val pivoted = posts.filter(col("term").isin(distinctTerms: _*))
-          .groupBy("id", "term").agg(collect_set(col("pos")).as("_ps"))
-          .groupBy("id").agg(map_from_arrays(
-            collect_list(col("term")), collect_list(col("_ps"))).as("_m"))
-        // all terms present, then a common start: exists p in pos(t0) with
-        // p+i in pos(ti) for every i (element_at on a missing key is null;
-        // array_contains(null, _) is null, so the filter drops those too)
-        val hasAll = distinctTerms
-          .map(t => element_at(col("_m"), t).isNotNull).reduce(_ && _)
-        val aligned = exists(element_at(col("_m"), norm.head),
+      case Some(rows) =>
+        val perDoc = rows.filter(col("term").isin(distinctTerms: _*))
+          .groupBy("id").agg(collect_list(struct(col("term"), col("pos"))).as("_l"))
+        // a term's positions in a doc: the union of its rows' arrays (a
+        // replayed segment repeats a row); empty when the term is absent
+        def positionsOf(t: String): Column = flatten(transform(
+          filter(col("_l"), x => x.getField("term") === t), x => x.getField("pos")))
+        val aligned = exists(positionsOf(norm.head),
           p => norm.zipWithIndex.tail
-            .map { case (t, i) => array_contains(element_at(col("_m"), t), p + i) }
+            .map { case (t, i) => array_contains(positionsOf(t), p + i) }
             .foldLeft(lit(true))(_ && _))
-        pivoted.filter(hasAll && aligned).select("id")
+        perDoc.filter(aligned).select("id")
     }
   }
 
   /** BM25 top-k ranked retrieval (Robertson & Walker; the Okapi form with
     * the standard k1/b defaults): candidates and every statistic come from
-    * the probed term buckets alone — tf and doc length from the persisted
-    * doc-level tf tier when present (one row per (term, doc); falls back
-    * to collapsing the positional occurrence rows for trees built before
-    * the tier existed), per-term document frequency exact because a term's
-    * bucket holds ALL its rows, and N/avgdl from the sidecar corpus stats.
+    * the probed term buckets alone — tf and doc length from the (term,
+    * doc) rows with their position arrays pruned from the scan, per-term
+    * document frequency exact because a term's bucket holds ALL its rows,
+    * and N/avgdl from the sidecar corpus stats.
     * The corpus text is never read. Scores are rounded at 1e-6 BEFORE the
     * top-k cut and tie-broken on id, so retries, repartitioning and the
     * SQL oracle rank identically (the q_dsir selection-key rule). idf is
@@ -513,23 +490,14 @@ object TextSearch {
     // an EMPTY corpus (docs == 0) ranks nothing — return the empty frame
     // rather than erroring, like every other probe on an empty index
     if (index.docs == 0L) return emptyOut
-    // doc-level (id, term, _tf, _len) rows: tf tier when the tree has one
-    val tfOpt: Option[DataFrame] =
-      if (tfTierExists(spark, index))
-        IndexMaint.readPartitions(spark, tfDir(index.path), tfSchema(index),
-            "_tb", tbs)
-          .map(_.filter(col("term").isin(norm: _*))
-            .groupBy("id", "term")
-            // max collapses replay-appended duplicate rows
-            .agg(max(col("tf")).cast("long").as("_tf"),
-              max(col("len")).as("_len")))
-      else
-        IndexMaint.readPartitions(spark, index.path, index.schema, "_tb", tbs)
-          .map(_.filter(col("term").isin(norm: _*))
-            .groupBy("id", "term")
-            .agg(countDistinct(col("pos")).as("_tf"),
-              max(col("len")).as("_len")))
-    val tfAll = tfOpt.getOrElse(return emptyOut)
+    // doc-level (id, term, _tf, _len) rows; max collapses the rows a
+    // replayed segment repeats
+    val tfAll = IndexMaint.readPartitions(spark, index.path, index.schema,
+        "_tb", tbs)
+      .map(_.filter(col("term").isin(norm: _*))
+        .groupBy("id", "term")
+        .agg(max(col("tf")).cast("long").as("_tf"), max(col("len")).as("_len")))
+      .getOrElse(return emptyOut)
     // per-doc rows (id, _l): each document's (term, _tf, _len) entries,
     // sorted by term — the input of the deterministic score fold below
     val perDocAll = tfAll.groupBy("id").agg(array_sort(collect_list(
@@ -742,22 +710,23 @@ object TextSearch {
   def textIndexFor(corpus: DataFrame, corpusKey: String, textCol: String,
                    idCol: String, baseDir: String,
                    buckets: Int = 256, positions: Boolean = false): TextIndex = {
-    // tx3: format tag — bumped when the tree layout changes (tx3 added the
-    // doc-level _tf tier; the path derives from this key, so stale trees
-    // from an older format are never re-opened as current)
-    val params = s"tx3|$corpusKey|$textCol|$idCol|$buckets|$positions"
+    // tx4: format tag — bumped when the tree layout changes (tx4: one row
+    // per (term, doc) with inline positions). The path derives from this
+    // key, so trees of an older format are never re-opened as current, and
+    // textIndexGc sweeps them like any orphan
+    val params = s"tx4|$corpusKey|$textCol|$idCol|$buckets|$positions"
     // ONE stat pass per request: the statuses feed both the fingerprint
     // (cache key) and the lineage record — the pre-round-11 form statted
     // every file twice (three times on a miss) per served request
     val files = IndexMaint.fileStatuses(corpus)
-    val key = s"tx3|$corpusKey|${Similarity.fingerprintFrom(files)}|" +
+    val key = s"tx4|$corpusKey|${Similarity.fingerprintFrom(files)}|" +
       s"$textCol|$idCol|$buckets|$positions"
     val spark = corpus.sparkSession
     val path = s"$baseDir/tx_${Similarity.keyHash(key)}"
     IndexMaint.cachedIndexFor[TextIndex](
       spark, txCache, txLineage, baseDir, params, key, files,
       path, pathOf = _.path,
-      reopenAt = p => Similarity.readMeta[TextIndex](spark, p),
+      reopenAt = p => openIndex(spark, p),
       build = () => {
         val idx = textIndexBuild(corpus, textCol, idCol, path, buckets,
           positions)

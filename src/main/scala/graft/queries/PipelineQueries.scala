@@ -1912,9 +1912,9 @@ object PipelineQueries {
             ORDER BY doc_id"""))
 
   /** Exact-phrase search off the POSITIONAL index variant: candidates from
-    * the same bucket-pruned AND probe, adjacency verified on stored
-    * positions (one codegen'd exists over the pivoted position map — the
-    * corpus text is never read). The oracle verifies adjacency with a
+    * the bucket-pruned probe, adjacency verified on the stored position
+    * arrays (one exists over each doc's gathered positions — the corpus
+    * text is never read). The oracle verifies adjacency with a
     * positional self-join over the tokenized text. */
   val q_text_phrase = Q(
     "q_text_phrase",

@@ -810,8 +810,9 @@ object StreamOps {
     * Per micro-batch the docs are appended to `outDir` (the corpus) and
     * their postings appended into the index's bucket partitions
     * (bootstrap: the first non-empty batch BUILDS the index + sidecar;
-    * restart re-opens it; a data-bearing dir without a sidecar is refused,
-    * like every index-backed sink). Write order is output-then-postings:
+    * restart re-opens it, refusing a tree in the retired two-tier layout;
+    * a data-bearing dir without a sidecar is refused, like every
+    * index-backed sink). Write order is output-then-postings:
     * a crash between the two replays the batch, duplicating output rows
     * (at-least-once, standard foreachBatch) and postings — answer-
     * preserving because searches count DISTINCT terms per doc.
@@ -831,7 +832,7 @@ object StreamOps {
     writeBatches(stream, checkpoint, trigger) { (batch, batchId) =>
       val spark = batch.sparkSession
       if (idx == null) {
-        idx = Similarity.readMeta[TextSearch.TextIndex](spark, indexDir).orNull
+        idx = TextSearch.openIndex(spark, indexDir).orNull
         if (idx == null) resolveBootstrap(spark, indexDir, "textIndexSink")
         else clearBootstrapMarker(spark, indexDir)
       }

@@ -40,6 +40,9 @@ object QBench {
     // percentile runs); compare with `QBench 3 q_profile`
     Scenario("profile_selection", Seq("q_profile"), "sf0.1",
       Map("spark.graft.profile.selectionMinBytes" -> "0")),
+    // the text-index probes, each registry form next to its served twin
+    Scenario("text", Seq("q_text_search", "q_text_phrase", "q_text_bm25",
+      "q_gql_phrase", "q_gql_bm25"), "sf0.1"),
     // the parallel-cost set: read it at ×50 (tools/gen_scale.py), where
     // sf0.1's fixed costs no longer hide the slope
     Scenario("x50", Seq("q_runs_filtered", "q_cum_natural",

@@ -11,7 +11,8 @@ class QBenchSpec extends SparkSpec {
   // has no parity group
   private val groups = Map(
     "rankings" -> Seq(Seq("q_window_rank", "q_window_rank_dist")),
-    "runs" -> Seq(Seq("q_runs", "q_runs_dist")))
+    "runs" -> Seq(Seq("q_runs", "q_runs_dist")),
+    "text" -> Seq(Seq("q_text_phrase", "q_gql_phrase"), Seq("q_text_bm25", "q_gql_bm25")))
 
   for (sc <- QBench.scenarios)
     test(s"scenario ${sc.name} times every arm and its same-oracle arms agree") {

@@ -28,19 +28,54 @@ class TextSearchSpec extends SparkSpec {
   private def probedIds(df: DataFrame): Set[Long] =
     df.collect().map(_.getLong(0)).toSet
 
-  /** Full-scan Okapi recompute (the spec's independent BM25 reference). */
-  private def bruteTopK(corpus: DataFrame, terms: Seq[String],
-                        k: Int): Seq[(Long, Double)] = {
+  /** Corpus stats as the sidecar of a build or an append defines them:
+    * (rows whose text has a non-blank token, their summed token count). */
+  private def corpusStats(corpus: DataFrame): (Long, Long) = {
+    val r = corpus.select(TextAnalysis.tokens(col("text")).as("a"))
+      .filter(col("a").isNotNull && size(filter(col("a"), t => length(t) > 0)) > 0)
+      .agg(count(lit(1)), coalesce(sum(size(col("a")).cast("long")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Corpus stats as compaction recounts them: one document per id with a
+    * non-blank token, at its longest token count. */
+  private def perIdStats(corpus: DataFrame): (Long, Long) = {
+    val r = corpus.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("a"))
+      .filter(col("a").isNotNull && size(filter(col("a"), t => length(t) > 0)) > 0)
+      .groupBy("doc_id").agg(max(size(col("a"))).cast("long").as("l"))
+      .agg(count(lit(1)), coalesce(sum(col("l")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Full-scan phrase reference: a doc id's positions of a term are the
+    * union over its rows (the index's rule for a doc id indexed twice). */
+  private def scanPhrase(corpus: DataFrame, phrase: Seq[String]): Set[Long] = {
+    val pos = corpus.select(col("doc_id"),
+        posexplode(TextAnalysis.tokens(col("text"))).as(Seq("p", "t")))
+      .filter(col("t").isin(phrase: _*)).distinct().collect()
+      .groupBy(r => (r.getLong(0), r.getString(2)))
+      .map { case (k, rs) => k -> rs.map(_.getInt(1)).toSet }
+    pos.keySet.map(_._1).filter { id =>
+      pos.getOrElse((id, phrase.head), Set.empty[Int]).exists(p =>
+        phrase.indices.forall(i => pos.get((id, phrase(i))).exists(_(p + i))))
+    }
+  }
+
+  /** Full-scan Okapi recompute (the spec's independent BM25 reference).
+    * A doc id indexed twice is one document to the index: its tf is the
+    * count of DISTINCT positions over its rows and its length the longest
+    * of its rows holding the term. N/avgdl default to [[corpusStats]]. */
+  private def bruteTopK(corpus: DataFrame, terms: Seq[String], k: Int,
+                        stats: Option[(Long, Long)] = None): Seq[(Long, Double)] = {
     val toks = corpus.select(col("doc_id"),
       TextAnalysis.tokens(col("text")).as("a"))
-    val st = toks.filter(col("a").isNotNull &&
-        size(filter(col("a"), t => length(t) > 0)) > 0)
-      .agg(count(lit(1)), sum(size(col("a")).cast("long"))).head()
-    val (n, avgdl) = (st.getLong(0), st.getLong(1).toDouble / st.getLong(0))
+    val (docsN, totalLen) = stats.getOrElse(corpusStats(corpus))
+    val (n, avgdl) = (docsN, totalLen.toDouble / docsN)
     val tf = toks.select(col("doc_id"), size(col("a")).as("dl"),
-        explode(col("a")).as("term"))
+        posexplode(col("a")).as(Seq("p", "term")))
       .filter(col("term").isin(terms: _*))
-      .groupBy("doc_id", "term", "dl").agg(count(lit(1)).as("tf"))
+      .groupBy("doc_id", "term")
+      .agg(countDistinct(col("p")).as("tf"), max(col("dl")).as("dl"))
     val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val contrib = log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) /
         (col("df") + 0.5)) * (col("tf") * lit(2.2)) /
@@ -132,18 +167,6 @@ class TextSearchSpec extends SparkSpec {
   }
 
   test("phrase search equals a positional full-scan recompute") {
-    import org.apache.spark.sql.Row
-    // full-scan phrase reference over the tokenized text
-    def scanPhrase(corpus: DataFrame, phrase: Seq[String]): Set[Long] =
-      corpus.select(col("doc_id"),
-          TextAnalysis.tokens(col("text")).as("a"))
-        .collect().collect { case Row(id: Long, toks: scala.collection.Seq[_]) =>
-          val a = toks.map(String.valueOf(_))
-          val hit = a.indices.exists(p =>
-            p + phrase.size <= a.size &&
-              phrase.indices.forall(i => a(p + i) == phrase(i)))
-          id -> hit
-        }.collect { case (id, true) => id }.toSet
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_phrase").toString
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
       buckets = 32, positions = true)
@@ -414,16 +437,6 @@ class TextSearchSpec extends SparkSpec {
       s"fallback diverged: $gotB")
     assert(gotB.map(_._1) == Seq(400L, 101L, 102L),
       "common-term docs must win — pruning them would be a wrong answer")
-
-    // C: a tree WITHOUT the tf tier (pre-tier layout) falls back to the
-    // occurrence-collapse path with identical answers
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/a/_tf"), true)
-    assert(rankedPairs(ixA, Seq("r", "c"), 2) == gotA,
-      "tier-less tree must answer identically")
-    assert(probedIds(TextSearch.searchIds(ixA, Seq("c"))) ==
-      scanIds(a, Seq("c")))
   }
 
   test("textIndexFor: append-only growth appends the delta; GC sweeps orphans") {
@@ -801,7 +814,7 @@ class TextSearchSpec extends SparkSpec {
     assert(pos.docs * terms.size < 500000L)
     val budget = Seq(
       "searchIds" -> execs(TextSearch.searchIds(plain, terms)),
-      "searchIds (tf tier)" -> execs(TextSearch.searchIds(pos, terms, minMatch = 1)),
+      "searchIds (positional)" -> execs(TextSearch.searchIds(pos, terms, minMatch = 1)),
       "phraseIds" -> execs(TextSearch.phraseIds(pos, Seq("hash", "table"))),
       "rankedSearch" -> execs(TextSearch.rankedSearch(pos, terms, 10)),
       "rankedSearchWithin" -> execs(TextSearch.rankedSearchWithin(pos, terms,
@@ -853,7 +866,7 @@ class TextSearchSpec extends SparkSpec {
     }
     // only absent terms: both paths rank nothing
     assert(check("absent", idx, Some(docs), Seq("zzzznope"), 5).isEmpty)
-    // replayed appends: duplicate tf/posting rows collapse the same way on
+    // replayed appends: repeated (term, doc) rows collapse the same way on
     // both paths, and both read the same (double-counted) sidecar N/avgdl
     val seg = Seq((100000L, "join filter hash join"), (100001L, "hash table"))
       .toDF("doc_id", "text")
@@ -866,11 +879,6 @@ class TextSearchSpec extends SparkSpec {
     val healed = TextSearch.textIndexCompact(replayed)
     check("compacted", healed, Some(docs.select("doc_id", "text").unionByName(seg)),
       Seq("join", "filter", "hash"), 10)
-    // a tree without the tf tier answers from the positional rows
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/ix/_tf"), true))
-    check("no _tf", idx, Some(docs), Seq("join", "filter", "hash"), 10)
-    check("no _tf within", idx, Some(docs), Seq("join", "filter"), 10, Some(within))
     // docs == 0: an empty corpus ranks nothing on either path
     val empty = TextSearch.textIndexBuild(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", "doc_id",
@@ -903,5 +911,192 @@ class TextSearchSpec extends SparkSpec {
       .collect { case e: ShuffleExchangeExec => hashOn(e) }
     assert(idTerm.size == 1, s"(id, term) exchanges: ${idTerm.size}\n$plan")
     assert(reused == Seq(Set("id")), s"reused exchanges: $reused\n$plan")
+  }
+
+  // ─── one row per (term, doc) ───
+
+  test("one-tier layout: probes equal the full scan after build, replayed append, compaction and merge") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_onetier").toString
+    val long = (0 until 300).map(i =>
+      if (i % 7 == 0) "join" else if (i % 5 == 0) "the" else if (i % 11 == 0) "hash"
+      else s"w${i % 13}").mkString(" ")
+    val edge = Seq[(Long, String)](
+      (9000001L, null), (9000002L, ""), (9000003L, "   "), (9000004L, "\t \n"),
+      (9000005L, "  join filter hash  "), (9000006L, " the the end"),
+      (9000007L, "the end the the "), (9000008L, long),
+      // duplicate doc ids: two texts under one id, and one text twice
+      (9000010L, "join hash table"), (9000010L, "filter the the"),
+      (9000011L, "hash join join"), (9000011L, "the end"),
+      (9000012L, "join filter join"), (9000012L, "join filter join"))
+      .toDF("doc_id", "text")
+    val corpus = docs.select("doc_id", "text").unionByName(edge)
+    // a doc id's rows stay in one half, so every id is indexed by one writer
+    val a = corpus.filter(col("doc_id") % 2 === 0)
+    val b = corpus.filter(col("doc_id") % 2 === 1)
+    val within = corpus.filter(col("doc_id") % 3 === 0)
+    val terms = Seq("join", "filter", "hash")
+    def build(c: DataFrame, name: String) = TextSearch.textIndexBuild(c, "text",
+      "doc_id", s"$dir/$name", buckets = 16, positions = true)
+
+    def ranked(df: DataFrame): Seq[(Long, Double, Long)] = df.orderBy("rank")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+    // `ref` is the corpus the index describes; `stats` its sidecar stats
+    def checkAll(label: String, idx: TextSearch.TextIndex, ref: DataFrame,
+                 stats: (Long, Long)): Unit = {
+      assert((idx.docs, idx.totalLen) == stats, s"$label: sidecar stats")
+      for (q <- Seq(terms, Seq("the", "end", "table")); m <- Seq(1, 2, 0))
+        assert(probedIds(TextSearch.searchIds(idx, q, m)) == scanIds(ref, q, m),
+          s"$label: searchIds $q minMatch $m")
+      for (ph <- Seq(Seq("table", "hash"), Seq("hash", "table"), Seq("the", "the"),
+          Seq("the", "end"), Seq("join", "filter", "hash"), Seq("join", "join")))
+        assert(probedIds(TextSearch.phraseIds(idx, ph)) == scanPhrase(ref, ph),
+          s"$label: phrase $ph")
+      val all = bruteTopK(ref, terms, Int.MaxValue, Some(stats))
+      val keep = within.select("doc_id").collect().map(_.getLong(0)).toSet
+      def expected(s: Seq[(Long, Double)], k: Int) =
+        s.take(k).zipWithIndex.map { case ((id, sc), i) => (id, sc, i + 1L) }
+      // k = 10000 ranks every candidate (the largest k the pruning path takes)
+      for (k <- Seq(1, 3, 10, 10000); minRows <- Seq(Long.MaxValue, 1L)) {
+        assert(ranked(TextSearch.rankedSearch(idx, terms, k, pruneMinRows = minRows)) ==
+          expected(all, k), s"$label: rankedSearch k=$k pruneMinRows=$minRows")
+        assert(ranked(TextSearch.rankedSearchWithin(idx, terms, k, within, "doc_id",
+            pruneMinRows = minRows)) == expected(all.filter(x => keep(x._1)), k),
+          s"$label: rankedSearchWithin k=$k pruneMinRows=$minRows")
+      }
+    }
+
+    val built = build(corpus, "built")
+    checkAll("build", built, corpus, corpusStats(corpus))
+    // one row per (term, id): a doc id indexed twice unions its positions
+    val rows = spark.read.schema(built.schema).parquet(built.path)
+    assert(rows.groupBy("id", "term").count().filter(col("count") > 1).isEmpty)
+    assert(rows.filter(col("tf") =!= size(col("pos")) ||
+      col("pos") =!= array_sort(array_distinct(col("pos")))).isEmpty)
+    assert(rows.filter(col("id") === 9000010L && col("term") === "the")
+      .select("pos").head().getSeq[Int](0) == Seq(1, 2))
+
+    // the same segment appended twice without a segment id: the tree then
+    // describes the corpus with that segment's rows twice
+    val grown = build(a, "grown")
+    TextSearch.textIndexAppend(grown, b, "text")
+    val twice = TextSearch.textIndexAppend(grown, b, "text")
+    val replayed = a.unionByName(b).unionByName(b)
+    checkAll("appended twice", twice, replayed, corpusStats(replayed))
+    // compaction merges the repeated rows and recounts one doc per id
+    val compacted = TextSearch.textIndexCompact(twice)
+    checkAll("compacted", compacted, corpus, perIdStats(corpus))
+    assert(spark.read.schema(compacted.schema).parquet(compacted.path)
+      .groupBy("id", "term").count().filter(col("count") > 1).isEmpty)
+    // merge: positions unioned per (term, id), stats summed
+    val merged = TextSearch.textIndexMerge(build(a, "ma"), build(b, "mb"), s"$dir/merged")
+    checkAll("merged", merged, corpus, corpusStats(corpus))
+  }
+
+  test("positional build and append are one SQL execution each; BM25 and membership scans skip pos") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_pass").toString
+    val half1 = docs.filter(col("doc_id") % 2 === 0)
+    val half2 = docs.filter(col("doc_id") % 2 === 1)
+    var idx: TextSearch.TextIndex = null
+    val buildExecs = org.apache.spark.sql.graft.Executions.count(spark) {
+      idx = TextSearch.textIndexBuild(half1, "text", "doc_id", s"$dir/ix",
+        buckets = 16, positions = true)
+    }
+    val appendExecs = org.apache.spark.sql.graft.Executions.count(spark) {
+      idx = TextSearch.textIndexAppend(idx, half2, "text", segmentId = "pass-1")
+    }
+    assert((buildExecs, appendExecs) == ((1, 1)),
+      s"SQL executions: build $buildExecs, append $appendExecs")
+    assert((idx.docs, idx.totalLen) == corpusStats(docs))
+    val terms = Seq("join", "filter", "hash")
+    def scanned(df: DataFrame): Seq[Seq[String]] = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+    }
+    val bm25 = scanned(TextSearch.rankedSearch(idx, terms, 10))
+    val member = scanned(TextSearch.searchIds(idx, terms, minMatch = 1))
+    val phrase = scanned(TextSearch.phraseIds(idx, Seq("hash", "table")))
+    assert(bm25.nonEmpty && member.nonEmpty && phrase.nonEmpty)
+    assert(!bm25.flatten.contains("pos"), s"BM25 scans $bm25")
+    assert(!member.flatten.contains("pos"), s"membership scans $member")
+    assert(phrase.forall(_.contains("pos")), s"phrase scans $phrase")
+  }
+
+  test("a two-tier tree is refused at re-open; served trees re-key through tx4 and GC sweeps the old ones") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_layout").toString
+    val ixDir = s"$dir/ix"
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    TextSearch.invalidateAllTextIndexes()
+    val corpus = Seq((1L, "join filter"), (2L, "hash table join")).toDF("doc_id", "text")
+    // a served tree of the two-tier format: an occurrence-row sidecar schema
+    // (scalar pos) and a _tf tier, at the path the tx3 key hashed to
+    val twoTier = StructType(Seq(StructField("id", LongType), StructField("len", IntegerType),
+      StructField("pos", IntegerType), StructField("term", StringType),
+      StructField("_tb", IntegerType)))
+    val tx3 = s"$ixDir/tx_${graft.operators.Similarity.keyHash(
+      "tx3|spec/layout|nofiles|text|doc_id|8|true")}"
+    Seq((1L, 2, 0, "join", 0)).toDF("id", "len", "pos", "term", "_tb")
+      .write.partitionBy("_tb").parquet(tx3)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tx3/_tf"))
+    graft.operators.Similarity.writeMeta(spark, tx3,
+      TextSearch.TextIndex(tx3, "doc_id", 8, twoTier, positional = true, 1L, 2L))
+    // re-keyed: the request builds a one-tier tree beside it
+    val builds0 = TextSearch.textBuildCount.get()
+    val served = TextSearch.textIndexFor(corpus, "spec/layout", "text", "doc_id",
+      ixDir, buckets = 8, positions = true)
+    assert(TextSearch.textBuildCount.get() == builds0 + 1 && served.path != tx3)
+    assert(served.schema("pos").dataType.isInstanceOf[ArrayType])
+    assert(probedIds(TextSearch.phraseIds(served, Seq("hash", "table"))) == Set(2L))
+    // the retired tree is an orphan to the sweep
+    val swept = TextSearch.textIndexGc(spark, ixDir, graceMs = 0L)
+    assert(swept.size == 1 && swept.head.endsWith(tx3.split("/").last), swept)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(tx3)))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(served.path)))
+
+    def refused(f: => Any): String = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(served.path) && e.getMessage.contains("rebuild"),
+        e.getMessage)
+      e.getMessage
+    }
+    def reRequest() = {
+      TextSearch.invalidateAllTextIndexes()
+      TextSearch.textIndexFor(corpus, "spec/layout", "text", "doc_id", ixDir,
+        buckets = 8, positions = true)
+    }
+    // a _tf directory in a served tree: refused at the re-open, not rebuilt
+    val tf = new org.apache.hadoop.fs.Path(served.path, "_tf")
+    fs.mkdirs(tf)
+    refused(reRequest())
+    assert(TextSearch.textBuildCount.get() == builds0 + 1)
+    fs.delete(tf, true)
+    assert(reRequest() == served)
+    // a sidecar whose row schema has a scalar pos: refused too
+    graft.operators.Similarity.writeMeta(spark, served.path,
+      served.copy(schema = twoTier))
+    refused(reRequest())
+
+    // the streaming sink refuses the same tree at its restart
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val mem = MemoryStream[(Long, String)](spark)
+    val q = graft.streaming.StreamOps.textIndexSink(mem.toDF().toDF("id", "text"),
+      "text", "id", indexDir = served.path, outDir = s"$dir/out",
+      checkpoint = s"$dir/ckpt", buckets = 8, positions = true,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      mem.addData((3L, "join"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains(served.path) && msg.contains("rebuild"), msg)
+    } finally q.stop()
+    TextSearch.invalidateAllTextIndexes()
   }
 }
