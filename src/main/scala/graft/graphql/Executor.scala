@@ -1203,10 +1203,11 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
     case "search" =>
       // inverted-index keyword search: keep rows whose whitespace-token set
       // matches at least minMatch: of terms: (default ALL — the AND search;
-      // 1 — OR). Served off a prebuilt posting index (TextSearch
-      // .textIndexFor: first request builds, later requests re-open the
-      // cached/sidecar index; probes read ONLY the bucket dirs the terms
-      // hash to, never the corpus text).
+      // 1 — OR), or phrase:/k: (exact phrase, BM25 top-k). Served off a
+      // prebuilt positional posting index (TextSearch.textIndexFor: first
+      // request builds, later requests re-open the cached/sidecar index;
+      // probes read ONLY the bucket dirs the terms hash to, never the
+      // corpus text). One tree per corpus serves all three probe kinds.
       val on = strArg(f, "on")
         .getOrElse(throw new IllegalArgumentException("search needs on: <text column>"))
       val id = strArg(f, "id")
@@ -1240,22 +1241,22 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
         Seq("score", "rank").foreach(c => require(!t.df.columns.contains(c),
           s"search(k:) emits a '$c' column; the table already has one"))
       // corpus: names a root to index INSTEAD of this table — MEMBERSHIP
-      // search is a pure per-document content filter, so probing a
-      // superset index and semi-joining the current table is exact, and
-      // `filter → search` then reuses the root's index instead of building
-      // one per distinct filtered plan (the 100 TB serving shape).
+      // and phrase search are pure per-document content filters, so
+      // probing a superset index and semi-joining the current table is
+      // exact, and `filter → search` then reuses the root's index (the
+      // same tree its unfiltered membership, phrase and k: requests read)
+      // instead of building one per distinct filtered plan (the 100 TB
+      // serving shape).
       // Default: index this table (plan-keyed, content-fingerprinted).
       val searchCorpus = strArg(f, "corpus") match {
         case Some(name) => roots.getOrElse(name,
           throw new IllegalArgumentException(s"unknown table '$name'"))().result
         case None => t.result
       }
-      // phrase: and ranked (k:) retrieval need the positional index
-      // variant (separate cache key)
+      // one positional tree per corpus serves membership, phrase: and k:
       val idx = graft.operators.TextSearch.textIndexFor(searchCorpus,
         corpusKeyOf(searchCorpus), on, id, annIndexDir,
-        buckets = intArg(f, "buckets").getOrElse(256),
-        positions = phrase.nonEmpty || kArg.isDefined)
+        buckets = intArg(f, "buckets").getOrElse(256))
       // k: switches to BM25 ranked retrieval — the table's matching rows
       // gain score + rank columns (order with order(by: ["rank"]))
       val out = kArg match {

@@ -19,12 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   * Tokenization is the engine's standard whitespace form
   * ([[TextAnalysis.tokens]]: split(lower(text), "\\s+")), so the DuckDB
   * oracle recomputes membership exactly and results compose with the
-  * vocab/tf-idf/dedup tiers. Both layouts store ONE row per (term, doc):
-  * plain `(id, term, _tb)`, positional `(id, term, tf, len, pos, _tb)`
-  * with the term's sorted 0-based positions inline (`tf = size(pos)`) and
-  * the doc's token length. Membership probes read `(id, term)` of either
-  * layout, BM25 reads `(id, term, tf, len)` with `pos` pruned, and phrase
-  * probes read the position arrays.
+  * vocab/tf-idf/dedup tiers. The tree stores ONE row per (term, doc),
+  * `(id, term, tf, len, pos, _tb)`, with the term's sorted 0-based
+  * positions inline (`tf = size(pos)`) and the doc's token length. One
+  * tree serves every probe kind through projection: membership reads
+  * `(id, term)`, BM25 reads `(id, term, tf, len)` with `pos` pruned, and
+  * phrase probes read the position arrays — so a corpus has ONE cached
+  * tree, whichever probes it serves.
   *
   * Maintenance follows the family protocol: [[textIndexAppend]] writes new
   * segments into the same bucket partitions (at-least-once tolerant — a
@@ -38,17 +39,18 @@ object TextSearch {
 
   /** Re-openable index handle; persisted as the `_graft_index_meta.bin`
     * sidecar inside the tree (Similarity.writeMeta). `schema` is the row
-    * schema of the tree: plain rows `(id, term, _tb)` serve membership
-    * searches only; `positional` rows add the doc's token length and the
-    * term's positions (enabling [[phraseIds]] and [[rankedSearch]]).
+    * schema of the tree, `(id, term, tf, len, pos, _tb)`.
     * `docs`/`totalLen` are the corpus stats a BM25 probe needs (document
     * count and summed token length over docs with a non-blank token),
     * measured by the pass that writes a build or an append, summed by
-    * merge and recounted from the tree at compaction. */
+    * merge and recounted from the tree at compaction. (Sidecars written
+    * before the plain layout was retired also carry a `positional` flag;
+    * Java deserialization skips it, and [[openIndex]] refuses the plain
+    * trees by their schema.) */
   @SerialVersionUID(1L)
   final case class TextIndex(path: String, idCol: String, buckets: Int,
-                             schema: StructType, positional: Boolean = false,
-                             docs: Long = 0L, totalLen: Long = 0L)
+                             schema: StructType, docs: Long = 0L,
+                             totalLen: Long = 0L)
 
   /** Bucket of a term: xxhash64 folded into [0, buckets). Stable across
     * builds/appends by construction (no RNG, no per-build salt), so any
@@ -57,34 +59,25 @@ object TextSearch {
     pmod(xxhash64(term), lit(buckets.toLong)).cast("int")
 
   /** Buckets of probe terms, computed on the driver: [[termBucket]] — the
-    * expression [[postings]] writes `_tb` with — folded over each term as a
+    * expression the build writes `_tb` with — folded over each term as a
     * literal, so build and probe cannot drift and hashing ≤ |terms|
     * strings launches no query execution. */
   private[graft] def termBuckets(terms: Seq[String], buckets: Int): Seq[Long] =
     terms.map(t => org.apache.spark.sql.graft.ExprBridge.fold(
       SparkSession.active, termBucket(lit(t), buckets)).asInstanceOf[Int].toLong)
 
-  /** Plain posting rows `(id, term, _tb)` of `corpus`, one per (term,
-    * doc); [[positionalRows]] is the positional form. Null texts yield no
-    * postings (an unindexed doc, matching the oracle's unnest-of-null);
-    * empty tokens (split of a blank string) are dropped, they can never
-    * match a real search term. */
-  def postings(corpus: DataFrame, textCol: String, idCol: String,
-               buckets: Int): DataFrame =
-    corpus.select(col(idCol).as("id"),
-        explode(array_distinct(TextAnalysis.tokens(col(textCol)))).as("term"))
-      .filter(length(col("term")) > 0)
-      .withColumn("_tb", termBucket(col("term"), buckets))
-
-  /** Positional rows `(id, term, tf, len, pos, _tb)` of `corpus`, plus the
+  /** Posting rows `(id, term, tf, len, pos, _tb)` of `corpus`, plus the
     * Observation that measures its corpus stats in the same pass: `docs`,
     * the rows with a non-blank token, and `totalLen`, their summed token
-    * count. `pos` is absolute in the whitespace token array and `len` is
-    * that array's length, blank tokens included (the oracle numbers and
-    * measures the same array). The token array is materialized in its OWN
-    * projection before the generator consumes it — the chunked-operator
-    * rule: a single-select form re-tokenizes per emitted row (measured
-    * 277 s vs 14 s for the 27M-posting ×100 build). */
+    * count. Null texts yield no postings (an unindexed doc, matching the
+    * oracle's unnest-of-null); empty tokens (split of a blank string) are
+    * dropped, they can never match a real search term. `pos` is absolute
+    * in the whitespace token array and `len` is that array's length, blank
+    * tokens included (the oracle numbers and measures the same array).
+    * The token array is materialized in its OWN projection before the
+    * generator consumes it — the chunked-operator rule: a single-select
+    * form re-tokenizes per emitted row (measured 277 s vs 14 s for the
+    * 27M-posting ×100 build). */
   private def positionalRows(corpus: DataFrame, textCol: String, idCol: String,
                              buckets: Int): (DataFrame, Observation) = {
     val toks = col("_gq_toks")
@@ -128,64 +121,65 @@ object TextSearch {
       .write.mode(mode).partitionBy("_tb").parquet(path)
 
   /** Write `corpus`'s postings into `path` in one pass; returns their row
-    * schema and the corpus stats the pass measured ((0, 0) for the plain
-    * layout, which keeps none). */
+    * schema and the corpus stats the pass measured. */
   private def writePostings(corpus: DataFrame, textCol: String, idCol: String,
-                            buckets: Int, positions: Boolean, path: String,
-                            mode: String): (StructType, Long, Long) =
-    if (!positions) {
-      val rows = postings(corpus, textCol, idCol, buckets)
-      writeRows(rows, path, mode)
-      (rows.schema, 0L, 0L)
-    } else {
-      val (rows, stats) = positionalRows(corpus, textCol, idCol, buckets)
-      writeRows(rows, path, mode)
-      // the Observation completes from the listener bus once the write's
-      // execution ends (the bound only turns a lost event into an error),
-      // with an empty row when the optimizer proved the corpus empty and
-      // dropped the observed node
-      val r = scala.concurrent.Await.result(stats.future,
-        scala.concurrent.duration.Duration(5, "min"))
-      if (r.length == 0) (rows.schema, 0L, 0L)
-      else (rows.schema, r.getLong(0), r.getLong(1))
-    }
+                            buckets: Int, path: String,
+                            mode: String): (StructType, Long, Long) = {
+    val (rows, stats) = positionalRows(corpus, textCol, idCol, buckets)
+    writeRows(rows, path, mode)
+    // the Observation completes from the listener bus once the write's
+    // execution ends (the bound only turns a lost event into an error),
+    // with an empty row when the optimizer proved the corpus empty and
+    // dropped the observed node
+    val r = scala.concurrent.Await.result(stats.future,
+      scala.concurrent.duration.Duration(5, "min"))
+    if (r.length == 0) (rows.schema, 0L, 0L)
+    else (rows.schema, r.getLong(0), r.getLong(1))
+  }
 
-  /** Build the index at `path`: one corpus pass writes the postings, and
-    * a positional build takes its corpus stats from that same pass. */
+  /** Build the index at `path`: one corpus pass writes the postings and
+    * takes the corpus stats. `positions` is ignored: every tree is
+    * positional. It stays only so that callers passing it by name (the
+    * perfbench harness among them) still compile. */
   def textIndexBuild(corpus: DataFrame, textCol: String, idCol: String,
                      path: String, buckets: Int = 256,
-                     positions: Boolean = false): TextIndex = {
+                     @deprecated("every text index is positional", "0.1.0")
+                     positions: Boolean = true): TextIndex = {
     require(buckets > 0, s"textIndexBuild: buckets must be positive, got $buckets")
     val (schema, n, tl) = writePostings(corpus, textCol, idCol, buckets,
-      positions, path, "overwrite")
-    val idx = TextIndex(path, idCol, buckets, schema, positions, n, tl)
+      path, "overwrite")
+    val idx = TextIndex(path, idCol, buckets, schema, n, tl)
     Similarity.writeMeta(corpus.sparkSession, path, idx)
     idx
   }
 
-  /** Re-open the index whose sidecar is in `path`, refusing a tree in the
-    * retired two-tier layout (one posting row per token occurrence with a
-    * scalar `pos`, plus a doc-level `_tf` tier), which no probe reads. */
+  /** Re-open the index whose sidecar is in `path`, refusing a tree in a
+    * retired layout, which no probe reads: the plain layout (`(id, term)`
+    * rows with no positions) and the two-tier one (one posting row per
+    * token occurrence with a scalar `pos`, plus a doc-level `_tf` tier). */
   private[graft] def openIndex(spark: SparkSession, path: String): Option[TextIndex] =
     Similarity.readMeta[TextIndex](spark, path).map { idx =>
       val root = new org.apache.hadoop.fs.Path(path)
-      val scalarPos = idx.schema.exists(f =>
-        f.name == "pos" && !f.dataType.isInstanceOf[ArrayType])
-      if (scalarPos || root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(new org.apache.hadoop.fs.Path(root, "_tf")))
-        throw new IllegalStateException(s"text index at $path has the retired " +
-          "two-tier layout (occurrence rows plus a _tf tier); rebuild it: " +
-          "delete the tree and build it again")
+      def tfTier = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new org.apache.hadoop.fs.Path(root, "_tf"))
+      val retired = idx.schema.find(_.name == "pos").map(_.dataType) match {
+        case None => Some("plain layout (no positions)")
+        case Some(_: ArrayType) if !tfTier => None
+        case _ => Some("two-tier layout (occurrence rows plus a _tf tier)")
+      }
+      retired.foreach(layout => throw new IllegalStateException(
+        s"text index at $path has the retired $layout; rebuild it: " +
+          "delete the tree and build it again"))
       idx
     }
 
   /** Append a segment's postings into the existing bucket partitions.
     * Replay-tolerant: a replayed segment's rows change no membership,
     * phrase or BM25 answer (probes count DISTINCT terms, union positions
-    * and take max tf per (term, doc)); compaction merges them. Positional
-    * indexes also fold the segment's corpus stats, measured by the same
-    * pass, into the sidecar (postings-then-stats order: a crash between
-    * the two leaves avgdl slightly stale).
+    * and take max tf per (term, doc)); compaction merges them. The
+    * segment's corpus stats, measured by the same pass, fold into the
+    * sidecar (postings-then-stats order: a crash between the two leaves
+    * avgdl slightly stale).
     *
     * `segmentId`, when given, must be DETERMINISTIC per logical segment
     * (mirroring [[Dedup.minhashIndexAppend]]'s replay guard — round-12
@@ -237,31 +231,26 @@ object TextSearch {
       // compactor's in-progress swap is indistinguishable from a crash
       IndexMaint.recoverSwap(spark, index.path)
       val (_, n, tl) = writePostings(segment, textCol, index.idCol,
-        index.buckets, index.positional, index.path, "append")
-      val out =
-        if (!index.positional) index
-        else {
-          // fold into the LATEST PERSISTED stats under a meta lock, not
-          // into the caller's handle: appenders of DIFFERENT segments hold
-          // different claims (and a caller can legitimately pass a stale
-          // handle), so `index.docs + n` is a read-modify-write lost
-          // update — the second writer would overwrite the first's fold
-          // and skew BM25 N/avgdl until a compaction recount. The lock
-          // only spans the sub-second sidecar read+write, never the
-          // segment-sized job above.
-          val staleMs = sys.props.get("graft.index.append.claim.stale.ms")
-            .flatMap(_.toLongOption).getOrElse(120000L)
-          IndexMaint.withFileLock(fs,
-              new org.apache.hadoop.fs.Path(s"${index.path}/_gq_metalock"),
-              staleMs) {
-            val cur = Similarity.readMeta[TextIndex](spark, index.path)
-              .getOrElse(index)
-            val updated = cur.copy(docs = cur.docs + n,
-              totalLen = cur.totalLen + tl)
-            Similarity.writeMeta(spark, index.path, updated)
-            updated
-          }
-        }
+        index.buckets, index.path, "append")
+      // fold into the LATEST PERSISTED stats under a meta lock, not into
+      // the caller's handle: appenders of DIFFERENT segments hold
+      // different claims (and a caller can legitimately pass a stale
+      // handle), so `index.docs + n` is a read-modify-write lost update —
+      // the second writer would overwrite the first's fold and skew BM25
+      // N/avgdl until a compaction recount. The lock only spans the
+      // sub-second sidecar read+write, never the segment-sized job above.
+      val staleMs = sys.props.get("graft.index.append.claim.stale.ms")
+        .flatMap(_.toLongOption).getOrElse(120000L)
+      val out = IndexMaint.withFileLock(fs,
+          new org.apache.hadoop.fs.Path(s"${index.path}/_gq_metalock"),
+          staleMs) {
+        val cur = Similarity.readMeta[TextIndex](spark, index.path)
+          .getOrElse(index)
+        val updated = cur.copy(docs = cur.docs + n,
+          totalLen = cur.totalLen + tl)
+        Similarity.writeMeta(spark, index.path, updated)
+        updated
+      }
       marker.foreach(m => fs.create(m, true).close())
       out
     }
@@ -279,11 +268,11 @@ object TextSearch {
   }
 
   /** Rewrite one-file-per-bucket with replay duplicates merged; swap
-    * protocol + sidecar re-write as in the LSH/IVF family. Positional
-    * compaction unions each (term, id)'s positions and RECOMPUTES the
-    * sidecar corpus stats from the tree, one document per id at its
-    * longest length — healing any replay double-count a crashed append
-    * left behind, the same discipline as the minhash occ recount. (Docs
+    * protocol + sidecar re-write as in the LSH/IVF family. Compaction
+    * unions each (term, id)'s positions and RECOMPUTES the sidecar corpus
+    * stats from the tree, one document per id at its longest length —
+    * healing any replay double-count a crashed append left behind, the
+    * same discipline as the minhash occ recount. (Docs
     * whose text tokenizes to only blank tokens carry no postings and so
     * drop out of the recount — they contribute no terms, so their absence
     * from avgdl is the better estimate anyway.) Returns the possibly-
@@ -299,14 +288,10 @@ object TextSearch {
       new org.apache.hadoop.fs.Path(index.path)) {
     IndexMaint.recoverSwap(spark, index.path)
     val tree = spark.read.schema(index.schema).parquet(index.path)
-    val (rows, updated) =
-      if (!index.positional) (tree.dropDuplicates(), index)
-      else {
-        val r = tree.groupBy("id").agg(max(col("len")).cast("long").as("_len"))
-          .agg(count(lit(1)), coalesce(sum(col("_len")), lit(0L))).head()
-        (perTermDoc(tree), index.copy(docs = r.getLong(0), totalLen = r.getLong(1)))
-      }
-    IndexMaint.swapRewrite(spark, index.path, rows,
+    val r = tree.groupBy("id").agg(max(col("len")).cast("long").as("_len"))
+      .agg(count(lit(1)), coalesce(sum(col("_len")), lit(0L))).head()
+    val updated = index.copy(docs = r.getLong(0), totalLen = r.getLong(1))
+    IndexMaint.swapRewrite(spark, index.path, perTermDoc(tree),
       Seq("_tb"), tmp => {
         Similarity.writeMeta(spark, tmp, updated)
         // carry the segment done-markers across the rewrite: the appended
@@ -340,7 +325,7 @@ object TextSearch {
   def textIndexMerge(a: TextIndex, b: TextIndex, destPath: String): TextIndex = {
     require(a.buckets == b.buckets,
       s"textIndexMerge: bucket geometry differs (${a.buckets} vs ${b.buckets})")
-    require(a.idCol == b.idCol && a.positional == b.positional,
+    require(a.idCol == b.idCol,
       s"textIndexMerge: index contracts differ ($a vs $b)")
     require(destPath != a.path && destPath != b.path,
       "textIndexMerge needs a destPath distinct from both inputs")
@@ -349,9 +334,8 @@ object TextSearch {
     IndexMaint.recoverSwap(spark, b.path)
     val both = spark.read.schema(a.schema).parquet(a.path)
       .unionByName(spark.read.schema(b.schema).parquet(b.path))
-    writeRows(if (a.positional) perTermDoc(both) else both.dropDuplicates(),
-      destPath, "overwrite")
-    val merged = TextIndex(destPath, a.idCol, a.buckets, a.schema, a.positional,
+    writeRows(perTermDoc(both), destPath, "overwrite")
+    val merged = TextIndex(destPath, a.idCol, a.buckets, a.schema,
       a.docs + b.docs, a.totalLen + b.totalLen)
     Similarity.writeMeta(spark, destPath, merged)
     merged
@@ -382,7 +366,7 @@ object TextSearch {
     val need = if (minMatch <= 0 || minMatch > norm.size) norm.size else minMatch
     val tbs = termBuckets(norm, index.buckets)
     val idType = index.schema("id").dataType
-    // both layouts hold one row per (term, doc): membership reads (id, term)
+    // one row per (term, doc): membership reads (id, term), `pos` pruned
     IndexMaint.readPartitions(spark, index.path, index.schema, "_tb", tbs) match {
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -403,12 +387,10 @@ object TextSearch {
     * each doc's (term, pos) rows for the phrase terms gather into one list,
     * and a phrase match is a start position p of the first term with p+i
     * in the i-th term's positions for every i (one `exists` per doc — no
-    * k-way self-join of the posting stream). Needs a positional index.
-    * Repeated terms in the phrase ("the the") are handled naturally: the
-    * same positions are consulted at both offsets. */
+    * k-way self-join of the posting stream). Repeated terms in the phrase
+    * ("the the") are handled naturally: the same positions are consulted
+    * at both offsets. */
   def phraseIds(index: TextIndex, phrase: Seq[String]): DataFrame = {
-    require(index.positional,
-      s"phraseIds needs an index built with positions = true (${index.path})")
     val spark = SparkSession.active
     val norm = phrase.map(_.toLowerCase.trim)
     require(norm.nonEmpty && norm.forall(_.nonEmpty),
@@ -471,8 +453,6 @@ object TextSearch {
   private def rankedSearchImpl(index: TextIndex, terms: Seq[String], k: Int,
                                k1: Double, b: Double, pruneMinRows: Long,
                                within: Option[DataFrame]): DataFrame = {
-    require(index.positional,
-      s"rankedSearch needs an index built with positions = true (${index.path})")
     require(k > 0, "rankedSearch needs k > 0")
     val spark = SparkSession.active
     val norm = normTerms(terms)
@@ -709,18 +689,19 @@ object TextSearch {
     * at-least-once semantics. */
   def textIndexFor(corpus: DataFrame, corpusKey: String, textCol: String,
                    idCol: String, baseDir: String,
-                   buckets: Int = 256, positions: Boolean = false): TextIndex = {
-    // tx4: format tag — bumped when the tree layout changes (tx4: one row
-    // per (term, doc) with inline positions). The path derives from this
-    // key, so trees of an older format are never re-opened as current, and
-    // textIndexGc sweeps them like any orphan
-    val params = s"tx4|$corpusKey|$textCol|$idCol|$buckets|$positions"
+                   buckets: Int = 256): TextIndex = {
+    // tx5: format tag — bumped when the tree layout changes (tx4: one row
+    // per (term, doc) with inline positions; tx5: every tree positional,
+    // one per corpus). The path derives from this key, so trees of an
+    // older format are never re-opened as current, and textIndexGc sweeps
+    // them like any orphan
+    val params = s"tx5|$corpusKey|$textCol|$idCol|$buckets"
     // ONE stat pass per request: the statuses feed both the fingerprint
     // (cache key) and the lineage record — the pre-round-11 form statted
     // every file twice (three times on a miss) per served request
     val files = IndexMaint.fileStatuses(corpus)
-    val key = s"tx4|$corpusKey|${Similarity.fingerprintFrom(files)}|" +
-      s"$textCol|$idCol|$buckets|$positions"
+    val key = s"tx5|$corpusKey|${Similarity.fingerprintFrom(files)}|" +
+      s"$textCol|$idCol|$buckets"
     val spark = corpus.sparkSession
     val path = s"$baseDir/tx_${Similarity.keyHash(key)}"
     IndexMaint.cachedIndexFor[TextIndex](
@@ -728,8 +709,7 @@ object TextSearch {
       path, pathOf = _.path,
       reopenAt = p => openIndex(spark, p),
       build = () => {
-        val idx = textIndexBuild(corpus, textCol, idCol, path, buckets,
-          positions)
+        val idx = textIndexBuild(corpus, textCol, idCol, path, buckets)
         textBuildCount.incrementAndGet()
         idx
       },

@@ -762,7 +762,8 @@ object GqlQueries {
       "doc_id BIGINT"),
     PipelineQueries.q_text_search_min.oracle)
 
-  /** Exact-phrase search through the service (positional index variant). */
+  /** Exact-phrase search through the service (off the same root text
+    * index its membership and BM25 searches read). */
   val q_gql_phrase = Q(
     "q_gql_phrase",
     (s, dir) => GqlBridge.frame(s, dir,

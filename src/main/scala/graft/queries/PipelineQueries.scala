@@ -1911,8 +1911,9 @@ object PipelineQueries {
             GROUP BY doc_id HAVING count(DISTINCT t) >= 2
             ORDER BY doc_id"""))
 
-  /** Exact-phrase search off the POSITIONAL index variant: candidates from
-    * the bucket-pruned probe, adjacency verified on the stored position
+  /** Exact-phrase search off the corpus's one text index (the tree
+    * q_text_search and q_text_bm25 read too): candidates from the
+    * bucket-pruned probe, adjacency verified on the stored position
     * arrays (one exists over each doc's gathered positions — the corpus
     * text is never read). The oracle verifies adjacency with a
     * positional self-join over the tokenized text. */
@@ -1921,7 +1922,7 @@ object PipelineQueries {
     (s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val idx = TextSearch.textIndexFor(d, s"$dir/documents", "text",
-        "doc_id", txDir(dir), positions = true)
+        "doc_id", txDir(dir))
       TextSearch.phraseIds(idx, Seq("table", "hash"))
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
@@ -1935,7 +1936,7 @@ object PipelineQueries {
           WHERE t0.term = 'table' AND t1.term = 'hash'
           ORDER BY t0.doc_id"""))
 
-  /** BM25 top-50 ranked retrieval off the positional index: tf from stored
+  /** BM25 top-50 ranked retrieval off the same text index: tf from stored
     * positions, per-term df from the term's own bucket, N/avgdl from the
     * sidecar corpus stats — corpus text never read. The oracle recomputes
     * the whole Okapi formula (same literal constants, same association
@@ -1946,7 +1947,7 @@ object PipelineQueries {
     (s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val idx = TextSearch.textIndexFor(d, s"$dir/documents", "text",
-        "doc_id", txDir(dir), positions = true)
+        "doc_id", txDir(dir))
       TextSearch.rankedSearch(idx, Seq("join", "filter", "hash"), k = 50)
         .withColumnRenamed("id", "doc_id")
         .orderBy("rank")

@@ -810,9 +810,13 @@ object StreamOps {
     * Per micro-batch the docs are appended to `outDir` (the corpus) and
     * their postings appended into the index's bucket partitions
     * (bootstrap: the first non-empty batch BUILDS the index + sidecar;
-    * restart re-opens it, refusing a tree in the retired two-tier layout;
+    * restart re-opens it, refusing a tree in a retired layout — plain or
+    * two-tier — with an error that names the path and says to rebuild;
     * a data-bearing dir without a sidecar is refused, like every
-    * index-backed sink). Write order is output-then-postings:
+    * index-backed sink). Every sink's tree is positional, so it serves
+    * membership, phrase and BM25 probes alike; `positions` is ignored and
+    * stays only so that callers passing it by name (the perfbench harness
+    * among them) still compile. Write order is output-then-postings:
     * a crash between the two replays the batch, duplicating output rows
     * (at-least-once, standard foreachBatch) and postings — answer-
     * preserving because searches count DISTINCT terms per doc.
@@ -823,7 +827,8 @@ object StreamOps {
   def textIndexSink(stream: DataFrame, textCol: String, idCol: String,
                     indexDir: String, outDir: String, checkpoint: String,
                     buckets: Int = 256, compactFiles: Int = 0,
-                    positions: Boolean = false,
+                    @deprecated("every text index is positional", "0.1.0")
+                    positions: Boolean = true,
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -844,8 +849,7 @@ object StreamOps {
         if (idx == null)
           idx = withBootstrapMarker(spark, indexDir) {
             // textIndexBuild writes its own sidecar as the last step
-            TextSearch.textIndexBuild(b, textCol, idCol, indexDir, buckets,
-              positions)
+            TextSearch.textIndexBuild(b, textCol, idCol, indexDir, buckets)
           }
         // deterministic per-batch segment id: foreachBatch is at-least-once
         // (a crash between this append and the checkpoint commit replays the

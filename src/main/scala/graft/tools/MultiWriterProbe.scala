@@ -73,8 +73,7 @@ object MultiWriterProbe {
       .write.mode("overwrite").parquet(s"$work/seg_b")
 
     def buildPair(tag: String): (TextSearch.TextIndex, Dedup.MinHashIndex) = {
-      val tx = TextSearch.textIndexBuild(base, "text", "doc_id",
-        s"$work/tx$tag", positions = true)
+      val tx = TextSearch.textIndexBuild(base, "text", "doc_id", s"$work/tx$tag")
       val mh = Dedup.minhashIndexBuild(base, "text", "doc_id", s"$work/mh$tag")
       Similarity.writeMeta(spark, s"$work/mh$tag", mh)
       (tx, mh)

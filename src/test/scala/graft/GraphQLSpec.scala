@@ -312,6 +312,52 @@ class GraphQLSpec extends SparkSpec {
         s"""{ documents { s: $q { count } } }"""))
   }
 
+  test("one text tree per corpus: membership, phrase, k: and filter → k:/corpus: share one build") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.TextSearch
+    TextSearch.invalidateAllTextIndexes()
+    val svc = new GraphQLService(spark, sf)
+    val builds0 = TextSearch.textBuildCount.get()
+    def ids(r: String): Seq[Long] = {
+      assert(!r.contains("\"errors\""), r)
+      """"doc_id":\{"values":\[([^\]]*)\]""".r.findFirstMatchIn(r)
+        .getOrElse(fail(s"no doc_id values in $r")).group(1)
+        .split(",").filter(_.nonEmpty).map(_.toLong).toSeq
+    }
+    val count = svc.execute(
+      """{ documents { s: search(terms: ["join", "filter"], on: "text",
+           id: "doc_id") { count } } }""")
+    val bm25 = ids(svc.execute(
+      """{ documents { s: search(terms: ["join", "filter"], on: "text", id: "doc_id",
+           k: 10) { o: order(by: ["rank"]) { columns { doc_id { values } } } } } }"""))
+    val phrase = ids(svc.execute(
+      """{ documents { s: search(phrase: ["table", "hash"], on: "text", id: "doc_id") {
+           o: order(by: ["doc_id"]) { columns { doc_id { values } } } } } }"""))
+    val within = ids(svc.execute(
+      """{ documents { f: filter(lang: {eq: "en"}) { s: search(terms: ["hash", "table"],
+           on: "text", id: "doc_id", k: 10, corpus: "documents") {
+           o: order(by: ["rank"]) { columns { doc_id { values } } } } } } }"""))
+    assert(TextSearch.textBuildCount.get() == builds0 + 1)
+    val trees = new java.io.File(svc.indexDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("tx_"))
+    assert(trees.length == 1, trees.toSeq)
+    // the answers of a tree built outside the service
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val ref = TextSearch.textIndexBuild(docs, "text", "doc_id",
+      java.nio.file.Files.createTempDirectory("graft_gql_onetree").toString)
+    def rankedIds(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.orderBy("rank").collect().map(_.getLong(0)).toSeq
+    assert(count.contains(s""""count":${TextSearch.searchIds(ref,
+      Seq("join", "filter")).count()}"""), count)
+    assert(bm25.nonEmpty && bm25 == rankedIds(
+      TextSearch.rankedSearch(ref, Seq("join", "filter"), 10)))
+    assert(phrase.nonEmpty && phrase ==
+      TextSearch.phraseIds(ref, Seq("table", "hash")).collect().map(_.getLong(0)).sorted.toSeq)
+    assert(within.nonEmpty && within == rankedIds(TextSearch.rankedSearchWithin(ref,
+      Seq("hash", "table"), 10, docs.filter(col("lang") === "en"), "doc_id")))
+    TextSearch.invalidateAllTextIndexes()
+  }
+
   test("unknown table and field produce errors") {
     intercept[IllegalArgumentException](service.execute("{ nope { count } }"))
     intercept[IllegalArgumentException](service.execute("{ nation { bogus } }"))

@@ -48,6 +48,18 @@ class QBenchSpec extends SparkSpec {
     assert(r.parity.head.digests.map(_._1).distinct == Seq(10L))
   }
 
+  test("every arm is warmed once, untimed, before the first timed rep") {
+    val calls = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val names = Seq("q_a", "q_b", "q_c")
+    val registry = names.map(n => Q(n, (s, _) => { calls.add(n); s.range(1).toDF() }, None))
+    val r = QBench.run(spark, sf, Scenario("warm", names, "any"), 2, registry)
+    assert(r.ok)
+    import scala.jdk.CollectionConverters._
+    val seen = calls.asScala.toSeq
+    assert(seen.take(names.size) == names, s"warm-up calls: $seen")
+    assert(seen.drop(names.size) == names.flatMap(n => Seq(n, n)), s"timed calls: $seen")
+  }
+
   test("scenario confs are pinned for the run and restored after it") {
     val key = "spark.graft.profile.selectionMinBytes"
     val seen = new java.util.concurrent.atomic.AtomicReference[Option[String]]

@@ -950,7 +950,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamOps.textIndexSink(
       mem.toDF.toDF("id", "text"), "text", "id",
       indexDir = s"$work/idx", outDir = s"$work/out",
-      checkpoint = s"$work/ckpt", buckets = 8, positions = true,
+      checkpoint = s"$work/ckpt", buckets = 8,
       trigger = Trigger.ProcessingTime(0))
     try {
       mem.addData((1L, "alpha beta"), (2L, "beta gamma"))

@@ -169,7 +169,7 @@ class TextSearchSpec extends SparkSpec {
   test("phrase search equals a positional full-scan recompute") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_phrase").toString
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
-      buckets = 32, positions = true)
+      buckets = 32)
     for (phrase <- Seq(Seq("table", "hash"), Seq("merge", "group"),
         Seq("customer", "join", "filter"))) {
       val got = probedIds(TextSearch.phraseIds(idx, phrase))
@@ -184,19 +184,14 @@ class TextSearchSpec extends SparkSpec {
     import spark.implicits._
     val rep = Seq((1L, "the the end"), (2L, "the end the")).toDF("doc_id", "text")
     val repIx = TextSearch.textIndexBuild(rep, "text", "doc_id", s"$dir/rep",
-      buckets = 4, positions = true)
+      buckets = 4)
     assert(probedIds(TextSearch.phraseIds(repIx, Seq("the", "the"))) == Set(1L))
-    // unknown term empties; non-positional index refused; blank term refused
+    // unknown term empties; blank term refused
     assert(TextSearch.phraseIds(idx, Seq("table", "zzzznope")).isEmpty)
-    val plain = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/plain",
-      buckets = 8)
-    intercept[IllegalArgumentException] {
-      TextSearch.phraseIds(plain, Seq("table", "hash"))
-    }
     intercept[IllegalArgumentException] {
       TextSearch.phraseIds(idx, Seq("table", " "))
     }
-    // membership searches work unchanged on a positional index
+    // membership searches read the same tree
     assert(probedIds(TextSearch.searchIds(idx, Seq("join", "filter"))) ==
       scanIds(docs, Seq("join", "filter")))
   }
@@ -204,7 +199,7 @@ class TextSearchSpec extends SparkSpec {
   test("BM25 ranked retrieval equals a full-scan recompute; ranking properties hold") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_bm25").toString
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
-      buckets = 32, positions = true)
+      buckets = 32)
     val terms = Seq("join", "filter", "hash")
     // full-scan recompute of the same Okapi formula over raw text
     val toks = docs.select(col("doc_id"),
@@ -232,11 +227,6 @@ class TextSearchSpec extends SparkSpec {
     // (same-ish length corpus; spot-check the extremes of the ranking)
     assert(got.head._2 >= got.last._2)
     // contract checks
-    val plain = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/plain",
-      buckets = 8)
-    intercept[IllegalArgumentException] {
-      TextSearch.rankedSearch(plain, terms, 5)
-    }
     intercept[IllegalArgumentException] {
       TextSearch.rankedSearch(idx, terms, 0)
     }
@@ -275,7 +265,7 @@ class TextSearchSpec extends SparkSpec {
     TextSearch.invalidateAllTextIndexes()
     docs.filter(col("doc_id") < 200).write.parquet(corpusDir)
     TextSearch.textIndexFor(spark.read.parquet(corpusDir), "spec/conc",
-      "text", "doc_id", s"$dir/ix", buckets = 16, positions = true)
+      "text", "doc_id", s"$dir/ix", buckets = 16)
     docs.filter(col("doc_id") >= 200 && col("doc_id") < 300)
       .write.mode("append").parquet(corpusDir)
     val gen2 = spark.read.parquet(corpusDir) // file listing frozen at gen2
@@ -290,16 +280,16 @@ class TextSearchSpec extends SparkSpec {
           def call(): TextSearch.TextIndex = {
             latch.await()
             TextSearch.textIndexFor(g, "spec/conc", "text", "doc_id",
-              s"$dir/ix", buckets = 16, positions = true)
+              s"$dir/ix", buckets = 16)
           }
         }))
       latch.countDown()
       racing.foreach(_.get())
     } finally pool.shutdown()
     val iFinal = TextSearch.textIndexFor(gen3, "spec/conc", "text", "doc_id",
-      s"$dir/ix", buckets = 16, positions = true)
+      s"$dir/ix", buckets = 16)
     val fresh = TextSearch.textIndexBuild(gen3, "text", "doc_id",
-      s"$dir/fresh", buckets = 16, positions = true)
+      s"$dir/fresh", buckets = 16)
     assert(iFinal.docs == fresh.docs && iFinal.totalLen == fresh.totalLen,
       s"concurrent growth corrupted stats: $iFinal vs $fresh")
     assert(TextSearch.rankedSearch(iFinal, Seq("join", "filter"), 10)
@@ -318,7 +308,7 @@ class TextSearchSpec extends SparkSpec {
     // the exact shared-knob hazard this round removed from the operators.
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_det").toString
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
-      buckets = 32, positions = true)
+      buckets = 32)
     val terms = Seq("join", "filter", "hash", "table")
     def run(): Seq[(Long, Double, Long)] =
       TextSearch.rankedSearch(idx, terms, k = 25).orderBy("rank")
@@ -411,7 +401,7 @@ class TextSearchSpec extends SparkSpec {
     val a = ((1L to 5L).map(i => (i, "r c c")) ++
       (100L to 129L).map(i => (i, "c c c"))).toDF("doc_id", "text")
     val ixA = TextSearch.textIndexBuild(a, "text", "doc_id", s"$dir/a",
-      buckets = 8, positions = true)
+      buckets = 8)
     val before = TextSearch.pruneHitCount.get()
     val gotA = rankedPairs(ixA, Seq("r", "c"), k = 2)
     assert(TextSearch.pruneHitCount.get() == before + 1,
@@ -428,7 +418,7 @@ class TextSearchSpec extends SparkSpec {
       (101L to 300L).map(i => (i, ("c d " * 12).trim)) ++
       Seq((400L, ("c d " * 100).trim))).toDF("doc_id", "text")
     val ixB = TextSearch.textIndexBuild(bDf, "text", "doc_id", s"$dir/b",
-      buckets = 8, positions = true)
+      buckets = 8)
     val before2 = TextSearch.pruneHitCount.get()
     val gotB = rankedPairs(ixB, Seq("r", "c", "d"), k = 3)
     assert(TextSearch.pruneHitCount.get() == before2,
@@ -451,14 +441,14 @@ class TextSearchSpec extends SparkSpec {
     val c1 = spark.read.parquet(corpusDir)
     val gen1Files = c1.inputFiles.toSeq // frozen pre-growth listing
     val i1 = TextSearch.textIndexFor(c1, "spec/growth", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1)
     // append-only growth: new files land, old files untouched
     docs.filter(col("doc_id") % 2 === 1)
       .write.mode("append").parquet(corpusDir)
     val c2 = spark.read.parquet(corpusDir)
     val i2 = TextSearch.textIndexFor(c2, "spec/growth", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1,
       "append-only growth must NOT rebuild")
     assert(TextSearch.textDeltaAppendCount.get() == appends0 + 1,
@@ -466,7 +456,7 @@ class TextSearchSpec extends SparkSpec {
     assert(i2.path == i1.path, "the grown corpus reuses the existing tree")
     // the appended tree answers exactly like a fresh build of the full corpus
     val fresh = TextSearch.textIndexBuild(c2, "text", "doc_id", s"$dir/fresh",
-      buckets = 16, positions = true)
+      buckets = 16)
     for (terms <- Seq(Seq("join", "filter"), Seq("scan", "batch", "row")))
       assert(probedIds(TextSearch.searchIds(i2, terms, 1)) ==
         probedIds(TextSearch.searchIds(fresh, terms, 1)), s"grown != fresh for $terms")
@@ -476,7 +466,7 @@ class TextSearchSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     // a repeat request is a pure cache hit
     TextSearch.textIndexFor(c2, "spec/growth", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1 &&
       TextSearch.textDeltaAppendCount.get() == appends0 + 1)
     // a STALE pre-growth reader (its frame lists only gen-1's files)
@@ -486,7 +476,7 @@ class TextSearchSpec extends SparkSpec {
     // gen-2's files and double-count docs/totalLen in the sidecar
     val stale = spark.read.parquet(gen1Files: _*)
     val iStale = TextSearch.textIndexFor(stale, "spec/growth", "text",
-      "doc_id", ixDir, buckets = 16, positions = true)
+      "doc_id", ixDir, buckets = 16)
     assert(iStale.path == i2.path && iStale.docs == i2.docs,
       "stale reader must see the grown (superset) tree")
     // grow again with genuinely new docs: the delta must be ONLY them
@@ -495,12 +485,12 @@ class TextSearchSpec extends SparkSpec {
       .write.mode("append").parquet(corpusDir)
     val cFull = spark.read.parquet(corpusDir)
     val iFull = TextSearch.textIndexFor(cFull, "spec/growth", "text",
-      "doc_id", ixDir, buckets = 16, positions = true)
+      "doc_id", ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1 &&
       TextSearch.textDeltaAppendCount.get() == appends0 + 2,
       "third generation must still delta-append, not rebuild")
     val fresh3 = TextSearch.textIndexBuild(cFull, "text", "doc_id",
-      s"$dir/fresh3", buckets = 16, positions = true)
+      s"$dir/fresh3", buckets = 16)
     assert(iFull.docs == fresh3.docs && iFull.totalLen == fresh3.totalLen,
       "a regressed lineage would have re-appended gen-2 and inflated stats")
     // a REWRITTEN corpus (not a superset) rebuilds at a fresh path,
@@ -509,7 +499,7 @@ class TextSearchSpec extends SparkSpec {
       .write.mode("overwrite").parquet(corpusDir)
     val c3 = spark.read.parquet(corpusDir)
     val i3 = TextSearch.textIndexFor(c3, "spec/growth", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 2)
     assert(i3.path != i1.path)
     def trees(): Set[String] = {
@@ -524,7 +514,7 @@ class TextSearchSpec extends SparkSpec {
     // fingerprint never resolves again → its tree is the orphan
     TextSearch.invalidateAllTextIndexes()
     TextSearch.textIndexFor(c3, "spec/growth", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     val removed = TextSearch.textIndexGc(spark, ixDir, graceMs = 0L)
     assert(removed.size == 1, s"GC must sweep exactly the orphan, got $removed")
     assert(trees() == Set(i3.path.split("/").last))
@@ -553,7 +543,7 @@ class TextSearchSpec extends SparkSpec {
       // first (least-recently-touched) must evict
       for (k <- Seq("a", "b", "c"))
         TextSearch.textIndexFor(docs, s"spec/lru-$k", "text", "doc_id",
-          s"$dir/ix", buckets = 8, positions = true)
+          s"$dir/ix", buckets = 8)
       assert(TextSearch.textBuildCount.get() == builds0 + 3)
       assert(TextSearch.textCacheSize <= 2,
         s"cache must stay at the cap, got ${TextSearch.textCacheSize}")
@@ -561,7 +551,7 @@ class TextSearchSpec extends SparkSpec {
       // the evicted index re-opens from its sidecar: buildCount stays flat
       // (the lifecycle contract that makes eviction safe at any moment)
       val re = TextSearch.textIndexFor(docs, "spec/lru-a", "text", "doc_id",
-        s"$dir/ix", buckets = 8, positions = true)
+        s"$dir/ix", buckets = 8)
       assert(TextSearch.textBuildCount.get() == builds0 + 3,
         "an evicted-then-re-requested index must re-open, not rebuild")
       assert(TextSearch.rankedSearch(re, Seq("join", "filter"), 5)
@@ -618,7 +608,7 @@ class TextSearchSpec extends SparkSpec {
     val appends0 = TextSearch.textDeltaAppendCount.get()
     val c1 = spark.read.parquet(corpusDir)
     TextSearch.textIndexFor(c1, "spec/durable", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1)
     // append-only growth lands, then the JVM "restarts" (all in-memory
     // caches and lineage cleared — only the sidecars and the persisted
@@ -628,12 +618,12 @@ class TextSearchSpec extends SparkSpec {
     TextSearch.invalidateAllTextIndexes()
     val c2 = spark.read.parquet(corpusDir)
     val i2 = TextSearch.textIndexFor(c2, "spec/durable", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1,
       "a restarted JVM must take the delta-append fast path, not rebuild")
     assert(TextSearch.textDeltaAppendCount.get() == appends0 + 1)
     val fresh = TextSearch.textIndexBuild(c2, "text", "doc_id", s"$dir/fresh",
-      buckets = 16, positions = true)
+      buckets = 16)
     assert(i2.docs == fresh.docs && i2.totalLen == fresh.totalLen,
       s"restart-recovered append skewed stats: $i2 vs $fresh")
     assert(TextSearch.rankedSearch(i2, Seq("join", "filter"), 10)
@@ -645,7 +635,7 @@ class TextSearchSpec extends SparkSpec {
     // no second delta
     TextSearch.invalidateAllTextIndexes()
     val i2b = TextSearch.textIndexFor(c2, "spec/durable", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1 &&
       TextSearch.textDeltaAppendCount.get() == appends0 + 1,
       "re-requesting the grown corpus after restart must be a pure re-open")
@@ -655,15 +645,15 @@ class TextSearchSpec extends SparkSpec {
     TextSearch.invalidateAllTextIndexes()
     val stale = spark.read.parquet(c1.inputFiles.toSeq: _*)
     TextSearch.textIndexFor(stale, "spec/durable", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     docs.filter(col("doc_id") % 2 === 1)
       .withColumn("doc_id", col("doc_id") + 1000000L)
       .write.mode("append").parquet(corpusDir)
     val c3 = spark.read.parquet(corpusDir)
     val i3 = TextSearch.textIndexFor(c3, "spec/durable", "text", "doc_id",
-      ixDir, buckets = 16, positions = true)
+      ixDir, buckets = 16)
     val fresh3 = TextSearch.textIndexBuild(c3, "text", "doc_id",
-      s"$dir/fresh3", buckets = 16, positions = true)
+      s"$dir/fresh3", buckets = 16)
     assert(i3.docs == fresh3.docs && i3.totalLen == fresh3.totalLen,
       "a post-restart stale reader regressed the lineage into a double-append")
     TextSearch.invalidateAllTextIndexes()
@@ -674,7 +664,7 @@ class TextSearchSpec extends SparkSpec {
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 === 1)
     val i1 = TextSearch.textIndexBuild(half1, "text", "doc_id", s"$dir/ix",
-      buckets = 16, positions = true)
+      buckets = 16)
     val i2 = TextSearch.textIndexAppend(i1, half2, "text",
       segmentId = "spec-seg-1")
     // replay (retried append, or a second JVM sharing baseDir): skipped
@@ -688,7 +678,7 @@ class TextSearchSpec extends SparkSpec {
       segmentId = "spec-seg-1")
     assert(i4.docs == i2.docs && i4.totalLen == i2.totalLen)
     val fresh = TextSearch.textIndexBuild(docs, "text", "doc_id",
-      s"$dir/fresh", buckets = 16, positions = true)
+      s"$dir/fresh", buckets = 16)
     assert(i3.docs == fresh.docs && i3.totalLen == fresh.totalLen)
     assert(TextSearch.rankedSearch(i3, Seq("join", "filter"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
@@ -707,7 +697,7 @@ class TextSearchSpec extends SparkSpec {
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 === 1)
     val i1 = TextSearch.textIndexBuild(half1, "text", "doc_id", s"$dir/ix",
-      buckets = 16, positions = true)
+      buckets = 16)
     val i2 = TextSearch.textIndexAppend(i1, half2, "text", segmentId = "seg-a")
     // compaction rewrites the tree — the done-markers must ride the swap,
     // or a replayed append afterwards double-counts the recounted sidecar
@@ -748,12 +738,12 @@ class TextSearchSpec extends SparkSpec {
     val segA = docs.filter(col("doc_id") % 3 === 1)
     val segB = docs.filter(col("doc_id") % 3 === 2)
     val i0 = TextSearch.textIndexBuild(base, "text", "doc_id", s"$dir/ix",
-      buckets = 16, positions = true)
+      buckets = 16)
     TextSearch.textIndexAppend(i0, segA, "text", segmentId = "fold-a")
     val after = TextSearch.textIndexAppend(i0, segB, "text",
       segmentId = "fold-b") // STALE handle: sidecar already holds fold-a
     val fresh = TextSearch.textIndexBuild(docs, "text", "doc_id",
-      s"$dir/fresh", buckets = 16, positions = true)
+      s"$dir/fresh", buckets = 16)
     assert(after.docs == fresh.docs && after.totalLen == fresh.totalLen,
       s"stale-handle fold lost an append: $after vs $fresh")
     // BM25 off the folded sidecar matches the monolithic build
@@ -783,8 +773,11 @@ class TextSearchSpec extends SparkSpec {
     assert(all.size == 200)
     val corpus = all.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_tb").toString
     for (buckets <- Seq(1, 7, 64, 256)) {
-      val written = TextSearch.postings(corpus, "text", "doc_id", buckets)
+      val idx = TextSearch.textIndexBuild(corpus, "text", "doc_id", s"$dir/b$buckets",
+        buckets = buckets)
+      val written = spark.read.schema(idx.schema).parquet(idx.path)
         .select("term", "_tb").collect()
         .map(r => r.getString(0) -> r.getInt(1).toLong).toMap
       assert(written.keySet == all.toSet, "tokenization must keep every term whole")
@@ -802,10 +795,8 @@ class TextSearchSpec extends SparkSpec {
 
   test("each probe is one Spark execution when pruning cannot apply") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_budget").toString
-    val plain = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/plain",
-      buckets = 16)
     val pos = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/pos",
-      buckets = 16, positions = true)
+      buckets = 16)
     val terms = Seq("join", "filter", "hash")
     def execs(df: => DataFrame): Int =
       org.apache.spark.sql.graft.Executions.count(spark) { df.collect(); () }
@@ -813,8 +804,8 @@ class TextSearchSpec extends SparkSpec {
     // default pruneMinRows, so rankedSearch takes the in-plan statistics
     assert(pos.docs * terms.size < 500000L)
     val budget = Seq(
-      "searchIds" -> execs(TextSearch.searchIds(plain, terms)),
-      "searchIds (positional)" -> execs(TextSearch.searchIds(pos, terms, minMatch = 1)),
+      "searchIds" -> execs(TextSearch.searchIds(pos, terms)),
+      "searchIds (minMatch 1)" -> execs(TextSearch.searchIds(pos, terms, minMatch = 1)),
       "phraseIds" -> execs(TextSearch.phraseIds(pos, Seq("hash", "table"))),
       "rankedSearch" -> execs(TextSearch.rankedSearch(pos, terms, 10)),
       "rankedSearchWithin" -> execs(TextSearch.rankedSearchWithin(pos, terms,
@@ -857,7 +848,7 @@ class TextSearchSpec extends SparkSpec {
       inPlan
     }
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
-      buckets = 16, positions = true)
+      buckets = 16)
     val within = docs.filter(col("doc_id") % 3 === 0)
     for (terms <- Seq(Seq("join", "filter", "hash"), Seq("table", "scan"),
         Seq("join", "zzzznope"))) {
@@ -871,7 +862,7 @@ class TextSearchSpec extends SparkSpec {
     val seg = Seq((100000L, "join filter hash join"), (100001L, "hash table"))
       .toDF("doc_id", "text")
     val replay = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/replay",
-      buckets = 16, positions = true)
+      buckets = 16)
     TextSearch.textIndexAppend(replay, seg, "text")
     val replayed = TextSearch.textIndexAppend(replay, seg, "text")
     check("replayed", replayed, None, Seq("join", "filter", "hash"), 10)
@@ -882,7 +873,7 @@ class TextSearchSpec extends SparkSpec {
     // docs == 0: an empty corpus ranks nothing on either path
     val empty = TextSearch.textIndexBuild(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", "doc_id",
-      s"$dir/empty", buckets = 4, positions = true)
+      s"$dir/empty", buckets = 4)
     assert(empty.docs == 0L)
     assert(check("docs == 0", empty, None, Seq("join"), 5).isEmpty)
   }
@@ -894,7 +885,7 @@ class TextSearchSpec extends SparkSpec {
     object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_reuse").toString
     val idx = TextSearch.textIndexBuild(docs, "text", "doc_id", s"$dir/ix",
-      buckets = 16, positions = true)
+      buckets = 16)
     val r = TextSearch.rankedSearch(idx, Seq("join", "filter", "hash"), 10)
     r.collect()
     val plan = r.queryExecution.executedPlan
@@ -937,7 +928,7 @@ class TextSearchSpec extends SparkSpec {
     val within = corpus.filter(col("doc_id") % 3 === 0)
     val terms = Seq("join", "filter", "hash")
     def build(c: DataFrame, name: String) = TextSearch.textIndexBuild(c, "text",
-      "doc_id", s"$dir/$name", buckets = 16, positions = true)
+      "doc_id", s"$dir/$name", buckets = 16)
 
     def ranked(df: DataFrame): Seq[(Long, Double, Long)] = df.orderBy("rank")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
@@ -1002,7 +993,7 @@ class TextSearchSpec extends SparkSpec {
     var idx: TextSearch.TextIndex = null
     val buildExecs = org.apache.spark.sql.graft.Executions.count(spark) {
       idx = TextSearch.textIndexBuild(half1, "text", "doc_id", s"$dir/ix",
-        buckets = 16, positions = true)
+        buckets = 16)
     }
     val appendExecs = org.apache.spark.sql.graft.Executions.count(spark) {
       idx = TextSearch.textIndexAppend(idx, half2, "text", segmentId = "pass-1")
@@ -1044,11 +1035,11 @@ class TextSearchSpec extends SparkSpec {
       .write.partitionBy("_tb").parquet(tx3)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tx3/_tf"))
     graft.operators.Similarity.writeMeta(spark, tx3,
-      TextSearch.TextIndex(tx3, "doc_id", 8, twoTier, positional = true, 1L, 2L))
+      TextSearch.TextIndex(tx3, "doc_id", 8, twoTier, 1L, 2L))
     // re-keyed: the request builds a one-tier tree beside it
     val builds0 = TextSearch.textBuildCount.get()
     val served = TextSearch.textIndexFor(corpus, "spec/layout", "text", "doc_id",
-      ixDir, buckets = 8, positions = true)
+      ixDir, buckets = 8)
     assert(TextSearch.textBuildCount.get() == builds0 + 1 && served.path != tx3)
     assert(served.schema("pos").dataType.isInstanceOf[ArrayType])
     assert(probedIds(TextSearch.phraseIds(served, Seq("hash", "table"))) == Set(2L))
@@ -1067,7 +1058,7 @@ class TextSearchSpec extends SparkSpec {
     def reRequest() = {
       TextSearch.invalidateAllTextIndexes()
       TextSearch.textIndexFor(corpus, "spec/layout", "text", "doc_id", ixDir,
-        buckets = 8, positions = true)
+        buckets = 8)
     }
     // a _tf directory in a served tree: refused at the re-open, not rebuilt
     val tf = new org.apache.hadoop.fs.Path(served.path, "_tf")
@@ -1086,7 +1077,7 @@ class TextSearchSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)](spark)
     val q = graft.streaming.StreamOps.textIndexSink(mem.toDF().toDF("id", "text"),
       "text", "id", indexDir = served.path, outDir = s"$dir/out",
-      checkpoint = s"$dir/ckpt", buckets = 8, positions = true,
+      checkpoint = s"$dir/ckpt", buckets = 8,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     try {
       mem.addData((3L, "join"))
@@ -1098,5 +1089,113 @@ class TextSearchSpec extends SparkSpec {
       assert(msg.contains(served.path) && msg.contains("rebuild"), msg)
     } finally q.stop()
     TextSearch.invalidateAllTextIndexes()
+  }
+
+  test("a plain tree is refused at re-open; served trees re-key through tx5 and GC sweeps the tx4 ones") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tx_plain").toString
+    val ixDir = s"$dir/ix"
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    TextSearch.invalidateAllTextIndexes()
+    val corpus = Seq((1L, "join filter"), (2L, "hash table join")).toDF("doc_id", "text")
+    // the two served trees of the tx4 format, at the paths their keys
+    // hashed to: a plain one — (id, term) rows, a sidecar schema without
+    // pos — and a positional one
+    val plain = StructType(Seq(StructField("id", LongType),
+      StructField("term", StringType), StructField("_tb", IntegerType)))
+    def tx4(positions: Boolean) = s"$ixDir/tx_${graft.operators.Similarity.keyHash(
+      s"tx4|spec/plain|nofiles|text|doc_id|8|$positions")}"
+    Seq((1L, "join", 0)).toDF("id", "term", "_tb").write.partitionBy("_tb")
+      .parquet(tx4(false))
+    graft.operators.Similarity.writeMeta(spark, tx4(false),
+      TextSearch.TextIndex(tx4(false), "doc_id", 8, plain))
+    TextSearch.textIndexBuild(corpus, "text", "doc_id", tx4(true), buckets = 8)
+    // re-keyed: one request of each probe kind builds ONE tree beside them
+    val builds0 = TextSearch.textBuildCount.get()
+    def request() = TextSearch.textIndexFor(corpus, "spec/plain", "text", "doc_id",
+      ixDir, buckets = 8)
+    val served = request()
+    assert(probedIds(TextSearch.searchIds(served, Seq("join"))) == Set(1L, 2L))
+    assert(probedIds(TextSearch.phraseIds(request(), Seq("hash", "table"))) == Set(2L))
+    assert(TextSearch.rankedSearch(request(), Seq("table"), 5)
+      .collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(TextSearch.textBuildCount.get() == builds0 + 1)
+    assert(!Seq(tx4(false), tx4(true)).contains(served.path))
+    // both retired trees are orphans to the sweep
+    val swept = TextSearch.textIndexGc(spark, ixDir, graceMs = 0L)
+    assert(swept.map(_.split("/").last).toSet ==
+      Set(tx4(false), tx4(true)).map(_.split("/").last), swept)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(served.path)))
+
+    // a served tree whose sidecar schema has no pos: refused at the
+    // re-open, with the path and "rebuild" in the error, and not rebuilt
+    graft.operators.Similarity.writeMeta(spark, served.path, served.copy(schema = plain))
+    TextSearch.invalidateAllTextIndexes()
+    val e = intercept[IllegalStateException](request())
+    assert(e.getMessage.contains(served.path) && e.getMessage.contains("rebuild") &&
+      e.getMessage.contains("plain"), e.getMessage)
+    assert(TextSearch.textBuildCount.get() == builds0 + 1)
+
+    // the streaming sink refuses the same tree at its restart
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val mem = MemoryStream[(Long, String)](spark)
+    val q = graft.streaming.StreamOps.textIndexSink(mem.toDF().toDF("id", "text"),
+      "text", "id", indexDir = served.path, outDir = s"$dir/out",
+      checkpoint = s"$dir/ckpt", buckets = 8,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      mem.addData((3L, "join"))
+      val se = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val msg = Iterator.iterate[Throwable](se)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains(served.path) && msg.contains("rebuild"), msg)
+    } finally q.stop()
+    TextSearch.invalidateAllTextIndexes()
+  }
+
+  test("serve_mixed's four text request shapes take no text-cache eviction at a cap of 2 after their first pass") {
+    TextSearch.invalidateAllTextIndexes()
+    val prev = sys.props.put("graft.index.cache.max", "2")
+    try {
+      val service = new graft.graphql.GraphQLService(spark, sf)
+      // the search, bm25, bm25filt and cold kinds of perfbench serve_mixed:
+      // the documents root serves the first three, the filtered cold plan
+      // is a corpus of its own
+      val shapes = Seq(
+        """{ documents { s: search(terms: ["join", "filter"], on: "text",
+          id: "doc_id") { count } } }""",
+        """{ documents { s: search(terms: ["join", "filter"], on: "text",
+          id: "doc_id", k: 20) { o: order(by: ["rank"]) {
+          columns { doc_id { values } rank { values } } } } } }""",
+        """{ documents { f: filter(lang: {eq: "en"}) { s: search(terms: ["hash", "table"],
+          on: "text", id: "doc_id", k: 20, corpus: "documents") { o: order(by: ["rank"]) {
+          columns { doc_id { values } rank { values } } } } } } }""",
+        """{ documents { m: project(columns: [{alias: "m", mod: [{name: "doc_id"}, {value: 1}]}]) {
+          f: filter(m: {eq: 0}) { s: search(terms: ["join", "filter"], on: "text",
+          id: "doc_id", k: 10) { o: order(by: ["rank"]) {
+          columns { doc_id { values } rank { values } } } } } } } }""")
+      def pass(): Seq[String] = shapes.map(q =>
+        service.execute(q).replaceAll(""""timing_ms":\{[^}]*\}""", ""))
+      val builds0 = TextSearch.textBuildCount.get()
+      val first = pass()
+      assert(first.forall(r => !r.contains("\"errors\"")), first)
+      assert(TextSearch.textBuildCount.get() == builds0 + 2,
+        "one tree for the documents root, one for the cold plan")
+      val evictions0 = TextSearch.textCacheEvictions
+      for (_ <- 1 to 2) assert(pass() == first)
+      assert(TextSearch.textCacheEvictions == evictions0,
+        s"text-cache evictions after the first pass: ${TextSearch.textCacheEvictions - evictions0}")
+      assert(TextSearch.textBuildCount.get() == builds0 + 2)
+      assert(TextSearch.textCacheSize == 2)
+    } finally {
+      prev match {
+        case Some(v) => sys.props.put("graft.index.cache.max", v)
+        case None => sys.props.remove("graft.index.cache.max")
+      }
+      TextSearch.invalidateAllTextIndexes()
+    }
   }
 }
