@@ -630,8 +630,8 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     * ×12 corpus's 3-key ranking (BASELINE.md, "Rankings-strategy
     * crossover at ×12"), giving F·c ≈ 2.2M per-core
     * row-equivalents (`spark.graft.rankings.perCoreRows`); K is unknown
-    * pre-execution, so a conservative `spark.graft.rankings.assumedKeys`
-    * (default 4 — at P = 32 the formula then lands on the measured ~10M)
+    * pre-execution, so a conservative constant `RankingsAssumedKeys`
+    * (4 — at P = 32 the formula then lands on the measured ~10M)
     * stands in. More cores ⇒ a LOWER flip (the distributed plan's
     * advantage grows); P ≤ K ⇒ never flip (the window already uses every
     * core). `spark.graft.rankings.flipRows` remains the explicit override.
@@ -645,8 +645,8 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     * measured ~6× on the ×50 soak corpus (est 5.1M vs 30M true rows),
     * which silently withheld the flip at exactly the scale it exists for.
     * Rather than bake in a compression-ratio guess, the AMBIGUOUS band
-    * (est < flip ≤ est·maxExpansion, `spark.graft.rankings.maxExpansion`,
-    * default 8) pays one exact count — parquet count() resolves from
+    * (est < flip ≤ est·`RankingsMaxExpansion`, a constant 8) pays one
+    * exact count — parquet count() resolves from
     * row-group metadata, seconds next to the tens-of-seconds ranking the
     * decision governs — and decides on true rows. Below the band the
     * plain window proceeds with no extra job. */
@@ -658,8 +658,7 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
           .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
         val perCore = conf.getOption("spark.graft.rankings.perCoreRows")
           .map(_.toLong).getOrElse(2200000L)
-        val kAssumed = conf.getOption("spark.graft.rankings.assumedKeys")
-          .map(_.toInt).getOrElse(4)
+        val kAssumed = GTable.RankingsAssumedKeys
         if (p <= kAssumed) Long.MaxValue
         else (perCore / (1.0 / kAssumed - 1.0 / p)).toLong
       }
@@ -675,14 +674,11 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
     if (unknownSize || flipRows == Long.MaxValue) (est, flipRows, false)
     else if (est >= flipRows) (est, flipRows, true)
     else if (stats.rowCount.isDefined) (est, flipRows, false) // exact already
+    else if (est.toDouble * GTable.RankingsMaxExpansion < flipRows.toDouble)
+      (est, flipRows, false)
     else {
-      val maxExp = conf.getOption("spark.graft.rankings.maxExpansion")
-        .map(_.toDouble).getOrElse(8.0)
-      if (est.toDouble * maxExp < flipRows.toDouble) (est, flipRows, false)
-      else {
-        val exact = df.count()
-        (exact, flipRows, exact >= flipRows)
-      }
+      val exact = df.count()
+      (exact, flipRows, exact >= flipRows)
     }
   }
 
@@ -706,7 +702,7 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
                        rank: Option[String] = None,
                        denseRank: Option[String] = None,
                        percentRank: Option[String] = None,
-                       maxNdv: Long = 100000L): Option[GTable] = {
+                       maxNdv: Long = GTable.RankingsMaxCountsNdv): Option[GTable] = {
     val spark = df.sparkSession
     val dirs = orderCols.indices.map(i => desc.lift(i).getOrElse(false))
     val ordNames = orderCols.indices.map(i => s"_gq_o$i")
@@ -782,13 +778,10 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
       // above the flip, prefer the broadcast counts strategy when the
       // requested functions allow it and the tuple cardinality fits
       val viaCounts =
-        if (rowNumber.isEmpty && ntile.isEmpty) {
-          val budget = df.sparkSession.conf
-            .getOption("spark.graft.rankings.maxCountsNdv")
-            .map(_.toLong).getOrElse(100000L)
+        if (rowNumber.isEmpty && ntile.isEmpty)
           rankingsByCounts(partKeys, orderCols, desc, rank, denseRank,
-            percentRank, budget)
-        } else None
+            percentRank, GTable.RankingsMaxCountsNdv)
+        else None
       viaCounts.getOrElse(
         rankings(partKeys, orderCols, desc, rowNumber, rank, denseRank,
           percentRank, ntile))
@@ -871,6 +864,18 @@ final case class GTable(df: DataFrame, sortedBy: Seq[Column] = Nil,
 }
 
 object GTable {
+  /** Window tasks [[GTable.rankingsFlip]] assumes when it derives the flip
+    * threshold (K is unknown before execution; at P = 32 the formula then
+    * lands on the measured ~10M-row crossover). */
+  private[core] val RankingsAssumedKeys = 4
+  /** Upper bound on the parquet row-estimate's error (compressed bytes over
+    * uncompressed row width) that [[GTable.rankingsFlip]] resolves with one
+    * exact count. */
+  private[core] val RankingsMaxExpansion = 8.0
+  /** Largest distinct (keys ++ order) tuple count the broadcast-counts
+    * rankings arm takes (≈ MB-scale broadcast). */
+  private[core] val RankingsMaxCountsNdv = 100000L
+
   /** `count(*)` as a Column (the class's own count() shadows functions.count). */
   private[core] def cnt: Column = org.apache.spark.sql.functions.count(lit(1))
 

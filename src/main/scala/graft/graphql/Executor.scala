@@ -209,10 +209,11 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
     * on-disk tree count alongside [[indexGc]]. */
   private[graft] def indexDir: String = annIndexDir
 
-  /** Sweep orphaned prebuilt-index trees of EVERY family (text posting,
-    * MinHash, IVF, LSH) under this service's index dir (round-12 verdict
-    * #2): trees not referenced by a live cache entry and older than
-    * `graceMs` are deleted. The caches are LRU-bounded, so eviction shrinks
+  /** Sweep orphaned prebuilt-index trees of EVERY family (positional text,
+    * MinHash, IVF, LSH) under this service's index dir in one
+    * `IndexMaint.indexGc` pass (round-12 verdict #2): trees not referenced
+    * by any family's live cache entry and older than `graceMs` are
+    * deleted. The caches are LRU-bounded, so eviction shrinks
     * the live set and this sweep bounds the service's DISK footprint
     * alongside its heap — a long-lived deployment fielding many distinct
     * filtered `search(k:)` plans retires one tree per evicted plan instead
@@ -222,9 +223,7 @@ final class GraphQLService(spark: SparkSession, sfDir: String,
     * trees another JVM just built from being swept mid-use. Returns the
     * deleted tree paths. */
   def indexGc(graceMs: Long = 3600000L): Seq[String] =
-    graft.operators.TextSearch.textIndexGc(spark, annIndexDir, graceMs) ++
-      graft.operators.Similarity.annIndexGc(spark, annIndexDir, graceMs) ++
-      graft.operators.Dedup.minhashIndexGc(spark, annIndexDir, graceMs)
+    graft.operators.IndexMaint.indexGc(spark, annIndexDir, graceMs)
 
   /** Corpus identity for the index cache: the canonicalized logical plan
     * (source files + every filter/projection applied on the way to this

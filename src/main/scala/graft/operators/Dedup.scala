@@ -844,10 +844,7 @@ object Dedup {
     // whole append under the tree WRITE lock: concurrent appends of
     // DIFFERENT segments (claims never conflict) into one tree clobber the
     // committer's shared `_temporary` staging — see IndexMaint.withTreeLock
-    def doAppend(): Unit = IndexMaint.withTreeLock(
-        new org.apache.hadoop.fs.Path(index.path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(index.path)) {
+    def doAppend(): Unit = IndexMaint.withTreeLock(spark, index.path) {
       // torn-swap healing under the WRITE lock: outside it, a live
       // compactor's in-progress swap is indistinguishable from a crash
       IndexMaint.recoverSwap(spark, occPath)
@@ -926,10 +923,7 @@ object Dedup {
     // same tree WRITE lock as appends: a compaction swapping subtrees out
     // from under a concurrent cross-JVM append would drop that append's
     // rows — writers serialize whole (see IndexMaint.withTreeLock)
-    IndexMaint.withTreeLock(
-      new org.apache.hadoop.fs.Path(index.path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(index.path)) {
+    IndexMaint.withTreeLock(spark, index.path) {
     IndexMaint.recoverSwap(spark, occPath)
     if (full) {
       IndexMaint.recoverSwap(spark, s"${index.path}/banded")
@@ -1031,12 +1025,6 @@ object Dedup {
     batch.join(hits, batch(index.idCol) === hits("batch_id"), "left_anti")
   }
 
-  private val mhCache =
-    new IndexMaint.LruCache[MinHashIndex](IndexMaint.cacheCap _)
-  private val mhLineage = new IndexMaint.LruCache[
-    (Map[String, (Long, Long)], String)](IndexMaint.cacheCap _)
-  private[graft] def minhashCacheSize: Int = mhCache.size
-
   /** Build counter (metadata re-opens do NOT increment) — serving-tier
     * observability, mirrors Similarity.ivfBuildCount. */
   private[graft] val minhashBuildCount =
@@ -1044,6 +1032,8 @@ object Dedup {
   /** Delta appends taken by the [[minhashIndexFor]] fast path. */
   private[graft] val minhashDeltaAppendCount =
     new java.util.concurrent.atomic.AtomicLong
+  private[graft] val minhashFamily = new IndexMaint.Family[MinHashIndex](
+    "mh", "mh_", _.path, minhashBuildCount, minhashDeltaAppendCount)
 
   /** Cached [[minhashIndexBuild]] — the serving entry point, sharing the
     * prebuilt-ANN lifecycle contract (Similarity.ivfIndexFor): cache key
@@ -1053,60 +1043,27 @@ object Dedup {
     * Append-only corpus growth (file set a strict superset, common files
     * untouched) [[minhashIndexAppend]]s ONLY the delta files into the
     * existing tree instead of rebuilding (round 11, the shared
-    * [[graft.operators.IndexMaint.cachedIndexFor]] fast path); the
+    * [[graft.operators.IndexMaint.Family]] fast path); the
     * deterministic segment id = the new key's hash, so a replayed
     * identical delta is recognized and skipped by the append's own
     * replay guard. */
   def minhashIndexFor(corpus: DataFrame, corpusKey: String, textCol: String,
                       idCol: String, baseDir: String, n: Int = 3,
                       k: Int = 64, bands: Int = 16, md5: Boolean = false,
-                      slots: Int = IndexSlots): MinHashIndex = {
-    val params = s"mh|$corpusKey|$textCol|$idCol|$n|$k|$bands|$md5|$slots"
-    val files = IndexMaint.fileStatuses(corpus)
-    val key = s"mh|$corpusKey|${Similarity.fingerprintFrom(files)}|" +
-      s"$textCol|$idCol|$n|$k|$bands|$md5|$slots"
-    val spark = corpus.sparkSession
-    val path = s"$baseDir/mh_${Similarity.keyHash(key)}"
-    IndexMaint.cachedIndexFor[MinHashIndex](
-      spark, mhCache, mhLineage, baseDir, params, key, files,
-      path, pathOf = _.path,
-      reopenAt = p => Similarity.readMeta[MinHashIndex](spark, p),
-      build = () => {
+                      slots: Int = IndexSlots): MinHashIndex =
+    minhashFamily.indexFor(corpus, corpusKey, baseDir, textCol, idCol, n, k,
+        bands, md5, slots)(
+      reopen = Similarity.readMeta[MinHashIndex](corpus.sparkSession, _),
+      build = path => {
         val idx = minhashIndexBuild(corpus, textCol, idCol, path, n, k,
           bands, md5, slots)
-        minhashBuildCount.incrementAndGet()
-        Similarity.writeMeta(spark, path, idx)
+        Similarity.writeMeta(corpus.sparkSession, path, idx)
         idx
       },
-      append = (prevIdx, newFiles) => {
-        minhashIndexAppend(prevIdx, spark.read.parquet(newFiles.toSeq: _*),
-          segmentId = s"delta-${Similarity.keyHash(key)}")
-        prevIdx // banded tree + occ grew in place; the handle is unchanged
-      },
-      onDelta = () => minhashDeltaAppendCount.incrementAndGet())
-  }
-
-  /** Drop cached MinHash indexes for `corpusKey` (on-disk files stay —
-    * a later request re-opens or rebuilds under a fresh fingerprint). */
-  def invalidateMinhashIndexes(corpusKey: String): Unit = {
-    mhCache.removeKeysIf(_.contains(s"|$corpusKey|"))
-    mhLineage.removeKeysIf(_.contains(s"|$corpusKey|"))
-    IndexMaint.dropGrowthLocks(k =>
-      k.startsWith("mh") && k.contains(s"|$corpusKey|"))
-  }
-
-  /** Clear the whole in-memory MinHash index cache (restart simulation). */
-  def invalidateAllMinhashIndexes(): Unit = {
-    mhCache.clear(); mhLineage.clear()
-    IndexMaint.dropGrowthLocks(_.startsWith("mh"))
-  }
-
-  /** Sweep orphaned MinHash index trees (retired fingerprints) under
-    * `baseDir` — see [[graft.operators.IndexMaint.gcOrphans]]. */
-  def minhashIndexGc(spark: org.apache.spark.sql.SparkSession, baseDir: String,
-                     graceMs: Long = 3600000L): Seq[String] =
-    IndexMaint.gcOrphans(spark, baseDir, Seq("mh_"),
-      mhCache.values.map(_.path).toSet, graceMs)
+      append = (prev, delta, segmentId) => {
+        minhashIndexAppend(prev, delta, segmentId)
+        prev // banded tree + occ grew in place; the handle is unchanged
+      })
 
   /** Eval-set decontamination (the GPT-3/PaLM appendix-C recipe): flag
     * training documents sharing at least `minHits` distinct word n-grams
@@ -1385,14 +1342,14 @@ object Dedup {
     // unchanged corpus skip the probe entirely and stay fully lazy on the
     // pinned-exchange plan. Frames with no file lineage have no safe
     // cross-request identity → probe every time.
-    val fp = Similarity.fingerprint(df)
+    val fp = IndexMaint.fingerprint(df)
     // textCol/idCol are part of the identity: the canonicalized plan of a
     // bare scan does not encode WHICH column the operator reads, so two
     // dedupSubstrings calls over the same frame but different text columns
     // must not share a cut-ratio reading
     val memoKey =
       if (fp == "nofiles") null
-      else Similarity.keyHash(
+      else IndexMaint.keyHash(
         df.queryExecution.optimizedPlan.canonicalized.toString) +
         s"|$fp|$w|$textCol|$idCol"
     val known = Option(memoKey).flatMap(k => Option(substrRatioMemo.get(k)))

@@ -669,10 +669,7 @@ object Similarity {
     // one tree clobber the committer's shared `_temporary` staging
     // (IndexMaint.withTreeLock), even though replayed ROWS are probe-safe
     val spark = segment.sparkSession
-    IndexMaint.withTreeLock(
-        new org.apache.hadoop.fs.Path(index.path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(index.path)) {
+    IndexMaint.withTreeLock(spark, index.path) {
       withAssignedCid(
           segment.select(col(index.idCol).as("neighbor_id"),
             col(index.vecCol).as("_cv")),
@@ -690,10 +687,7 @@ object Similarity {
         lshBucket(col(index.vecCol), index.planes, index.dim, t).as("b")))
     // tree WRITE lock: see ivfAppend
     val spark = segment.sparkSession
-    IndexMaint.withTreeLock(
-        new org.apache.hadoop.fs.Path(index.path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(index.path)) {
+    IndexMaint.withTreeLock(spark, index.path) {
       segment.select(col(index.idCol).as("neighbor_id"),
           col(index.vecCol).as("_cv"),
           explode(array(buckets: _*)).as("_bucket"))
@@ -704,37 +698,23 @@ object Similarity {
     }
   }
 
-  /** Compact a prebuilt LSH index fragmented by per-batch [[lshAppend]]s:
-    * duplicate rows from crash-replay windows dropped, one file per `_tb`
+  /** Compact a prebuilt IVF (`partCol` = `cid`) or LSH (`_tb`) index
+    * `index` fragmented by per-batch [[ivfAppend]]/[[lshAppend]]s:
+    * duplicate rows from crash-replay windows dropped, one file per
     * partition, sidecar re-written inside the new tree before the swap so
     * a restarted query never re-opens a meta-less index. Answer-preserving
     * (probes dedup candidates anyway); bounds the probe's file-listing tax
     * after long ingestion runs. */
-  def lshCompact(index: LshIndex): Unit = {
+  def annCompact(index: AnyRef, path: String,
+                 schema: org.apache.spark.sql.types.StructType,
+                 partCol: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    IndexMaint.withTreeLock( // writers serialize whole: see ivfAppend
-        new org.apache.hadoop.fs.Path(index.path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(index.path)) {
-      IndexMaint.recoverSwap(spark, index.path)
-      IndexMaint.swapRewrite(spark, index.path,
-        spark.read.schema(index.schema).parquet(index.path).dropDuplicates(),
-        Seq("_tb"), tmp => writeMeta(spark, tmp, index))
-    }
-  }
-
-  /** Compact a prebuilt IVF index (see [[lshCompact]] — same protocol,
-    * `cid`-partitioned). */
-  def ivfCompact(index: IvfIndex): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    IndexMaint.withTreeLock( // writers serialize whole: see ivfAppend
-        new org.apache.hadoop.fs.Path(index.path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(index.path)) {
-      IndexMaint.recoverSwap(spark, index.path)
-      IndexMaint.swapRewrite(spark, index.path,
-        spark.read.schema(index.schema).parquet(index.path).dropDuplicates(),
-        Seq("cid"), tmp => writeMeta(spark, tmp, index))
+    // writers serialize whole: see ivfAppend
+    IndexMaint.withTreeLock(spark, path) {
+      IndexMaint.recoverSwap(spark, path)
+      IndexMaint.swapRewrite(spark, path,
+        spark.read.schema(schema).parquet(path).dropDuplicates(),
+        Seq(partCol), tmp => writeMeta(spark, tmp, index))
     }
   }
 
@@ -1012,58 +992,18 @@ object Similarity {
   // metadata alone — no corpus scan, no rebuild job. computeIfAbsent
   // bounds concurrent requests to at most one build per key.
 
-  private val ivfCache =
-    new IndexMaint.LruCache[IvfIndex](IndexMaint.cacheCap _)
-  private val lshCache =
-    new IndexMaint.LruCache[LshIndex](IndexMaint.cacheCap _)
-  private val ivfLineage = new IndexMaint.LruCache[
-    (Map[String, (Long, Long)], String)](IndexMaint.cacheCap _)
-  private val lshLineage = new IndexMaint.LruCache[
-    (Map[String, (Long, Long)], String)](IndexMaint.cacheCap _)
-  private[graft] def annCacheSize: Int = ivfCache.size + lshCache.size
-
   /** Build counters (metadata re-opens do NOT increment) — serving-tier
     * observability; specs assert re-open paths leave them unchanged. */
   private[graft] val ivfBuildCount = new java.util.concurrent.atomic.AtomicLong
   private[graft] val lshBuildCount = new java.util.concurrent.atomic.AtomicLong
-  /** Delta appends taken by the ivf/lsh IndexFor fast paths (round 11). */
+  /** Delta appends taken by the ivf/lsh IndexFor fast paths (round 11),
+    * one counter shared by both families. */
   private[graft] val annDeltaAppendCount =
     new java.util.concurrent.atomic.AtomicLong
-
-  private[graft] def keyHash(key: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-
-  /** Content fingerprint of the frame's input files (path, size, mtime).
-    * Frames with no file lineage (in-memory fixtures) fingerprint as
-    * "nofiles" — their identity is then carried by `corpusKey` alone. */
-  private[operators] def fingerprint(corpus: DataFrame): String = {
-    val files = corpus.inputFiles.sorted
-    if (files.isEmpty) "nofiles"
-    else {
-      val conf = corpus.sparkSession.sparkContext.hadoopConfiguration
-      fingerprintFrom(files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        f -> (st.getLen, st.getModificationTime)
-      }.toMap)
-    }
-  }
-
-  /** [[fingerprint]] from an already-collected file-status map — callers
-    * that need the statuses anyway (the textIndexFor append fast path's
-    * lineage) stat each file ONCE instead of twice per request. Digest
-    * is byte-identical to [[fingerprint]] on the same files. */
-  private[operators] def fingerprintFrom(
-      statuses: Map[String, (Long, Long)]): String =
-    if (statuses.isEmpty) "nofiles"
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      statuses.toSeq.sortBy(_._1).foreach { case (f, (len, mtime)) =>
-        md.update(s"$f|$len|$mtime\n".getBytes("UTF-8"))
-      }
-      md.digest().take(8).map("%02x".format(_)).mkString
-    }
+  private[graft] val ivfFamily = new IndexMaint.Family[IvfIndex](
+    "ivf", "ivf_", _.path, ivfBuildCount, annDeltaAppendCount)
+  private[graft] val lshFamily = new IndexMaint.Family[LshIndex](
+    "lsh", "lsh_", _.path, lshBuildCount, annDeltaAppendCount)
 
   private val MetaFile = "_graft_index_meta.bin"
 
@@ -1094,97 +1034,48 @@ object Similarity {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Drop every cached index for `corpusKey` (both families); the on-disk
-    * files stay — a later request re-opens or, if the corpus changed,
-    * builds under a new fingerprinted path. */
-  def invalidateIndexes(corpusKey: String): Unit = {
-    ivfCache.removeKeysIf(_.contains(s"|$corpusKey|"))
-    lshCache.removeKeysIf(_.contains(s"|$corpusKey|"))
-    ivfLineage.removeKeysIf(_.contains(s"|$corpusKey|"))
-    lshLineage.removeKeysIf(_.contains(s"|$corpusKey|"))
-    IndexMaint.dropGrowthLocks(k =>
-      (k.startsWith("ivf") || k.startsWith("lsh")) &&
-        k.contains(s"|$corpusKey|"))
-  }
-
-  /** Clear the whole in-memory index cache (restart simulation / tests). */
-  def invalidateAllIndexes(): Unit = {
-    ivfCache.clear(); lshCache.clear()
-    ivfLineage.clear(); lshLineage.clear()
-    IndexMaint.dropGrowthLocks(k => k.startsWith("ivf") || k.startsWith("lsh"))
-  }
-
-  /** Sweep orphaned ANN index trees (retired fingerprints) under
-    * `baseDir` — see [[graft.operators.IndexMaint.gcOrphans]]. */
-  def annIndexGc(spark: org.apache.spark.sql.SparkSession, baseDir: String,
-                 graceMs: Long = 3600000L): Seq[String] = {
-    val live =
-      (ivfCache.values.map(_.path) ++ lshCache.values.map(_.path)).toSet
-    IndexMaint.gcOrphans(spark, baseDir, Seq("ivf_", "lsh_"), live, graceMs)
-  }
-
   /** Cached [[ivfBuild]]: `corpusKey` identifies the corpus contents (e.g.
     * its parquet directory); `baseDir` hosts the partitioned index files.
     * Append-only corpus growth [[ivfAppend]]s only the delta files into
     * the existing tree (round 11, the shared
-    * [[graft.operators.IndexMaint.cachedIndexFor]] fast path) — the
+    * [[graft.operators.IndexMaint.Family]] fast path) — the
     * segment is assigned against the index's FROZEN centroids, ivfAppend's
     * documented incremental-ingest trade; rebuild (invalidate or rewrite
     * the corpus) when drift degrades recall. */
   def ivfIndexFor(corpus: DataFrame, corpusKey: String, idCol: String,
                   vecCol: String, nlist: Int, baseDir: String,
-                  kmeansIters: Int = 0): IvfIndex = {
-    val params = s"ivf|$corpusKey|$idCol|$vecCol|$nlist|$kmeansIters"
-    val files = IndexMaint.fileStatuses(corpus)
-    val key =
-      s"ivf|$corpusKey|${fingerprintFrom(files)}|$idCol|$vecCol|$nlist|$kmeansIters"
-    val spark = corpus.sparkSession
-    val path = s"$baseDir/ivf_${keyHash(key)}"
-    IndexMaint.cachedIndexFor[IvfIndex](
-      spark, ivfCache, ivfLineage, baseDir, params, key, files,
-      path, pathOf = _.path,
-      reopenAt = p => readMeta[IvfIndex](spark, p),
-      build = () => {
+                  kmeansIters: Int = 0): IvfIndex =
+    ivfFamily.indexFor(corpus, corpusKey, baseDir, idCol, vecCol, nlist,
+        kmeansIters)(
+      reopen = readMeta[IvfIndex](corpus.sparkSession, _),
+      build = path => {
         val idx = ivfBuild(corpus, idCol, vecCol, nlist, path, kmeansIters)
-        ivfBuildCount.incrementAndGet()
-        writeMeta(spark, path, idx)
+        writeMeta(corpus.sparkSession, path, idx)
         idx
       },
-      append = (prevIdx, newFiles) => {
-        ivfAppend(prevIdx, spark.read.parquet(newFiles.toSeq: _*))
-        prevIdx // cid tree grew in place; centroids/handle unchanged
-      },
-      onDelta = () => annDeltaAppendCount.incrementAndGet())
-  }
+      append = (prev, delta, _) => {
+        ivfAppend(prev, delta)
+        prev // cid tree grew in place; centroids/handle unchanged
+      })
 
   /** Cached [[lshBuild]] — same growth fast path as [[ivfIndexFor]]
     * (the delta is bucketed against the SAME deterministic plane
     * families, so append ≡ rebuild for probe answers). */
   def lshIndexFor(corpus: DataFrame, corpusKey: String, idCol: String,
                   vecCol: String, planes: Int, dim: Int, baseDir: String,
-                  tables: Int = 8): LshIndex = {
-    val params = s"lsh|$corpusKey|$idCol|$vecCol|$planes|$dim|$tables"
-    val files = IndexMaint.fileStatuses(corpus)
-    val key =
-      s"lsh|$corpusKey|${fingerprintFrom(files)}|$idCol|$vecCol|$planes|$dim|$tables"
-    val spark = corpus.sparkSession
-    val path = s"$baseDir/lsh_${keyHash(key)}"
-    IndexMaint.cachedIndexFor[LshIndex](
-      spark, lshCache, lshLineage, baseDir, params, key, files,
-      path, pathOf = _.path,
-      reopenAt = p => readMeta[LshIndex](spark, p),
-      build = () => {
+                  tables: Int = 8): LshIndex =
+    lshFamily.indexFor(corpus, corpusKey, baseDir, idCol, vecCol, planes, dim,
+        tables)(
+      reopen = readMeta[LshIndex](corpus.sparkSession, _),
+      build = path => {
         val idx = lshBuild(corpus, idCol, vecCol, planes, dim, path, tables)
-        lshBuildCount.incrementAndGet()
-        writeMeta(spark, path, idx)
+        writeMeta(corpus.sparkSession, path, idx)
         idx
       },
-      append = (prevIdx, newFiles) => {
-        lshAppend(prevIdx, spark.read.parquet(newFiles.toSeq: _*))
-        prevIdx // (table, bucket) tree grew in place; handle unchanged
-      },
-      onDelta = () => annDeltaAppendCount.incrementAndGet())
-  }
+      append = (prev, delta, _) => {
+        lshAppend(prev, delta)
+        prev // (table, bucket) tree grew in place; handle unchanged
+      })
 
   /** SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     * "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -1507,7 +1398,7 @@ object Similarity {
       val budgetRows = pairBudget / math.max(rows, 1L)
       l.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong) match {
         case Some(n) => n <= budgetRows
-        case None if fingerprint(l) != "nofiles" =>
+        case None if IndexMaint.fingerprint(l) != "nofiles" =>
           memoizedCount(l) <= budgetRows // cached across served requests
         case None =>
           // no file lineage → no safe memo identity, and a FULL count here
@@ -1540,7 +1431,7 @@ object Similarity {
   private[graft] val knnCountJobs = new java.util.concurrent.atomic.AtomicLong
 
   private def memoizedCount(df: DataFrame): Long = {
-    val fp = fingerprint(df)
+    val fp = IndexMaint.fingerprint(df)
     // no file lineage → no safe cross-request identity (two distinct
     // in-memory frames can canonicalize alike): count directly
     if (fp == "nofiles") {
@@ -1548,7 +1439,8 @@ object Similarity {
       return df.count()
     }
     val key =
-      keyHash(df.queryExecution.optimizedPlan.canonicalized.toString) + "|" + fp
+      IndexMaint.keyHash(df.queryExecution.optimizedPlan.canonicalized.toString) +
+        "|" + fp
     // bounded for a long-lived service: one Long per distinct served plan,
     // least-recently-requested evicted at the cap (round 12 — the old
     // clear-all-at-4096 reset threw away every hot entry with the cold)

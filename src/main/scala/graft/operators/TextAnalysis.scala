@@ -456,10 +456,7 @@ object TextAnalysis {
       // and narrow (~24 bytes/doc) — repeated qualityScore requests reuse
       // it instead of re-running the corpus-wide scoring join
       val key = s"ql|${System.identityHashCode(df.sparkSession)}|" +
-        s"${df.queryExecution.analyzed.canonicalized.semanticHash()}|" +
-        s"${Similarity.fingerprint(df)}|" +
-        s"${weights.queryExecution.analyzed.canonicalized.semanticHash()}|" +
-        s"${Similarity.fingerprint(weights)}|$textCol|$idCol|$dim|$bias"
+        s"${frameKey(df)}|${frameKey(weights)}|$textCol|$idCol|$dim|$bias"
       lwCache.computeIfAbsent(key, _ => {
         lwBuildCount.incrementAndGet()
         scoreLinearCompute(df, textCol, idCol, weights, dim, bias)
@@ -496,13 +493,24 @@ object TextAnalysis {
     * localCheckpointed) — the serving fix for the round-9 soak finding that
     * every dsirSelect request re-estimated BOTH corpus distributions (a full
     * corpus scan each) before the per-doc scoring join it actually needed.
-    * Key = logical plan semantics (canonicalized semanticHash — two
-    * different targetWhere filters over the same files must not collide) +
-    * input-file content fingerprint (path/size/mtime — an in-place rewrite
-    * misses and re-estimates) + session identity + (textCol, dim). Same
-    * lifecycle contract as Dedup.minhashIndexFor. */
+    * Key = [[frameKey]] + session identity + (textCol, dim). LRU-bounded
+    * at the index-cache cap like every serving-lifetime registry; an
+    * evicted model re-estimates on its next request. */
   private val unigramModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    new IndexMaint.LruCache[org.apache.spark.sql.DataFrame](IndexMaint.cacheCap _)
+
+  /** Cross-request identity of a frame for the memo caches here: the hash
+    * of its canonicalized plan string (two different targetWhere filters
+    * over the same files must not collide) + its input-file fingerprint
+    * (an in-place rewrite misses and recomputes). The plan string of an
+    * in-memory relation does not show its rows, so a frame without file
+    * lineage also keys on the plan's semanticHash. */
+  private def frameKey(df: org.apache.spark.sql.DataFrame): String = {
+    val plan = df.queryExecution.analyzed.canonicalized
+    val fp = IndexMaint.fingerprint(df)
+    s"${IndexMaint.keyHash(plan.toString)}|$fp" +
+      (if (fp == "nofiles") s"|${plan.semanticHash()}" else "")
+  }
 
   /** Model estimations actually run (cache hits do NOT increment) —
     * serving-tier observability, mirrors Dedup.minhashBuildCount. */
@@ -522,8 +530,7 @@ object TextAnalysis {
   private def bucketCountsFor(df: org.apache.spark.sql.DataFrame,
                               textCol: String, dim: Int) = {
     val key = s"ug|${System.identityHashCode(df.sparkSession)}|" +
-      s"${df.queryExecution.analyzed.canonicalized.semanticHash()}|" +
-      s"${Similarity.fingerprint(df)}|$textCol|$dim"
+      s"${frameKey(df)}|$textCol|$dim"
     unigramModelCache.computeIfAbsent(key, _ => {
       unigramModelBuildCount.incrementAndGet()
       bucketCountsOf(df, textCol, dim).localCheckpoint(true)
@@ -546,9 +553,10 @@ object TextAnalysis {
     * caches in tens of GB cluster-wide while each request saves a full
     * corpus text scan. The round-9 soak priced that scan at 8 s p50 of a
     * 17 s request; with this tier a steady-state dsirSelect pays only the
-    * Gumbel projection + top-k over the narrow frame. */
-  private val lwCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    * Gumbel projection + top-k over the narrow frame. [[scoreLinear]]'s
+    * scored frames share it; LRU-bounded like [[unigramModelCache]]. */
+  private[graft] val lwCache =
+    new IndexMaint.LruCache[org.apache.spark.sql.DataFrame](IndexMaint.cacheCap _)
 
   /** lw scoring passes actually run (cache hits do NOT increment). */
   private[graft] val lwBuildCount =
@@ -561,10 +569,7 @@ object TextAnalysis {
     if (!cached) dsirLogWeightsCompute(raw, target, textCol, idCol, dim, cached)
     else {
       val key = s"lw|${System.identityHashCode(raw.sparkSession)}|" +
-        s"${raw.queryExecution.analyzed.canonicalized.semanticHash()}|" +
-        s"${Similarity.fingerprint(raw)}|" +
-        s"${target.queryExecution.analyzed.canonicalized.semanticHash()}|" +
-        s"${Similarity.fingerprint(target)}|$textCol|$idCol|$dim"
+        s"${frameKey(raw)}|${frameKey(target)}|$textCol|$idCol|$dim"
       lwCache.computeIfAbsent(key, _ => {
         lwBuildCount.incrementAndGet()
         dsirLogWeightsCompute(raw, target, textCol, idCol, dim, cached)

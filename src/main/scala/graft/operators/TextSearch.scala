@@ -225,8 +225,7 @@ object TextSearch {
     // the whole append runs under the tree WRITE lock: concurrent appends
     // of DIFFERENT segments (claims never conflict) into one tree clobber
     // the committer's shared `_temporary` staging — see withTreeLock
-    def doAppend(): TextIndex = IndexMaint.withTreeLock(fs,
-        new org.apache.hadoop.fs.Path(index.path)) {
+    def doAppend(): TextIndex = IndexMaint.withTreeLock(spark, index.path) {
       // torn-swap healing under the WRITE lock: outside it, a live
       // compactor's in-progress swap is indistinguishable from a crash
       IndexMaint.recoverSwap(spark, index.path)
@@ -282,10 +281,7 @@ object TextSearch {
     // same tree WRITE lock as appends: a compaction swapping the tree out
     // from under a concurrent cross-JVM append would drop that append's
     // rows (and the committer stagings collide) — writers serialize whole
-    IndexMaint.withTreeLock(
-      new org.apache.hadoop.fs.Path(index.path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(index.path)) {
+    IndexMaint.withTreeLock(spark, index.path) {
     IndexMaint.recoverSwap(spark, index.path)
     val tree = spark.read.schema(index.schema).parquet(index.path)
     val r = tree.groupBy("id").agg(max(col("len")).cast("long").as("_len"))
@@ -651,26 +647,24 @@ object TextSearch {
 
   // ─── build-once/probe-many cache (serving layer) ───
 
-  private val txCache =
-    new IndexMaint.LruCache[TextIndex](IndexMaint.cacheCap _)
-  /** LRU evictions taken by [[txCache]] (observability for the lifecycle
-    * spec: an evicted-then-re-requested index re-opens, never rebuilds). */
-  private[graft] def textCacheEvictions: Long = txCache.evictions.get
-  private[graft] def textCacheSize: Int = txCache.size
   private[graft] val textBuildCount = new java.util.concurrent.atomic.AtomicLong
   /** Delta appends taken by the [[textIndexFor]] fast path (observability:
     * append-only corpus growth must grow THIS, not [[textBuildCount]]). */
   private[graft] val textDeltaAppendCount =
     new java.util.concurrent.atomic.AtomicLong
+  /** The text index family. `tx5` is a format tag, bumped when the tree
+    * layout changes (tx4: one row per (term, doc) with inline positions;
+    * tx5: every tree positional, one per corpus): the path derives from
+    * the key, so trees of an older format are never re-opened as current
+    * and the GC sweeps them like any orphan. */
+  private[graft] val textFamily = new IndexMaint.Family[TextIndex](
+    "tx5", "tx_", _.path, textBuildCount, textDeltaAppendCount)
+  /** LRU evictions taken by the text cache (observability: an evicted-
+    * then-re-requested index re-opens, never rebuilds). */
+  private[graft] def textCacheEvictions: Long = textFamily.evictions
   /** Max-score prunes that VERIFIED and returned the candidate top-k
     * (observability for specs/probes; the fallback path never counts). */
   private[graft] val pruneHitCount = new java.util.concurrent.atomic.AtomicLong
-
-  /** Per-(params sans fingerprint) lineage of the last served corpus: its
-    * file statuses and full cache key — the append fast path's memory
-    * (restart-durable via the persisted blob — IndexMaint.cachedIndexFor). */
-  private val txLineage = new IndexMaint.LruCache[
-    (Map[String, (Long, Long)], String)](IndexMaint.cacheCap _)
 
   /** Cached [[textIndexBuild]] keyed by corpus identity + content
     * fingerprint + parameters — the same pattern as
@@ -689,63 +683,12 @@ object TextSearch {
     * at-least-once semantics. */
   def textIndexFor(corpus: DataFrame, corpusKey: String, textCol: String,
                    idCol: String, baseDir: String,
-                   buckets: Int = 256): TextIndex = {
-    // tx5: format tag — bumped when the tree layout changes (tx4: one row
-    // per (term, doc) with inline positions; tx5: every tree positional,
-    // one per corpus). The path derives from this key, so trees of an
-    // older format are never re-opened as current, and textIndexGc sweeps
-    // them like any orphan
-    val params = s"tx5|$corpusKey|$textCol|$idCol|$buckets"
-    // ONE stat pass per request: the statuses feed both the fingerprint
-    // (cache key) and the lineage record — the pre-round-11 form statted
-    // every file twice (three times on a miss) per served request
-    val files = IndexMaint.fileStatuses(corpus)
-    val key = s"tx5|$corpusKey|${Similarity.fingerprintFrom(files)}|" +
-      s"$textCol|$idCol|$buckets"
-    val spark = corpus.sparkSession
-    val path = s"$baseDir/tx_${Similarity.keyHash(key)}"
-    IndexMaint.cachedIndexFor[TextIndex](
-      spark, txCache, txLineage, baseDir, params, key, files,
-      path, pathOf = _.path,
-      reopenAt = p => openIndex(spark, p),
-      build = () => {
-        val idx = textIndexBuild(corpus, textCol, idCol, path, buckets)
-        textBuildCount.incrementAndGet()
-        idx
-      },
-      append = (prevIdx, newFiles) =>
-        // deterministic segment id = the grown key's hash: a replayed
-        // identical delta (retry, or a second JVM sharing baseDir) is
-        // recognized by the append's marker and skipped — the sidecar
-        // N/avgdl cannot double-count (round-12 ADVICE)
-        textIndexAppend(prevIdx, spark.read.parquet(newFiles.toSeq: _*),
-          textCol, segmentId = s"delta-${Similarity.keyHash(key)}"),
-      onDelta = () => textDeltaAppendCount.incrementAndGet())
-  }
-
-  /** Drop cached text indexes for `corpusKey` (on-disk trees stay). */
-  def invalidateTextIndexes(corpusKey: String): Unit = {
-    txCache.removeKeysIf(_.contains(s"|$corpusKey|"))
-    txLineage.removeKeysIf(_.contains(s"|$corpusKey|"))
-    IndexMaint.dropGrowthLocks(k =>
-      k.startsWith("tx") && k.contains(s"|$corpusKey|"))
-  }
-
-  /** Clear the whole cache (restart simulation / tests). */
-  def invalidateAllTextIndexes(): Unit = {
-    txCache.clear(); txLineage.clear()
-    IndexMaint.dropGrowthLocks(_.startsWith("tx"))
-  }
-
-  /** Sweep orphaned text-index trees under `baseDir`: every tree not
-    * referenced by the live cache and older than `graceMs` is deleted
-    * (retired fingerprints otherwise strand their trees forever — the
-    * round-10 verdict's unbounded-disk item; LRU eviction shrinking the
-    * live set is what lets a long-lived server reclaim cold trees).
-    * Returns deleted paths. */
-  def textIndexGc(spark: SparkSession, baseDir: String,
-                  graceMs: Long = 3600000L): Seq[String] = {
-    val live = txCache.values.map(_.path).toSet
-    IndexMaint.gcOrphans(spark, baseDir, Seq("tx_"), live, graceMs)
-  }
+                   buckets: Int = 256): TextIndex =
+    textFamily.indexFor(corpus, corpusKey, baseDir, textCol, idCol, buckets)(
+      reopen = openIndex(corpus.sparkSession, _),
+      build = textIndexBuild(corpus, textCol, idCol, _, buckets),
+      // the segment id lets a replayed delta be skipped by the append's
+      // marker, so the sidecar N/avgdl cannot double-count (round-12 ADVICE)
+      append = (prev, delta, segmentId) =>
+        textIndexAppend(prev, delta, textCol, segmentId))
 }

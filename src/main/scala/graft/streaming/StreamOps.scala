@@ -447,7 +447,7 @@ object StreamOps {
                        trigger: org.apache.spark.sql.streaming.Trigger =
                          org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Dedup, Similarity}
+    import graft.operators.{Dedup, IndexMaint, Similarity}
     // index handle, scoped to this query (foreachBatch runs sequentially)
     var idx: Dedup.MinHashIndex = null
     writeBatches(stream, checkpoint, trigger) { (batch, batchId) =>
@@ -485,7 +485,7 @@ object StreamOps {
           // dir would otherwise collide with an earlier query's markers and
           // silently skip genuinely new segments as "replays"; a crash
           // replay keeps its checkpoint → same id → guarded as before
-          segmentId = s"${Similarity.keyHash(checkpoint)}-b$batchId")
+          segmentId = s"${IndexMaint.keyHash(checkpoint)}-b$batchId")
       }
       if (compactFiles > 0 && idx != null &&
           graft.operators.IndexMaint.dataFileCount(spark, indexDir) > compactFiles) {
@@ -594,7 +594,7 @@ object StreamOps {
       if (compactFiles > 0 && idx != null &&
           graft.operators.IndexMaint.dataFileCount(spark, indexDir) > compactFiles) {
         log.info(s"annIngestSink: compacting index at $indexDir")
-        Similarity.lshCompact(idx)
+        Similarity.annCompact(idx, idx.path, idx.schema, "_tb")
       }
     }
   }
@@ -663,7 +663,7 @@ object StreamOps {
       if (compactFiles > 0 && idx != null &&
           graft.operators.IndexMaint.dataFileCount(spark, indexDir) > compactFiles) {
         log.info(s"semanticIngestSink: compacting index at $indexDir")
-        Similarity.ivfCompact(idx)
+        Similarity.annCompact(idx, idx.path, idx.schema, "cid")
       }
     }
   }
@@ -860,7 +860,7 @@ object StreamOps {
         // fresh-checkpoint query over the same index dir must not collide
         // with an earlier query's markers and skip genuinely new data
         else idx = TextSearch.textIndexAppend(idx, b, textCol,
-          segmentId = s"${Similarity.keyHash(checkpoint)}-b$batchId")
+          segmentId = s"${IndexMaint.keyHash(checkpoint)}-b$batchId")
       }
       // floor the threshold at the bucket count: a compacted tree holds up
       // to one file PER BUCKET, so a threshold below `buckets` would be

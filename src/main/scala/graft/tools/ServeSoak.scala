@@ -169,14 +169,17 @@ object ServeSoak {
       println(f"SERVE warmup $kind in ${(System.nanoTime() - t0) / 1e9}%.2fs")
       kind -> r
     }.toMap
-    val ivfBuilds0 = graft.operators.Similarity.ivfBuildCount.get
-    val lshBuilds0 = graft.operators.Similarity.lshBuildCount.get
-    val txBuilds0 = graft.operators.TextSearch.textBuildCount.get
+    val families = {
+      import graft.operators.{Dedup, Similarity, TextSearch}
+      Seq(Similarity.ivfFamily, Similarity.lshFamily, TextSearch.textFamily,
+        Dedup.minhashFamily)
+    }
+    val builds0 = families.map(_.builds.get)
     // growth fast-path counters: a STATIC soak corpus must never trip the
-    // append detection — any delta here means a fingerprint/lineage bug
-    val deltas0 = graft.operators.TextSearch.textDeltaAppendCount.get +
-      graft.operators.Similarity.annDeltaAppendCount.get +
-      graft.operators.Dedup.minhashDeltaAppendCount.get
+    // append detection — any delta here means a fingerprint/lineage bug.
+    // ivf and lsh share one counter: each counter counts once
+    def deltas = families.map(_.deltas).distinct.map(_.get).sum
+    val deltas0 = deltas
 
     val lat = new ConcurrentLinkedQueue[(String, Double)]()
     val mismatches = new ConcurrentLinkedQueue[String]()
@@ -210,13 +213,10 @@ object ServeSoak {
     println(s"SERVE mismatches=${mismatches.size}" +
       (if (mismatches.isEmpty) " (all responses identical to warm-up)"
        else s" FIRST=${mismatches.peek()}"))
-    println(s"SERVE extra index builds under concurrency: ivf=" +
-      s"${graft.operators.Similarity.ivfBuildCount.get - ivfBuilds0} lsh=" +
-      s"${graft.operators.Similarity.lshBuildCount.get - lshBuilds0} tx=" +
-      s"${graft.operators.TextSearch.textBuildCount.get - txBuilds0} " +
-      s"deltaAppends=${graft.operators.TextSearch.textDeltaAppendCount.get +
-        graft.operators.Similarity.annDeltaAppendCount.get +
-        graft.operators.Dedup.minhashDeltaAppendCount.get - deltas0} (want 0)")
+    println("SERVE extra index builds under concurrency: " +
+      families.zip(builds0).map { case (f, b0) =>
+        s"${f.tag}=${f.builds.get - b0}" }.mkString(" ") +
+      s" deltaAppends=${deltas - deltas0} (want 0)")
     val cachedFrames = !spark.sharedState.cacheManager.isEmpty
     val persistentRdds = spark.sparkContext.getPersistentRDDs.size
     println(s"SERVE cacheManager nonEmpty=$cachedFrames " +

@@ -315,7 +315,7 @@ class GraphQLSpec extends SparkSpec {
   test("one text tree per corpus: membership, phrase, k: and filter → k:/corpus: share one build") {
     import org.apache.spark.sql.functions.col
     import graft.operators.TextSearch
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val svc = new GraphQLService(spark, sf)
     val builds0 = TextSearch.textBuildCount.get()
     def ids(r: String): Seq[Long] = {
@@ -355,7 +355,7 @@ class GraphQLSpec extends SparkSpec {
       TextSearch.phraseIds(ref, Seq("table", "hash")).collect().map(_.getLong(0)).sorted.toSeq)
     assert(within.nonEmpty && within == rankedIds(TextSearch.rankedSearchWithin(ref,
       Seq("hash", "table"), 10, docs.filter(col("lang") === "en"), "doc_id")))
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
   }
 
   test("unknown table and field produce errors") {

@@ -310,7 +310,7 @@ class PipelineSpec extends SparkSpec {
 
     // restart simulation: cleared cache re-OPENS the on-disk index from its
     // metadata sidecar — same path, same answers, build count unchanged
-    Similarity.invalidateAllIndexes()
+    Similarity.ivfFamily.invalidateAll()
     val idx3 = Similarity.ivfIndexFor(corpus, corpusDir, "vec_id", "embedding",
       nlist = 8, baseDir)
     assert(Similarity.ivfBuildCount.get() == b0 + 1,
@@ -340,7 +340,7 @@ class PipelineSpec extends SparkSpec {
 
     // explicit invalidate drops only this corpus's entries; next request
     // re-opens from disk (no build)
-    Similarity.invalidateIndexes(corpusDir)
+    Similarity.ivfFamily.invalidate(corpusDir)
     val idx5 = Similarity.ivfIndexFor(corpus, corpusDir, "vec_id", "embedding",
       nlist = 8, baseDir)
     assert(Similarity.ivfBuildCount.get() == b0 + 2 && idx5.path == idx4.path)
@@ -350,7 +350,7 @@ class PipelineSpec extends SparkSpec {
     val lsh1 = Similarity.lshIndexFor(corpus, corpusDir, "vec_id", "embedding",
       planes = 4, dim = 64, baseDir)
     assert(Similarity.lshBuildCount.get() == l0 + 1)
-    Similarity.invalidateAllIndexes()
+    Similarity.lshFamily.invalidateAll()
     val lsh2 = Similarity.lshIndexFor(corpus, corpusDir, "vec_id", "embedding",
       planes = 4, dim = 64, baseDir)
     assert(Similarity.lshBuildCount.get() == l0 + 1 && lsh2.path == lsh1.path)
@@ -1324,9 +1324,9 @@ class PipelineSpec extends SparkSpec {
     Similarity.ivfAppend(ivf, b)
     Similarity.ivfAppend(ivf, b) // replay: duplicate rows
     val p1 = key(Similarity.ivfProbe(ivf, queries, k = 5, nprobe = 8))
-    Similarity.ivfCompact(ivf)
+    Similarity.annCompact(ivf, ivf.path, ivf.schema, "cid")
     assert(spark.read.parquet(s"$dir/ivf").count() == embs.count(),
-      "ivfCompact must fold replayed rows back to one per vector")
+      "annCompact must fold replayed IVF rows back to one per vector")
     assert(key(Similarity.ivfProbe(ivf, queries, k = 5, nprobe = 8)) == p1)
     assert(Similarity.readMeta[Similarity.IvfIndex](spark, s"$dir/ivf").nonEmpty,
       "compaction must carry the sidecar into the new tree")
@@ -1336,10 +1336,10 @@ class PipelineSpec extends SparkSpec {
     Similarity.lshAppend(lsh, b)
     Similarity.lshAppend(lsh, b)
     val l1 = key(Similarity.lshProbe(lsh, queries, k = 5))
-    Similarity.lshCompact(lsh)
+    Similarity.annCompact(lsh, lsh.path, lsh.schema, "_tb")
     assert(spark.read.parquet(s"$dir/lsh").count() ==
       spark.read.parquet(s"$dir/lsh").distinct().count(),
-      "lshCompact must drop replayed duplicate rows")
+      "annCompact must drop replayed LSH duplicate rows")
     assert(key(Similarity.lshProbe(lsh, queries, k = 5)) == l1)
     assert(Similarity.readMeta[Similarity.LshIndex](spark, s"$dir/lsh").nonEmpty)
   }
@@ -1354,7 +1354,7 @@ class PipelineSpec extends SparkSpec {
       "second request is a cache hit")
     // restart simulation: cleared in-memory cache must RE-OPEN the on-disk
     // sidecar, not rebuild
-    Dedup.invalidateAllMinhashIndexes()
+    Dedup.minhashFamily.invalidateAll()
     val i3 = Dedup.minhashIndexFor(docs, "mh-spec-corpus", "text", "doc_id", base)
     assert(Dedup.minhashBuildCount.get == before + 1,
       "re-open after cache clear must not run a build job")
@@ -1772,6 +1772,44 @@ class PipelineSpec extends SparkSpec {
       .collect()
     assert(TextAnalysis.unigramModelBuildCount.get == b0 + 4)
     TextAnalysis.invalidateUnigramModels()
+  }
+
+  test("TextAnalysis memo caches are LRU-bounded at the index cache cap") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_lw_lru").toString
+    val dim = 1 << 12
+    (1L to 30L).map(i => (i, s"good great token$i")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/docs")
+    Seq("good" -> 1.0, "great" -> 2.0, "token3" -> 3.0).toDF("tok", "weight")
+      .select(TextAnalysis.featureIdx(col("tok"), dim).as("idx"),
+        col("weight"))
+      .write.parquet(s"$dir/w")
+    val docs = spark.read.parquet(s"$dir/docs")
+    // three weight frames over ONE set of files: only the plan tells them
+    // apart, so the key must carry the plan, not just the fingerprint
+    def weights(min: Double) =
+      spark.read.parquet(s"$dir/w").filter(col("weight") > min)
+    def score(min: Double): Unit = {
+      TextAnalysis.scoreLinear(docs, "text", "doc_id", weights(min), dim,
+        bias = 0.0)
+      ()
+    }
+    TextAnalysis.invalidateUnigramModels()
+    sys.props("graft.index.cache.max") = "2"
+    try {
+      val b0 = TextAnalysis.lwBuildCount.get
+      Seq(0.0, 1.5, 2.5).foreach(score)
+      assert(TextAnalysis.lwBuildCount.get == b0 + 3)
+      assert(TextAnalysis.lwCache.size <= 2,
+        s"cache must stay at the cap, got ${TextAnalysis.lwCache.size}")
+      score(0.0) // least recently requested: evicted, recomputed once
+      assert(TextAnalysis.lwBuildCount.get == b0 + 4)
+      score(2.5) // still cached
+      assert(TextAnalysis.lwBuildCount.get == b0 + 4)
+    } finally {
+      sys.props.remove("graft.index.cache.max")
+      TextAnalysis.invalidateUnigramModels()
+    }
   }
 
   test("knnJoinLsh dim inference: empty or all-null vector column gives a named error") {

@@ -262,7 +262,7 @@ class TextSearchSpec extends SparkSpec {
     // stats and answers.
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_conc").toString
     val corpusDir = s"$dir/corpus"
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     docs.filter(col("doc_id") < 200).write.parquet(corpusDir)
     TextSearch.textIndexFor(spark.read.parquet(corpusDir), "spec/conc",
       "text", "doc_id", s"$dir/ix", buckets = 16)
@@ -343,7 +343,7 @@ class TextSearchSpec extends SparkSpec {
         probedIds(TextSearch.searchIds(mono, terms, m)),
         s"merged != monolithic at minMatch=$m")
     // the merged tree is a first-class index: sidecar re-openable
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val reopened = graft.operators.Similarity
       .readMeta[TextSearch.TextIndex](spark, merged.path)
     assert(reopened.contains(merged))
@@ -364,7 +364,7 @@ class TextSearchSpec extends SparkSpec {
     val b = TextSearch.textIndexFor(docs, "spec-docs", "text", "doc_id", dir)
     assert(b eq a)
     // restart simulation: cache cleared, sidecar re-opened — no rebuild
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val c = TextSearch.textIndexFor(docs, "spec-docs", "text", "doc_id", dir)
     assert(TextSearch.textBuildCount.get() == before + 1)
     assert(c == a)
@@ -433,7 +433,7 @@ class TextSearchSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_life2").toString
     val corpusDir = s"$dir/corpus"
     val ixDir = s"$dir/ix"
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     docs.filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(corpusDir)
     val builds0 = TextSearch.textBuildCount.get()
@@ -512,21 +512,21 @@ class TextSearchSpec extends SparkSpec {
     assert(trees().size == 2, s"expected live + orphan, got ${trees()}")
     // restart simulation: only the current corpus is re-requested, the old
     // fingerprint never resolves again → its tree is the orphan
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     TextSearch.textIndexFor(c3, "spec/growth", "text", "doc_id",
       ixDir, buckets = 16)
-    val removed = TextSearch.textIndexGc(spark, ixDir, graceMs = 0L)
+    val removed = TextSearch.textFamily.gc(spark, ixDir, graceMs = 0L)
     assert(removed.size == 1, s"GC must sweep exactly the orphan, got $removed")
     assert(trees() == Set(i3.path.split("/").last))
     // the live tree still answers after the sweep
     assert(probedIds(TextSearch.searchIds(i3, Seq("join"), 1)).nonEmpty)
     // a second sweep is a no-op
-    assert(TextSearch.textIndexGc(spark, ixDir, graceMs = 0L).isEmpty)
+    assert(TextSearch.textFamily.gc(spark, ixDir, graceMs = 0L).isEmpty)
     // path-spelling robustness: a trailing-slash (or otherwise
     // non-canonical) baseDir must still recognize the LIVE tree — string
     // comparison of s"$baseDir/$root" against the cached path would mark
     // it an orphan and delete the actively served index
-    assert(TextSearch.textIndexGc(spark, s"$ixDir/", graceMs = 0L).isEmpty,
+    assert(TextSearch.textFamily.gc(spark, s"$ixDir/", graceMs = 0L).isEmpty,
       "a trailing-slash baseDir must not orphan the live tree")
     assert(probedIds(TextSearch.searchIds(i3, Seq("join"), 1)).nonEmpty,
       "the live tree must survive a non-canonical-path sweep")
@@ -534,7 +534,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("index cache is LRU-bounded; an evicted index re-opens, never rebuilds") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_lru").toString
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     // shrink the cap live (cacheCap re-reads the property per eviction)
     val prev = sys.props.put("graft.index.cache.max", "2")
     try {
@@ -545,8 +545,8 @@ class TextSearchSpec extends SparkSpec {
         TextSearch.textIndexFor(docs, s"spec/lru-$k", "text", "doc_id",
           s"$dir/ix", buckets = 8)
       assert(TextSearch.textBuildCount.get() == builds0 + 3)
-      assert(TextSearch.textCacheSize <= 2,
-        s"cache must stay at the cap, got ${TextSearch.textCacheSize}")
+      assert(TextSearch.textFamily.size <= 2,
+        s"cache must stay at the cap, got ${TextSearch.textFamily.size}")
       assert(TextSearch.textCacheEvictions >= 1)
       // the evicted index re-opens from its sidecar: buildCount stays flat
       // (the lifecycle contract that makes eviction safe at any moment)
@@ -561,7 +561,7 @@ class TextSearchSpec extends SparkSpec {
         case Some(v) => sys.props.put("graft.index.cache.max", v)
         case None => sys.props.remove("graft.index.cache.max")
       }
-      TextSearch.invalidateAllTextIndexes()
+      TextSearch.textFamily.invalidateAll()
     }
   }
 
@@ -569,7 +569,7 @@ class TextSearchSpec extends SparkSpec {
     // more distinct filtered search(k:) plans (one logical index each) than
     // the cache holds; the GC then sweeps every evicted tree, so a replay
     // re-opens or rebuilds — and must answer exactly as the first pass
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val prev = sys.props.put("graft.index.cache.max", "2")
     try {
       val service = new graft.graphql.GraphQLService(spark, sf)
@@ -582,7 +582,7 @@ class TextSearchSpec extends SparkSpec {
       assert(first.forall(r => !r.contains("\"errors\"") && r.contains("\"doc_id\"")),
         first.head)
       assert(first.distinct.size == 4, "each residue class has its own answer")
-      assert(TextSearch.textCacheSize <= 2)
+      assert(TextSearch.textFamily.size <= 2)
       val swept = service.indexGc(graceMs = 0L)
       assert(swept.exists(_.contains("tx_")), s"the sweep took no evicted tree: $swept")
       val trees = new java.io.File(service.indexDir).list().count(_.startsWith("tx_"))
@@ -593,7 +593,7 @@ class TextSearchSpec extends SparkSpec {
         case Some(v) => sys.props.put("graft.index.cache.max", v)
         case None => sys.props.remove("graft.index.cache.max")
       }
-      TextSearch.invalidateAllTextIndexes()
+      TextSearch.textFamily.invalidateAll()
     }
   }
 
@@ -601,7 +601,7 @@ class TextSearchSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_durl").toString
     val corpusDir = s"$dir/corpus"
     val ixDir = s"$dir/ix"
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     docs.filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(corpusDir)
     val builds0 = TextSearch.textBuildCount.get()
@@ -615,7 +615,7 @@ class TextSearchSpec extends SparkSpec {
     // lineage blob survive)
     docs.filter(col("doc_id") % 2 === 1)
       .write.mode("append").parquet(corpusDir)
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val c2 = spark.read.parquet(corpusDir)
     val i2 = TextSearch.textIndexFor(c2, "spec/durable", "text", "doc_id",
       ixDir, buckets = 16)
@@ -633,7 +633,7 @@ class TextSearchSpec extends SparkSpec {
     // a SECOND restart over the grown (already-appended) corpus re-opens
     // the tree at its first generation's path via the blob — no rebuild,
     // no second delta
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val i2b = TextSearch.textIndexFor(c2, "spec/durable", "text", "doc_id",
       ixDir, buckets = 16)
     assert(TextSearch.textBuildCount.get() == builds0 + 1 &&
@@ -642,7 +642,7 @@ class TextSearchSpec extends SparkSpec {
     assert(i2b.docs == fresh.docs)
     // post-restart STALE reader then growth: the blob seeds the lineage,
     // so the stale request must NOT regress it into a double-append
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val stale = spark.read.parquet(c1.inputFiles.toSeq: _*)
     TextSearch.textIndexFor(stale, "spec/durable", "text", "doc_id",
       ixDir, buckets = 16)
@@ -656,7 +656,7 @@ class TextSearchSpec extends SparkSpec {
       s"$dir/fresh3", buckets = 16)
     assert(i3.docs == fresh3.docs && i3.totalLen == fresh3.totalLen,
       "a post-restart stale reader regressed the lineage into a double-append")
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
   }
 
   test("textIndexAppend with a deterministic segmentId skips replays") {
@@ -1022,14 +1022,14 @@ class TextSearchSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_layout").toString
     val ixDir = s"$dir/ix"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val corpus = Seq((1L, "join filter"), (2L, "hash table join")).toDF("doc_id", "text")
     // a served tree of the two-tier format: an occurrence-row sidecar schema
     // (scalar pos) and a _tf tier, at the path the tx3 key hashed to
     val twoTier = StructType(Seq(StructField("id", LongType), StructField("len", IntegerType),
       StructField("pos", IntegerType), StructField("term", StringType),
       StructField("_tb", IntegerType)))
-    val tx3 = s"$ixDir/tx_${graft.operators.Similarity.keyHash(
+    val tx3 = s"$ixDir/tx_${graft.operators.IndexMaint.keyHash(
       "tx3|spec/layout|nofiles|text|doc_id|8|true")}"
     Seq((1L, 2, 0, "join", 0)).toDF("id", "len", "pos", "term", "_tb")
       .write.partitionBy("_tb").parquet(tx3)
@@ -1044,7 +1044,7 @@ class TextSearchSpec extends SparkSpec {
     assert(served.schema("pos").dataType.isInstanceOf[ArrayType])
     assert(probedIds(TextSearch.phraseIds(served, Seq("hash", "table"))) == Set(2L))
     // the retired tree is an orphan to the sweep
-    val swept = TextSearch.textIndexGc(spark, ixDir, graceMs = 0L)
+    val swept = TextSearch.textFamily.gc(spark, ixDir, graceMs = 0L)
     assert(swept.size == 1 && swept.head.endsWith(tx3.split("/").last), swept)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(tx3)))
     assert(fs.exists(new org.apache.hadoop.fs.Path(served.path)))
@@ -1056,7 +1056,7 @@ class TextSearchSpec extends SparkSpec {
       e.getMessage
     }
     def reRequest() = {
-      TextSearch.invalidateAllTextIndexes()
+      TextSearch.textFamily.invalidateAll()
       TextSearch.textIndexFor(corpus, "spec/layout", "text", "doc_id", ixDir,
         buckets = 8)
     }
@@ -1088,7 +1088,7 @@ class TextSearchSpec extends SparkSpec {
         .map(_.getMessage).mkString(" | ")
       assert(msg.contains(served.path) && msg.contains("rebuild"), msg)
     } finally q.stop()
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
   }
 
   test("a plain tree is refused at re-open; served trees re-key through tx5 and GC sweeps the tx4 ones") {
@@ -1097,14 +1097,14 @@ class TextSearchSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tx_plain").toString
     val ixDir = s"$dir/ix"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val corpus = Seq((1L, "join filter"), (2L, "hash table join")).toDF("doc_id", "text")
     // the two served trees of the tx4 format, at the paths their keys
     // hashed to: a plain one — (id, term) rows, a sidecar schema without
     // pos — and a positional one
     val plain = StructType(Seq(StructField("id", LongType),
       StructField("term", StringType), StructField("_tb", IntegerType)))
-    def tx4(positions: Boolean) = s"$ixDir/tx_${graft.operators.Similarity.keyHash(
+    def tx4(positions: Boolean) = s"$ixDir/tx_${graft.operators.IndexMaint.keyHash(
       s"tx4|spec/plain|nofiles|text|doc_id|8|$positions")}"
     Seq((1L, "join", 0)).toDF("id", "term", "_tb").write.partitionBy("_tb")
       .parquet(tx4(false))
@@ -1123,7 +1123,7 @@ class TextSearchSpec extends SparkSpec {
     assert(TextSearch.textBuildCount.get() == builds0 + 1)
     assert(!Seq(tx4(false), tx4(true)).contains(served.path))
     // both retired trees are orphans to the sweep
-    val swept = TextSearch.textIndexGc(spark, ixDir, graceMs = 0L)
+    val swept = TextSearch.textFamily.gc(spark, ixDir, graceMs = 0L)
     assert(swept.map(_.split("/").last).toSet ==
       Set(tx4(false), tx4(true)).map(_.split("/").last), swept)
     assert(fs.exists(new org.apache.hadoop.fs.Path(served.path)))
@@ -1131,7 +1131,7 @@ class TextSearchSpec extends SparkSpec {
     // a served tree whose sidecar schema has no pos: refused at the
     // re-open, with the path and "rebuild" in the error, and not rebuilt
     graft.operators.Similarity.writeMeta(spark, served.path, served.copy(schema = plain))
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val e = intercept[IllegalStateException](request())
     assert(e.getMessage.contains(served.path) && e.getMessage.contains("rebuild") &&
       e.getMessage.contains("plain"), e.getMessage)
@@ -1153,11 +1153,11 @@ class TextSearchSpec extends SparkSpec {
         .map(_.getMessage).mkString(" | ")
       assert(msg.contains(served.path) && msg.contains("rebuild"), msg)
     } finally q.stop()
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
   }
 
   test("serve_mixed's four text request shapes take no text-cache eviction at a cap of 2 after their first pass") {
-    TextSearch.invalidateAllTextIndexes()
+    TextSearch.textFamily.invalidateAll()
     val prev = sys.props.put("graft.index.cache.max", "2")
     try {
       val service = new graft.graphql.GraphQLService(spark, sf)
@@ -1189,13 +1189,13 @@ class TextSearchSpec extends SparkSpec {
       assert(TextSearch.textCacheEvictions == evictions0,
         s"text-cache evictions after the first pass: ${TextSearch.textCacheEvictions - evictions0}")
       assert(TextSearch.textBuildCount.get() == builds0 + 2)
-      assert(TextSearch.textCacheSize == 2)
+      assert(TextSearch.textFamily.size == 2)
     } finally {
       prev match {
         case Some(v) => sys.props.put("graft.index.cache.max", v)
         case None => sys.props.remove("graft.index.cache.max")
       }
-      TextSearch.invalidateAllTextIndexes()
+      TextSearch.textFamily.invalidateAll()
     }
   }
 }
