@@ -469,12 +469,20 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
 
   /** Per-row (sim, cid) against every centroid; struct order makes
-    * array_max pick the best sim (ties → larger cid, deterministic). */
-  private def centScorer(spark: org.apache.spark.sql.SparkSession,
-                         cents: Array[(Long, Array[Float])])
-                        (vec: Column): Column = {
+    * array_max pick the best sim (ties → larger cid, deterministic). The
+    * centroid literals carry explicit types: `typedLit` would derive them
+    * through Scala reflection, whose global lock serializes concurrent
+    * requests, for the same `Literal`s. */
+  private[graft] def centScorer(spark: org.apache.spark.sql.SparkSession,
+                                cents: Array[(Long, Array[Float])])
+                               (vec: Column): Column = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.ExprBridge
+    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+    val vecType = ArrayType(FloatType, containsNull = false)
     val centArr = array(cents.map { case (cid, cv) =>
-      struct(typedLit(cid).as("cid"), typedLit(cv).as("cv")) }: _*)
+      struct(ExprBridge.column(Literal.create(cid, LongType)).as("cid"),
+        ExprBridge.column(Literal.create(cv, vecType)).as("cv")) }: _*)
     transform(centArr, c => struct(
       cosineFast(spark)(vec, c.getField("cv")).as("sim"),
       c.getField("cid").as("cid")))

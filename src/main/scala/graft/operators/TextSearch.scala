@@ -369,6 +369,8 @@ object TextSearch {
           StructType(Seq(org.apache.spark.sql.types.StructField("id", idType))))
       case Some(rows) =>
         rows.select("id", "term").filter(col("term").isin(norm: _*))
+          // one exchange on id feeds both halves of the distinct count
+          .repartition(col("id"))
           // rows may hold replay duplicates between compactions: count
           // DISTINCT terms, never rows
           .groupBy("id").agg(countDistinct(col("term")).as("_gq_nt"))
@@ -467,10 +469,12 @@ object TextSearch {
     // rather than erroring, like every other probe on an empty index
     if (index.docs == 0L) return emptyOut
     // doc-level (id, term, _tf, _len) rows; max collapses the rows a
-    // replayed segment repeats
+    // replayed segment repeats. One exchange on id feeds this aggregate and
+    // the per-doc one below (the build's perTermDoc does the same on _tb).
     val tfAll = IndexMaint.readPartitions(spark, index.path, index.schema,
         "_tb", tbs)
       .map(_.filter(col("term").isin(norm: _*))
+        .repartition(col("id"))
         .groupBy("id", "term")
         .agg(max(col("tf")).cast("long").as("_tf"), max(col("len")).as("_len")))
       .getOrElse(return emptyOut)
@@ -528,25 +532,25 @@ object TextSearch {
     // pruneMinRows, and that sum is at most min(docs·|terms|, totalLen)
     // (a term's df ≤ docs; each (term, doc) pair is ≥ 1 token). Below that
     // bound — or past the k-row driver-collect limit — pruning cannot
-    // apply, so nothing is collected: df comes from a per-term count over
-    // the per-doc rows, and its idf map is broadcast back into the same
-    // plan. The count reads the per-doc shuffle the scoring side reads (a
-    // reused exchange); counting over tfAll instead would not be reused,
-    // because column pruning strips its unused tf/len aggregates and so
-    // makes it a different plan. The bound only picks a path: both paths
-    // return the same exact answer. The bar is an explicit parameter
-    // (specs/probes lower it), NOT session conf — the round-10
-    // slice-densify rule: a shared-session knob mutated for one query is
-    // observed by every concurrent query.
+    // apply, so nothing is collected: df comes from one global aggregate
+    // over the per-doc rows (a conditional count per query term), and its
+    // idf map is broadcast back into the same plan. The aggregate reads the
+    // id shuffle the scoring side reads (a reused exchange); counting over
+    // tfAll instead would not be reused, because column pruning strips its
+    // unused tf/len aggregates and so makes it a different plan. The bound
+    // only picks a path: both paths return the same exact answer. The bar
+    // is an explicit parameter (specs/probes lower it), NOT session conf —
+    // the round-10 slice-densify rule: a shared-session knob mutated for
+    // one query is observed by every concurrent query.
     val pruneCannotApply = k > 10000 ||
       math.min(index.docs.toDouble * norm.size, index.totalLen.toDouble) <
         pruneMinRows
     if (pruneCannotApply) {
-      val idfMap = perDocAll
-        .select(explode(col("_l").getField("term")).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("_df"))
-        .agg(map_from_entries(collect_list(struct(col("term"),
-          idf(col("_df"))))).as("_gq_idf"))
+      val dfs = norm.zipWithIndex.map { case (t, i) =>
+        sum(when(array_contains(col("_l").getField("term"), t), 1)).as(s"_gq_df$i") }
+      val idfMap = perDocAll.agg(dfs.head, dfs.tail: _*)
+        .select(map(norm.zipWithIndex.flatMap { case (t, i) =>
+          Seq(lit(t), idf(col(s"_gq_df$i"))) }: _*).as("_gq_idf"))
       return scored(perDoc.crossJoin(broadcast(idfMap)),
         t => element_at(col("_gq_idf"), t))
     }
@@ -632,7 +636,8 @@ object TextSearch {
                          k1: Double = 1.2, b: Double = 0.75,
                          pruneMinRows: Long = 500000L): DataFrame = {
     require(k > 0, "rankedSearchWithin needs k > 0")
-    val ids = within.select(col(idCol).as("_gq_wid")).distinct()
+    // a left-semi join ignores duplicate restriction ids
+    val ids = within.select(col(idCol).as("_gq_wid"))
     rankedSearchImpl(index, terms, k, k1, b, pruneMinRows, Some(ids))
   }
 

@@ -206,34 +206,38 @@ class GraphQLSpec extends SparkSpec {
 
   test("served execution budget: the serve_mixed request shapes on a warm index") {
     // one Spark execution per served leaf selection; ann_ivf's second is
-    // ivfProbe's collect of the probed centroid ids
+    // ivfProbe's collect of the probed centroid ids. Jobs (broadcast and
+    // AQE stage jobs included) pin the plan shape: an ordered root's row id
+    // is a projection, not a broadcast join, and a text probe shuffles its
+    // term rows once, on id
     val shapes = Seq(
-      ("agg", 1, """{ lineitem { group(by: ["l_returnflag"], counts: "n",
+      ("agg", 1, 4, """{ lineitem { group(by: ["l_returnflag"], counts: "n",
         aggregate: {sum: [{name: "l_quantity", alias: "qty"}]}) {
         o: order(by: ["l_returnflag"]) { columns { l_returnflag { values } n { values } qty { values } } } } } }"""),
-      ("filter", 1, """{ orders { filter(o_totalprice: {ge: 100000.0}) { count } } }"""),
-      ("search", 1, """{ documents { s: search(terms: ["join", "filter"], on: "text",
+      ("filter", 1, 2, """{ orders { filter(o_totalprice: {ge: 100000.0}) { count } } }"""),
+      ("search", 1, 4, """{ documents { s: search(terms: ["join", "filter"], on: "text",
         id: "doc_id") { count } } }"""),
-      ("bm25", 1, """{ documents { s: search(terms: ["join", "filter"], on: "text",
+      ("bm25", 1, 7, """{ documents { s: search(terms: ["join", "filter"], on: "text",
         id: "doc_id", k: 20) { o: order(by: ["rank"]) { columns { doc_id { values } rank { values } } } } } }"""),
-      ("bm25filt", 1, """{ documents { f: filter(lang: {eq: "en"}) { s: search(terms: ["hash", "table"],
+      ("bm25filt", 1, 9, """{ documents { f: filter(lang: {eq: "en"}) { s: search(terms: ["hash", "table"],
         on: "text", id: "doc_id", k: 20, corpus: "documents") { o: order(by: ["rank"]) {
         columns { doc_id { values } rank { values } } } } } } }"""),
-      ("ann_ivf", 2, """{ embeddings { nearest(on: "embedding", id: "vec_id", ids: [0, 1, 2], k: 5,
+      ("ann_ivf", 2, 8, """{ embeddings { nearest(on: "embedding", id: "vec_id", ids: [0, 1, 2], k: 5,
         method: "IVF", nlist: 16, nprobe: 6) { o: order(by: ["query_id", "rank"]) {
         columns { query_id { values } neighbor_id { values } rank { values } } } } } }"""),
-      ("leaf", 1, """{ lineitem { s: slice(offset: 0, limit: 20000) { columns {
+      ("leaf", 1, 3, """{ lineitem { s: slice(offset: 0, limit: 20000) { columns {
         l_orderkey { values } l_extendedprice { values } l_shipdate { values } } } } }"""),
-      ("cold", 1, """{ documents { m: project(columns: [{alias: "m", mod: [{name: "doc_id"}, {value: 1}]}]) {
+      ("cold", 1, 7, """{ documents { m: project(columns: [{alias: "m", mod: [{name: "doc_id"}, {value: 1}]}]) {
         f: filter(m: {eq: 0}) { s: search(terms: ["join", "filter"], on: "text",
         id: "doc_id", k: 10) { o: order(by: ["rank"]) {
         columns { doc_id { values } rank { values } } } } } } } }"""))
     // warm: index builds and root row ids are paid once, not per request
-    shapes.foreach { case (_, _, q) => service.execute(q) }
-    val got = shapes.map { case (kind, _, q) =>
-      kind -> org.apache.spark.sql.graft.Executions.count(spark) { service.execute(q); () } }
-    assert(got == shapes.map { case (kind, n, _) => kind -> n },
-      s"SQL executions per request: $got")
+    shapes.foreach { case (_, _, _, q) => service.execute(q) }
+    import org.apache.spark.sql.graft.Executions
+    val got = shapes.map { case (kind, _, _, q) =>
+      kind -> Executions.counts(spark) { service.execute(q); () } }
+    assert(got == shapes.map { case (kind, n, jobs, _) => kind -> Executions.Counts(n, jobs) },
+      s"(SQL executions, jobs) per request: $got")
   }
 
   test("cap drops surface in response extensions; clean requests omit them") {

@@ -87,6 +87,46 @@ class PlanGuardSpec extends SparkSpec {
     assert(arrayLits(lit) >= 1, "small-nlist literal arm disappeared")
   }
 
+  test("literal-arm centroids are explicitly typed literals, equal to typedLit's") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.functions.{array, col, struct, typedLit}
+    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+    val cents = Array((7L, Array(0.5f, -1.0f, 2.0f)), (11L, Array(1.0f, 0.0f, 3.25f)))
+    val v = spark.range(1).select(typedLit(Array(1.0f, 2.0f, 3.0f)).as("v"))
+    def lits(c: org.apache.spark.sql.Column): Seq[Literal] =
+      v.select(c).queryExecution.analyzed.expressions
+        .flatMap(_.collect { case l: Literal => l })
+        .filter(l => l.dataType == LongType || l.dataType.isInstanceOf[ArrayType])
+    val got = lits(graft.operators.Similarity.centScorer(spark, cents)(col("v")))
+    assert(got.map(_.dataType) == Seq(LongType, ArrayType(FloatType, containsNull = false),
+      LongType, ArrayType(FloatType, containsNull = false)), got)
+    // the reflective form builds the very same literals
+    val reflective = lits(array(cents.map { case (cid, cv) =>
+      struct(typedLit(cid).as("cid"), typedLit(cv).as("cv")) }.toIndexedSeq: _*))
+    assert(got == reflective)
+  }
+
+  test("an ordered root's filter -> count plans no broadcast and no join") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val orders = graft.core.Tables.loadOrdered(spark, sf, "orders")
+    val df = orders.filter(org.apache.spark.sql.functions.col("o_totalprice") >= 100000.0)
+      .groupBy().count()
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(Plans.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+    assert(Plans.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    // the row id is pruned: the scan reads the filter column alone. (Spark
+    // still generates the parquet row index, `_tmp_metadata_row_index`,
+    // for any relation whose output holds `_metadata`, read or not.)
+    val scans = Plans.collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.map(_.requiredSchema.fieldNames.toSeq
+        .filterNot(_.startsWith("_tmp_metadata_"))) == Seq(Seq("o_totalprice")),
+      scans.map(_.requiredSchema))
+  }
+
   test("knnJoin plan shapes: brute broadcasts ONLY the hinted corpus; LSH/IVF joins shuffle, never broadcast a table side") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,

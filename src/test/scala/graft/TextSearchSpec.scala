@@ -893,14 +893,18 @@ class TextSearchSpec extends SparkSpec {
       case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
       case _ => Set.empty
     }
-    // one (id, term) exchange: the per-term df count reads the scoring
-    // side's per-doc shuffle (and everything below it) through a reuse,
-    // rather than scanning and shuffling the probed buckets a second time
-    val idTerm = Plans.collect(plan) {
-      case e: ShuffleExchangeExec if hashOn(e) == Set("id", "term") => e }
+    // one hash exchange, on id, under the (id, term) max and the per-doc
+    // collect: the df aggregate reads it (and everything below it) through
+    // a reuse, rather than scanning and shuffling the probed buckets a
+    // second time
+    val hashed = Plans.collect(plan) {
+      case e: ShuffleExchangeExec if hashOn(e).nonEmpty => e }
     val reused = Plans.collect(plan) { case e: ReusedExchangeExec => e.child }
       .collect { case e: ShuffleExchangeExec => hashOn(e) }
-    assert(idTerm.size == 1, s"(id, term) exchanges: ${idTerm.size}\n$plan")
+    assert(hashed.map(hashOn) == Seq(Set("id")), s"hash exchanges:\n$plan")
+    assert(Plans.collect(hashed.head) {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a }.isEmpty,
+      s"the id exchange must sit below every aggregate:\n$plan")
     assert(reused == Seq(Set("id")), s"reused exchanges: $reused\n$plan")
   }
 
